@@ -1,14 +1,33 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DateType, DoubleType, FloatType,
-  LongType, TimestampNTZType, TimestampType}
+  LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Canonical loaders for the driver-provided parquet tables
   * (see TESTDATA.md). All engine queries read through here so that
-  * scan-level concerns (the nanos-timestamp workaround, column pruning)
-  * live in one place.
+  * scan-level concerns (schema resolution, the type contracts, column
+  * pruning) live in one place.
+  *
+  * Schema memo: inferring a parquet schema runs one Spark job over the
+  * file footers, so [[table]] infers each path's schema once and reads
+  * every later call with that schema supplied (no job). The memo holds
+  * the `StructType` only, never a `DataFrame` (a shared frame would share
+  * attribute ids between two reads of one table and break self-joins).
+  * Its key is everything inference reads: the path; each leaf data
+  * file's path, length and modification time (directories listed
+  * recursively, skipping `_`/`.` names as Spark does, so rewriting a
+  * table in place re-infers); and the session's parquet-inference
+  * settings ([[inferenceConfs]]). One entry per path, replaced when the
+  * key changes. The [[conform]] contracts run on every call.
+  *
+  * `ts` in events may be parquet TIMESTAMP(NANOS), which Spark cannot
+  * represent; [[GraftSession]] sets `nanosAsLong` so it loads as
+  * epoch-nanos long. Loaders never set session state themselves.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,13 +35,50 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(s: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // When the producer writes ts as parquet TIMESTAMP(NANOS) — which
-      // Spark cannot represent — read it as epoch-nanos long (exact,
-      // matches DuckDB epoch_ns(ts)). Harmless for micros/millis files.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val path = s"$dir/$name.parquet"
+    conform(name, s.read.schema(schemaOf(s, path)).parquet(path))
+  }
+
+  /** Session settings parquet schema inference depends on. */
+  private val inferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive")
+
+  private final case class SchemaKey(
+      files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val schemas = new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  private def schemaOf(s: SparkSession, path: String): StructType = {
+    val key = SchemaKey(leafFiles(s, path), inferenceConfs.map(s.conf.getOption))
+    Option(schemas.get(path)) match {
+      case Some((k, schema)) if k == key => schema
+      case _ =>
+        val schema = s.read.parquet(path).schema
+        schemas.put(path, (key, schema))
+        schema
     }
-    conform(name, s.read.parquet(s"$dir/$name.parquet"))
+  }
+
+  /** (path, length, mtime) of every data file under `path`, sorted;
+    * empty when the path does not exist (the read then fails as usual). */
+  private def leafFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def hidden(f: FileStatus) = {
+      val n = f.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    def walk(f: FileStatus): Seq[FileStatus] =
+      if (f.isDirectory) fs.listStatus(f.getPath).toSeq.filterNot(hidden).flatMap(walk)
+      else Seq(f)
+    if (!fs.exists(p)) Nil
+    else walk(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
   }
 
   /** Columns the ENGINE imposes a canonical logical type on — every
@@ -182,7 +238,9 @@ object Tables {
 
 /** One SparkSession factory so every entry point (tests, Bench, Verify)
   * gets identical tuning: AQE on, shuffle partitions sized for the local
-  * core count (never the 200 default), UTC session time zone.
+  * core count (never the 200 default), UTC session time zone, parquet
+  * TIMESTAMP(NANOS) read as epoch-nanos long. Verify passes its own
+  * shuffle-partition count (one per core); everything else is shared.
   */
 object GraftSession {
   def build(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",

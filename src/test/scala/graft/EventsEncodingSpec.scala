@@ -54,12 +54,13 @@ class EventsEncodingSpec extends AnyFunSuite with SparkSpec {
     assert(drainStream(dir) === wantNanos)
   }
 
+  private def ntzWant = java.time.LocalDateTime.ofEpochSecond(
+    wantMicros / 1000000L, (wantMicros % 1000000L).toInt * 1000,
+    java.time.ZoneOffset.UTC)
+
   test("TIMESTAMP_NTZ micros encoding is rescaled to canonical epoch-nanos") {
     val dir = tmp()
-    writeEvents(dir, TimestampNTZType,
-      java.time.LocalDateTime.ofEpochSecond(
-        wantMicros / 1000000L, (wantMicros % 1000000L).toInt * 1000,
-        java.time.ZoneOffset.UTC))
+    writeEvents(dir, TimestampNTZType, ntzWant)
     val batch = Tables.events(spark, dir)
     assert(batch.schema("ts").dataType === LongType)
     assert(batch.select("ts").head().getLong(0) === wantNanos)
@@ -78,12 +79,29 @@ class EventsEncodingSpec extends AnyFunSuite with SparkSpec {
     assert(drainStream(dir) === wantNanos)
   }
 
+  test("regenerating events.parquet in place with another ts encoding re-resolves its schema") {
+    val dir = tmp()
+    writeEvents(dir, LongType, wantNanos)
+    assert(Tables.events(spark, dir).select("ts").head().getLong(0) === wantNanos)
+    writeEvents(dir, TimestampNTZType, ntzWant)
+    assert(Tables.events(spark, dir).select("ts").head().getLong(0) === wantNanos)
+  }
+
+  test("loading events leaves the session's nanosAsLong setting alone") {
+    val dir = tmp()
+    writeEvents(dir, LongType, wantNanos)
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "false")
+      Tables.table(spark, dir, "events")
+      assert(spark.conf.get(key) === "false")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("NTZ canonicalization is session-timezone independent") {
     val dir = tmp()
-    writeEvents(dir, TimestampNTZType,
-      java.time.LocalDateTime.ofEpochSecond(
-        wantMicros / 1000000L, (wantMicros % 1000000L).toInt * 1000,
-        java.time.ZoneOffset.UTC))
+    writeEvents(dir, TimestampNTZType, ntzWant)
     val tzKey = "spark.sql.session.timeZone"
     val prev = spark.conf.get(tzKey)
     try {

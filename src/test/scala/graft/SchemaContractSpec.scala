@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,10 +32,56 @@ class SchemaContractSpec extends AnyFunSuite with SparkSpec {
       .repartition(1).write.mode("overwrite").parquet(s"$dir/orders.parquet")
   }
 
+  private def ntzOrderDate = java.time.LocalDateTime.ofEpochSecond(
+    instantMicros / 1000000L, 0, java.time.ZoneOffset.UTC)
+
+  /** Runs `body` under a fresh job group and returns its result with the
+    * number of Spark jobs it started. Listener events arrive
+    * asynchronously but in order, so a sentinel job run afterwards marks
+    * the point by which every job of `body` has been seen. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val group = s"jobs_${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener never saw the sentinel job")
+      (out, seen.toArray.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("Tables.table infers a fresh file's schema with at most one job, then reuses it with none") {
+    val dir = tmp(); writeOrders(dir, TimestampNTZType, ntzOrderDate)
+    val (first, firstJobs) = jobsDuring(Tables.orders(spark, dir).schema)
+    val (second, secondJobs) = jobsDuring(Tables.orders(spark, dir).schema)
+    assert(firstJobs <= 1, s"first read started $firstJobs jobs")
+    assert(secondJobs === 0, s"repeat read of an unchanged file started $secondJobs jobs")
+    assert(first === second)
+  }
+
+  test("regenerating orders.parquet without a contracted column at the same path fails naming it") {
+    val dir = tmp(); writeOrders(dir, TimestampNTZType, ntzOrderDate)
+    assert(Tables.orders(spark, dir).columns.contains("o_orderdate"))
+    spark.range(1).toDF("o_orderkey")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val err = intercept[IllegalArgumentException](Tables.orders(spark, dir))
+    assert(err.getMessage.contains("o_orderdate"))
+  }
+
   test("orders.o_orderdate: NTZ passes through; LTZ converts to the same UTC wall clock") {
-    val ntzVal = java.time.LocalDateTime.ofEpochSecond(
-      instantMicros / 1000000L, 0, java.time.ZoneOffset.UTC)
-    val d1 = tmp(); writeOrders(d1, TimestampNTZType, ntzVal)
+    val d1 = tmp(); writeOrders(d1, TimestampNTZType, ntzOrderDate)
     val viaNtz = Tables.orders(spark, d1)
     assert(viaNtz.schema("o_orderdate").dataType === TimestampNTZType)
 
