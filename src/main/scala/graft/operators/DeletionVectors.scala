@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.{Files, Path}
 
+import graft.sources.VersionedWriteIo
+
 /** Merge-on-read DELETION VECTORS for the version store — the sidecar
   * format + lifecycle helpers behind `deletionVectors=true` tables.
   *
@@ -116,19 +118,13 @@ object DeletionVectors {
 
   def hasDvs(vdir: Path): Boolean = dvMap(vdir).nonEmpty
 
-  private def linkOrCopy(src: Path, tgt: Path): Unit = {
-    Files.createDirectories(tgt.getParent)
-    try Files.createLink(tgt, src)
-    catch { case _: UnsupportedOperationException => Files.copy(src, tgt) }
-  }
-
   /** Carry EVERY sidecar of `srcVdir` into `stagedVdir` (restore/clone
     * paths — the file set transfers unchanged, so the DVs must too).
     * Returns the carried sidecar names for the staged manifest. */
   def carryAll(srcVdir: Path, stagedVdir: Path): Seq[String] =
     dvMap(srcVdir).values.map { src =>
       val name = src.getFileName.toString
-      linkOrCopy(src, dvDir(stagedVdir).resolve(name))
+      VersionedWriteIo.linkOrCopy(src, dvDir(stagedVdir).resolve(name))
       name
     }.toSeq
 
@@ -140,7 +136,7 @@ object DeletionVectors {
     dvMap(srcVdir).collect {
       case (dataName, src) if carriedDataNames(dataName) =>
         val name = src.getFileName.toString
-        linkOrCopy(src, dvDir(stagedVdir).resolve(name))
+        VersionedWriteIo.linkOrCopy(src, dvDir(stagedVdir).resolve(name))
         name
     }.toSeq
 

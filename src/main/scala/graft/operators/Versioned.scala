@@ -6,6 +6,8 @@ import java.util.Comparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.VersionedWriteIo
+
 /** Versioned dataset storage + ops parity (SURVEY.md §2.1 S13/S14, §2.5
   * O3, §5 inline guards) — the Spark-side equivalent of the reference's
   * MinIO last-data/old-data swap (price_prediction_data_pipeline.py:
@@ -91,10 +93,10 @@ object Versioned {
   private[graft] def listVersionsPosix(root: String): Seq[Long] =
     versionDirs(root).map(_._1)
 
-  /** Stamp an already-committed version (the DSv2 writer commits the
-    * data by atomic rename FIRST, then stamps — the same torn-write
-    * ordering as [[writeNext]], so [[readAsOf]]'s unstamped-skip rule
-    * covers a crash between the two). Every `CheckpointInterval`-th
+  /** Stamp an already-committed version (every commit stamps AFTER
+    * its publish — [[graft.sources.VersionedWriteIo.commit]]'s tail —
+    * so [[readAsOf]]'s unstamped-skip rule covers a crash between the
+    * two). Every `CheckpointInterval`-th
     * stamped commit also refreshes the aggregated commit-log
     * checkpoint (best-effort — it is an accelerator, never truth).
     *
@@ -133,25 +135,18 @@ object Versioned {
     * directory mtimes would drift across copies/restores. `layout`
     * applies writer-side clustering + file-size targets
     * ([[Layout.WriteSpec]]) so the version's row-group stats prune for
-    * readers filtering on the sort key. */
+    * readers filtering on the sort key. The job writes into a
+    * `_staging_*` dir that the shared commit routine publishes as the
+    * next version (a failed job or a lost claim never leaves a `v=N`
+    * behind; a racing writer pushes this one to the version after). */
   def writeNext(df: DataFrame, root: String, commitTs: Option[Long] = None,
                 layout: Layout.WriteSpec = Layout.WriteSpec()): Long = {
-    // writer gate BEFORE any bytes land: writeNext writes v=N directly
-    // (no staging), so the manifest-time funnel check would fire after
-    // the data — too late to keep a half-created version dir off disk
-    checkWriteProtocol(root)
-    val next = latestVersion(root).map(_ + 1).getOrElse(0L)
-    Layout.applySpec(df, layout).write
-      .options(Layout.writerOptions(layout))
-      .mode("overwrite").parquet(s"$root/v=$next")
-    // ONE listing at commit time buys manifest-resolved reads forever
-    val vdir = Paths.get(root, s"v=$next")
-    writeFilesManifest(vdir, listParquet(vdir).map(_.getFileName.toString))
-    writeLatestHint(root, next)
-    commitTs.foreach(writeStamp(root, next, _))
-    BloomSidecar.ensure(root, next) // no-op unless bloomFilterColumns set
-    NdvSidecar.ensure(root, next)
-    next
+    val staged = Paths.get(root, s"_staging_write_${java.util.UUID.randomUUID}")
+    try Layout.applySpec(df, layout).write
+      .options(Layout.writerOptions(layout)).parquet(staged.toString)
+    catch { case e: Throwable => deleteRecursively(staged); throw e }
+    VersionedWriteIo.commit(root, staged, commitTs)(
+      _ => VersionedWriteIo.Carry())
   }
 
   private val CommitManifest = "_graft_commit"
@@ -213,7 +208,7 @@ object Versioned {
     CommitInfo(commitStamp(root, v), op, files.size,
       files.map(Files.size(_)).sum, dvs.size,
       dvs.values.map(DeletionVectors.cardinality).sum,
-      graft.sources.VersionedWriteIo.commitMessage(root, v),
+      VersionedWriteIo.commitMessage(root, v),
       Files.exists(Paths.get(feedDir(root, v))))
   }
 
@@ -317,8 +312,8 @@ object Versioned {
     * path, utils_of_backup.py:75-103, would reset them).
     *
     * Unstamped versions are SKIPPED, not fatal: an unstamped version is
-    * what a writer crash between the parquet write and the manifest
-    * write leaves behind (writeNext commits them in that order), and a
+    * what a writer crash between the publish and the stamp leaves
+    * behind (every commit stamps after publish), and a
     * single torn write must not poison time travel for every timestamp
     * on the root — older stamped versions stay resolvable. Only when NO
     * stamped version exists does readAsOf fail loudly. */
@@ -734,7 +729,7 @@ object Versioned {
       else live.coalesce(nFiles)
     val staged = Files.createTempDirectory(Paths.get(root), "_staging_binpack_")
     rewritten.write.mode("overwrite").parquet(staged.toString)
-    graft.sources.VersionedWriteIo.commitRowLevel(root, staged,
+    VersionedWriteIo.commitRowLevel(root, staged,
       org.apache.spark.sql.types.StructType(rewritten.schema.fields), v, names,
       stamp.getOrElse(System.currentTimeMillis() * 1000L))
   }
@@ -930,9 +925,10 @@ object Versioned {
   private[graft] def writeFilesManifest(vdir: Path, dataNames: Seq[String],
                                         dvNames: Seq[String] = Seq.empty,
                                         statsFrom: Option[Path] = None): Unit = {
-    // EVERY commit path funnels through this manifest write (direct
-    // v=N writes, staged publishes, restore/clone/convert, the DSv2
-    // commit loops) — so this is where the writer-feature gate runs:
+    // EVERY commit funnels through this manifest write (the one
+    // commit routine, VersionedWriteIo.commit, writes it into the
+    // staging dir before each claim) — so this is where the
+    // writer-feature gate runs:
     // a table whose invariants this build cannot maintain refuses the
     // commit before anything becomes visible
     checkWriteProtocol(vdir.getParent.toString)
@@ -954,7 +950,7 @@ object Versioned {
     // DV sidecars change what a correct read IS — flag the requirement
     // before the manifest (= the commit's visibility point) exists.
     // Staging dirs live inside the table root, so the parent is the
-    // root on every call path (direct v=N writes and staged publishes).
+    // root on every batch call path.
     // Writers need the flag too: a DV-blind build appending to (or
     // compacting) this table would drop or resurrect the DV'd rows.
     if (dvNames.nonEmpty) {
@@ -1183,34 +1179,15 @@ object Versioned {
     require(Files.isDirectory(src),
       s"restoreTo: version $version does not exist under $root " +
         s"(existing: ${versions(root).mkString(", ")})")
-    val cur = latestVersion(root).get
     val staged = Files.createTempDirectory(Paths.get(root), "_staging_restore_")
-    dataFiles(src).foreach { f =>
-      val tgt = staged.resolve(f.getFileName)
-      try Files.createLink(tgt, f)
-      catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-    }
     // hard-links keep file names, so the restored manifest lists the
-    // same names the source manifest did (plus its DV sidecars, below)
-    writeFilesManifest(staged,
-      listParquet(staged).map(_.getFileName.toString),
-      DeletionVectors.carryAll(src, staged), statsFrom = Some(src))
-    val next = cur + 1
-    try Files.move(staged, Paths.get(root, s"v=$next"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: java.nio.file.FileSystemException =>
-        deleteRecursively(staged)
-        throw new IllegalStateException(
-          s"restoreTo: concurrent commit under $root — retry", e)
+    // same names the source manifest did (plus its DV sidecars); a
+    // racing commit only moves the restore to the version after it
+    VersionedWriteIo.commit(root, staged,
+        Some(VersionedWriteIo.stampValue(commitTs)), Some(src)) { _ =>
+      VersionedWriteIo.Carry(dataFiles(src),
+        DeletionVectors.carryAll(src, staged), Some(src))
     }
-    writeLatestHint(root, next)
-    writeStamp(root, next,
-      commitTs.getOrElse(System.currentTimeMillis() * 1000L))
-    // restored files are hard links of src's — their bloom lines carry
-    BloomSidecar.ensure(root, next, carryExtra = Some(src))
-    NdvSidecar.ensure(root, next, carryExtra = Some(src))
-    next
   }
 
   /** SHALLOW CLONE: materialize a snapshot of `srcRoot` (the CURRENT
@@ -1232,39 +1209,25 @@ object Versioned {
     val srcV = srcVersion.orElse(latestVersion(srcRoot))
       .getOrElse(throw new IllegalStateException(
         s"cloneTo: no versions under $srcRoot"))
-    require(!Files.exists(Paths.get(dstRoot, "v=0")),
-      s"cloneTo: destination $dstRoot already has versions")
-    val dst = Paths.get(dstRoot, "v=0")
-    Files.createDirectories(dst.getParent)
-    val staged = Files.createTempDirectory(dst.getParent, "_staging_clone_")
-    dataFiles(Paths.get(srcRoot, s"v=$srcV")).foreach { f =>
-      val tgt = staged.resolve(f.getFileName)
-      try Files.createLink(tgt, f)
-      catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
+    val src = Paths.get(srcRoot, s"v=$srcV")
+    val dst = Paths.get(dstRoot)
+    Files.createDirectories(dst)
+    val staged = Files.createTempDirectory(dst, "_staging_clone_")
+    VersionedWriteIo.commit(dstRoot, staged,
+        Some(VersionedWriteIo.stampValue(commitTs)), Some(src)) { base =>
+      require(base.isEmpty, s"cloneTo: destination $dstRoot already has versions")
+      // the clone inherits every protocol requirement of the source —
+      // shared immutable files mean shared representation (and shared
+      // invariants on the writer side). Inherited BEFORE the manifest
+      // funnel runs: the funnel consults the DESTINATION's features to
+      // decide which sidecars to carry (a row-tracking clone must carry
+      // the source's row-id entries into its v=0, or `_row_id` reads on
+      // the clone would refuse)
+      readerFeatures(srcRoot).foreach(requireReaderFeature(dst, _))
+      writerFeatures(srcRoot).foreach(requireWriterFeature(dst, _))
+      VersionedWriteIo.Carry(dataFiles(src),
+        DeletionVectors.carryAll(src, staged), Some(src))
     }
-    // the clone inherits every protocol requirement of the source —
-    // shared immutable files mean shared representation (and shared
-    // invariants on the writer side). Inherited BEFORE the manifest
-    // funnel runs: the funnel consults the DESTINATION's features to
-    // decide which sidecars to carry (a row-tracking clone must carry
-    // the source's row-id entries into its v=0, or `_row_id` reads on
-    // the clone would refuse)
-    readerFeatures(srcRoot).foreach(
-      requireReaderFeature(Paths.get(dstRoot), _))
-    writerFeatures(srcRoot).foreach(
-      requireWriterFeature(Paths.get(dstRoot), _))
-    writeFilesManifest(staged,
-      listParquet(staged).map(_.getFileName.toString),
-      DeletionVectors.carryAll(Paths.get(srcRoot, s"v=$srcV"), staged),
-      statsFrom = Some(Paths.get(srcRoot, s"v=$srcV")))
-    Files.move(staged, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    writeLatestHint(dstRoot, 0L)
-    writeStamp(dstRoot, 0L,
-      commitTs.getOrElse(System.currentTimeMillis() * 1000L))
-    // the clone shares the source's immutable files — bloom lines carry
-    BloomSidecar.ensure(dstRoot, 0L,
-      carryExtra = Some(Paths.get(srcRoot, s"v=$srcV")))
-    NdvSidecar.ensure(dstRoot, 0L, carryExtra = Some(Paths.get(srcRoot, s"v=$srcV")))
   }
 
   /** CONVERT-in-place (Delta's `CONVERT TO DELTA` shape): register an
@@ -1274,16 +1237,16 @@ object Versioned {
     * analog of an object-store metadata pointer; a cross-device source
     * falls back to a copy rather than failing the onboarding), the
     * commit manifest + stats sidecar derive from footers alone, and one
-    * atomic rename publishes. At 100 TB this is the difference between
+    * claim publishes. At 100 TB this is the difference between
     * onboarding a lake in footer-read time and re-writing every byte
     * through a cluster.
     *
-    * `validateFile` runs per source file BEFORE it is linked — the
-    * caller's chance to refuse files whose footer schema the table
+    * `validateFile` runs per source file BEFORE anything is staged —
+    * the caller's chance to refuse files whose footer schema the table
     * contract cannot read ([[graft.sources.GraftCatalog]]'s convert
     * procedure passes a MessageType compatibility check). Any failure
-    * aborts the staging dir: conversion is all-or-nothing, and the
-    * source directory is never touched. */
+    * aborts: conversion is all-or-nothing, and the source directory is
+    * never touched. */
   def convertFrom(srcDir: String, dstRoot: String,
                   validateFile: Path => Unit = _ => (),
                   commitTs: Option[Long] = None): Long = {
@@ -1293,35 +1256,19 @@ object Versioned {
     val files = listParquet(src).sortBy(_.getFileName.toString)
     require(files.nonEmpty,
       s"convertFrom: no *.parquet files under $srcDir — nothing to convert")
-    require(latestVersion(dstRoot).isEmpty,
-      s"convertFrom: destination $dstRoot already has versions")
-    val dst = Paths.get(dstRoot, "v=0")
-    Files.createDirectories(dst.getParent)
-    val staged = Files.createTempDirectory(dst.getParent, "_staging_convert_")
-    try {
-      // validation (a footer read each) and linking are independent
-      // per file and latency-bound — run them in parallel so a
-      // 100k-file onboarding is bounded by pool width, not file count
-      import FileStats.ParMap
-      files.toArray.par { f =>
-        validateFile(f)
-        val tgt = staged.resolve(f.getFileName)
-        try Files.createLink(tgt, f)
-        catch {
-          case _: UnsupportedOperationException |
-               _: java.nio.file.FileSystemException => Files.copy(f, tgt)
-        }
-      }
-      writeFilesManifest(staged, files.map(_.getFileName.toString))
-      // the publish move stays INSIDE the try: a concurrent convert
-      // that already created v=0 fails it, and the staging dir full of
-      // hard links must not leak under the destination root
-      Files.move(staged, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case e: Throwable => deleteRecursively(staged); throw e }
-    writeLatestHint(dstRoot, 0L)
-    writeStamp(dstRoot, 0L,
-      commitTs.getOrElse(System.currentTimeMillis() * 1000L))
-    0L
+    // validation (a footer read each) is independent per file and
+    // latency-bound — run it in parallel so a 100k-file onboarding is
+    // bounded by pool width, not file count
+    import FileStats.ParMap
+    files.toArray.par(validateFile)
+    val dst = Paths.get(dstRoot)
+    Files.createDirectories(dst)
+    val staged = Files.createTempDirectory(dst, "_staging_convert_")
+    VersionedWriteIo.commit(dstRoot, staged,
+        Some(VersionedWriteIo.stampValue(commitTs))) { base =>
+      require(base.isEmpty, s"convertFrom: destination $dstRoot already has versions")
+      VersionedWriteIo.Carry(files)
+    }
   }
 
   /** METADATA INTEGRITY CHECK (`CALL sys.fsck`) — walk every version's

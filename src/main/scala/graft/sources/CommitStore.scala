@@ -26,10 +26,11 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * a store whose [[CommitStore.publishVersion]] claims the version
   * through a conditional put / coordinator (the S3+DynamoDB LogStore
   * answer, or S3's If-None-Match conditional PUT) and moves the data
-  * non-atomically AFTER the claim — the commit loops in
-  * [[VersionedWriteIo]] only require the CLAIM to be atomic and
-  * fail-closed, never the data movement ([[CommitStoreSpec]] proves
-  * serialization under exactly such a store). Install via
+  * non-atomically AFTER the claim — the one commit routine,
+  * [[VersionedWriteIo.commit]], which every versioned write goes
+  * through, only requires the CLAIM to be atomic and fail-closed,
+  * never the data movement ([[CommitStoreSpec]] proves serialization
+  * under exactly such a store). Install via
   * [[CommitStore.withStore]] (scoped) or [[CommitStore.install]]
   * (process-wide, at session bring-up).
   */
@@ -106,7 +107,7 @@ object PosixCommitStore extends CommitStore {
 object CommitStore {
   @volatile private var current: CommitStore = PosixCommitStore
 
-  /** The process-wide store every commit path routes through. */
+  /** The process-wide store the commit routine claims through. */
   def active: CommitStore = current
 
   /** Process-wide install (deployment bring-up). */

@@ -4303,14 +4303,6 @@ private[graft] object VersionedWriteIo {
   def commitDelta(root: String, staged: Path, scannedVersion: Long,
                   stamp: Long): Long = {
     import graft.operators.DeletionVectors
-    def conflict(why: String): Nothing = {
-      Versioned.deleteRecursively(staged)
-      throw new IllegalStateException(
-        s"graft-versioned: concurrent commit under $root during a " +
-          s"merge-on-read mutation (scanned v=$scannedVersion, latest is " +
-          s"v=${Versioned.latestVersion(root).getOrElse(-1L)}; $why) — " +
-          "retry the statement against current data")
-    }
     // merge the per-task fragments: data file name → new positions
     val fragBase = staged.resolve(FragDir)
     val newPos: Map[String, Array[Long]] =
@@ -4334,37 +4326,15 @@ private[graft] object VersionedWriteIo {
       }
     Versioned.deleteRecursively(fragBase)
     val touched = newPos.keySet
-    var attempt = 0
-    var linked: Seq[Path] = Nil
-    var linkedDvs: Seq[Path] = Nil
-    while (attempt < 20) {
-      val base = Versioned.latestVersion(root).getOrElse(
-        conflict("no versions left"))
-      if (base != scannedVersion) {
-        ((scannedVersion + 1) to base).foreach { v =>
-          rowLevelReplaced(root, v) match {
-            case None => conflict(s"v=$v is not a row-level commit")
-            case Some(replaced) =>
-              val overlap = replaced.intersect(touched)
-              if (overlap.nonEmpty)
-                conflict(s"v=$v also touched ${overlap.mkString(", ")}")
-          }
-        }
-      }
+    commit(root, staged, Some(stamp)) { latest =>
+      val base = rebaseOnto(root, latest, scannedVersion, touched,
+        "a merge-on-read mutation", "touched")
       val baseDir = Paths.get(root, s"v=$base")
-      linked.foreach(Files.deleteIfExists(_))
-      linkedDvs.foreach(Files.deleteIfExists(_))
       val baseFiles = Versioned.dataFiles(baseDir)
       val missing = touched -- baseFiles.map(_.getFileName.toString).toSet
       if (missing.nonEmpty)
-        conflict(s"deltas target files no longer present: ${missing.mkString(", ")}")
-      // every base file carries over untouched (nothing is replaced)
-      linked = baseFiles.map { f =>
-        val tgt = staged.resolve(f.getFileName.toString)
-        try Files.createLink(tgt, f)
-        catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-        tgt
-      }
+        throw rowLevelConflict(root, scannedVersion, "a merge-on-read mutation",
+          s"deltas target files no longer present: ${missing.mkString(", ")}")
       // sidecars: base DVs ∪ this commit's fragments, per file
       val baseDvs = DeletionVectors.dvMap(baseDir)
       val dvNames = baseFiles.flatMap { f =>
@@ -4380,24 +4350,10 @@ private[graft] object VersionedWriteIo {
           n + DeletionVectors.Suffix
         }
       }
-      linkedDvs = dvNames.map(DeletionVectors.dvDir(staged).resolve(_))
       writeRowLevelMarker(staged, touched)
-      Versioned.writeFilesManifest(staged,
-        Versioned.listParquet(staged).map(_.getFileName.toString), dvNames,
-        statsFrom = Some(baseDir))
-      val next = base + 1
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
-        Versioned.writeLatestHint(root, next)
-        Versioned.writeStamp(root, next, stamp)
-        // bloom sidecar (no-op unless configured): carried files reuse
-        // their lines from the base version, new files get one build scan
-        graft.operators.BloomSidecar.ensure(root, next)
-        graft.operators.NdvSidecar.ensure(root, next)
-        return next
-      }
-      attempt += 1 // v=next claimed concurrently — re-check and rebase
+      // every base file carries over untouched (nothing is replaced)
+      Carry(baseFiles, dvNames, Some(baseDir))
     }
-    conflict("20 rebase attempts exhausted")
   }
 
   /** MERGE-ON-READ DELETE: commit a new version whose data files are
@@ -4496,83 +4452,63 @@ private[graft] object VersionedWriteIo {
   def commitRowLevel(root: String, staged: Path, schema: StructType,
                      scannedVersion: Long, scannedNames: Set[String],
                      stamp: Long): Long = {
-    def conflict(why: String): Nothing = {
-      Versioned.deleteRecursively(staged)
-      throw new IllegalStateException(
-        s"graft-versioned: concurrent commit under $root during a " +
-          s"row-level operation (scanned v=$scannedVersion, latest is " +
-          s"v=${Versioned.latestVersion(root).getOrElse(-1L)}; $why) — " +
-          "retry the statement against current data")
-    }
     GraftVersionedTable.recordVariantCols(root, schema)
     // the staged output (the replacement rows) is fixed; the base we
     // rebase onto may advance while we retry against racing committers
-    var attempt = 0
-    var carried: Seq[Path] = Nil
-    var carriedDvs: Seq[Path] = Nil
-    while (attempt < 20) {
-      val base = Versioned.latestVersion(root).getOrElse(
-        conflict("no versions left"))
-      if (base != scannedVersion) {
-        // rebase eligibility: every commit in (scanned, base] must be a
-        // row-level commit whose replaced set is disjoint from ours
-        ((scannedVersion + 1) to base).foreach { v =>
-          rowLevelReplaced(root, v) match {
-            case None => conflict(s"v=$v is not a row-level commit")
-            case Some(replaced) =>
-              val overlap = replaced.intersect(scannedNames)
-              if (overlap.nonEmpty)
-                conflict(s"v=$v also replaced ${overlap.mkString(", ")}")
-          }
-        }
-      }
+    commit(root, staged, Some(stamp)) { latest =>
+      val base = rebaseOnto(root, latest, scannedVersion, scannedNames,
+        "a row-level operation", "replaced")
       val baseDir = Paths.get(root, s"v=$base")
-      // (re)link the carry-over against the CURRENT base: everything
-      // the base holds except the files we are replacing
-      carried.foreach(Files.deleteIfExists(_))
-      carriedDvs.foreach(Files.deleteIfExists(_))
+      // carry-over against the CURRENT base: everything the base holds
+      // except the files we are replacing
       val carryOver = Versioned.dataFiles(baseDir)
         .filterNot(f => scannedNames(f.getFileName.toString))
-      carried = carryOver.map { f =>
-        val tgt = staged.resolve(f.getFileName.toString)
-        try Files.createLink(tgt, f)
-        catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-        tgt
-      }
       val dvNames = graft.operators.DeletionVectors.carryFor(
         baseDir, staged, carryOver.map(_.getFileName.toString).toSet)
-      carriedDvs = dvNames.map(
-        graft.operators.DeletionVectors.dvDir(staged).resolve(_))
       // a fully-pruned no-op still commits a readable version; the
       // schema needs a carrier only when nothing else survived
-      if (Versioned.listParquet(staged).isEmpty)
+      if (carryOver.isEmpty && Versioned.listParquet(staged).isEmpty)
         GroupParquetWriterFactory(schema, staged.toString)
           .emptyFile(uniqueEmptyName())
       writeRowLevelMarker(staged, scannedNames)
-      Versioned.writeFilesManifest(staged,
-        Versioned.listParquet(staged).map(_.getFileName.toString), dvNames,
-        statsFrom = Some(baseDir))
-      val next = base + 1
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
-        Versioned.writeLatestHint(root, next)
-        Versioned.writeStamp(root, next, stamp)
-        // bloom sidecar (no-op unless configured): carried files reuse
-        // their lines from the base version, new files get one build scan
-        graft.operators.BloomSidecar.ensure(root, next)
-        graft.operators.NdvSidecar.ensure(root, next)
-        return next
-      }
-      attempt += 1 // v=next claimed concurrently — re-check and rebase
+      Carry(carryOver, dvNames, Some(baseDir))
     }
-    conflict("20 rebase attempts exhausted")
   }
 
-  /** Publish a staged directory as the next version. Optimistic
-    * concurrency: compute `next`, link the previous version's files in
-    * (append mode), atomically rename; if another writer claimed
-    * `v=next` first, the rename fails, the stale links are replaced
-    * against the NEW latest, and the commit retries — serialized
-    * multi-writer appends without a lock service, bounded and loud. */
+  private def rowLevelConflict(root: String, scannedVersion: Long,
+                               what: String, why: String) =
+    new IllegalStateException(
+      s"graft-versioned: concurrent commit under $root during $what " +
+        s"(scanned v=$scannedVersion, latest is " +
+        s"v=${Versioned.latestVersion(root).getOrElse(-1L)}; $why) — " +
+        "retry the statement against current data")
+
+  /** Rebase eligibility of a row-level or delta commit that scanned
+    * `scannedVersion`: every commit in (scanned, latest] must be a
+    * row-level commit whose replaced set is disjoint from `touched`.
+    * Returns the base to commit onto; throws the conflict otherwise. */
+  private def rebaseOnto(root: String, latest: Option[Long],
+                         scannedVersion: Long, touched: Set[String],
+                         what: String, verb: String): Long = {
+    val base = latest.getOrElse(
+      throw rowLevelConflict(root, scannedVersion, what, "no versions left"))
+    ((scannedVersion + 1) to base).foreach { v =>
+      rowLevelReplaced(root, v) match {
+        case None => throw rowLevelConflict(root, scannedVersion, what,
+          s"v=$v is not a row-level commit")
+        case Some(replaced) =>
+          val overlap = replaced.intersect(touched)
+          if (overlap.nonEmpty)
+            throw rowLevelConflict(root, scannedVersion, what,
+              s"v=$v also $verb ${overlap.mkString(", ")}")
+      }
+    }
+    base
+  }
+
+  /** Publish a staged directory as the next version: append mode
+    * carries the previous version's files (and their DV sidecars) in,
+    * overwrite mode carries nothing. Concurrency is [[commit]]'s. */
   def commitStaged(root: String, staged: Path, schema: StructType,
                    appendPrev: Boolean, stamp: Long,
                    epochTag: Option[String]): Long = {
@@ -4586,52 +4522,85 @@ private[graft] object VersionedWriteIo {
       Files.write(staged.resolve("_graft_epoch"),
         t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    var attempt = 0
-    var prevLinked: Seq[Path] = Nil
-    var prevDvLinked: Seq[Path] = Nil
-    while (attempt < 20) {
-      val prev = Versioned.latestVersion(root)
-      val next = prev.map(_ + 1).getOrElse(0L)
-      var dvNames: Seq[String] = Nil
-      if (appendPrev) {
-        prevLinked.foreach(Files.deleteIfExists(_))
-        prevDvLinked.foreach(Files.deleteIfExists(_))
-        prevLinked = prev.toSeq.flatMap { p =>
-          // SAME names: file names are unique at creation (UUID'd) and
-          // immutable across commits — identity the conflict checker,
-          // DV sidecars, and carry-over logic all key on
-          Versioned.dataFiles(Paths.get(root, s"v=$p")).map { f =>
-            val tgt = staged.resolve(f.getFileName.toString)
-            try Files.createLink(tgt, f)
-            catch { case _: UnsupportedOperationException => Files.copy(f, tgt) }
-            tgt
-          }
-        }
-        // append keeps every previous file, so every previous DV rides
-        // along — dropping one would resurrect its deleted rows
-        dvNames = prev.toSeq.flatMap(p =>
-          graft.operators.DeletionVectors.carryAll(
-            Paths.get(root, s"v=$p"), staged))
-        prevDvLinked = dvNames.map(
-          graft.operators.DeletionVectors.dvDir(staged).resolve(_))
-      }
-      Versioned.writeFilesManifest(staged,
-        Versioned.listParquet(staged).map(_.getFileName.toString), dvNames,
-        statsFrom = prev.map(p => Paths.get(root, s"v=$p")))
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) {
-        Versioned.writeLatestHint(root, next)
-        Versioned.writeStamp(root, next, stamp)
-        // bloom sidecar (no-op unless configured): carried files reuse
-        // their lines from the base version, new files get one build scan
-        graft.operators.BloomSidecar.ensure(root, next)
-        graft.operators.NdvSidecar.ensure(root, next)
-        return next
-      }
-      attempt += 1 // v=next was claimed concurrently — recompute
+    commit(root, staged, Some(stamp)) { latest =>
+      val prevDir = latest.map(p => Paths.get(root, s"v=$p"))
+      // append keeps every previous file under its SAME name (names are
+      // unique at creation and immutable across commits — the identity
+      // conflict checks, DV sidecars and carry-over key on) and every
+      // previous DV — dropping one would resurrect its deleted rows
+      if (appendPrev)
+        Carry(prevDir.toSeq.flatMap(Versioned.dataFiles),
+          prevDir.toSeq.flatMap(
+            graft.operators.DeletionVectors.carryAll(_, staged)), prevDir)
+      else Carry(statsFrom = prevDir)
     }
-    throw new IllegalStateException(
-      s"graft-versioned: could not commit under $root after 20 attempts — " +
-        "either extreme write contention or the root is not writable")
+  }
+
+  /** What one commit attempt carries into the staged output from its
+    * base version: data files to hard-link in under their own names,
+    * the DV sidecar names already placed under the staged `_dv` dir,
+    * and the version dir whose stats lines carry for linked files. */
+  case class Carry(files: Seq[Path] = Nil, dvNames: Seq[String] = Nil,
+                   statsFrom: Option[Path] = None)
+
+  /** Hard-link `src` as `tgt` (creating `tgt`'s parent), copying when
+    * the filesystem has no links or `src` is on another device. */
+  def linkOrCopy(src: Path, tgt: Path): Unit = {
+    Files.createDirectories(tgt.getParent)
+    try Files.createLink(tgt, src)
+    catch {
+      case _: UnsupportedOperationException |
+           _: java.nio.file.FileSystemException => Files.copy(src, tgt)
+    }
+  }
+
+  /** THE commit routine of the versioned store — every write stages,
+    * claims through [[CommitStore.publishVersion]], then publishes
+    * (Delta's put-if-absent LogStore contract). `staged` holds the
+    * write's own output. Each attempt drops the previous attempt's
+    * carried links, hands the latest committed version (None on an
+    * empty root) to `carry` — which returns what to carry from it, or
+    * throws when the write cannot rebase onto it — links the files,
+    * writes the manifest and claims `v=base+1`; a lost claim retries
+    * against the new latest. The winner gets the post-publish tail:
+    * latest hint, the optional stamp (stamped AFTER publish, so a crash
+    * between the two leaves an unstamped version that time travel
+    * skips), and the bloom/ndv sidecars (`carryExtra` names one more
+    * version dir whose sidecar lines carry). Any failure before the
+    * publish deletes the staging dir. Returns the committed version. */
+  def commit(root: String, staged: Path, stamp: Option[Long] = None,
+             carryExtra: Option[Path] = None)(
+      carry: Option[Long] => Carry): Long = {
+    val dvDir = graft.operators.DeletionVectors.dvDir(staged)
+    @scala.annotation.tailrec
+    def attempt(n: Int, prev: Carry): Long = {
+      if (n == 20)
+        throw new IllegalStateException(
+          s"graft-versioned: could not commit under $root after 20 " +
+            "attempts — either extreme write contention or the root is " +
+            "not writable")
+      prev.files.foreach(f => Files.deleteIfExists(staged.resolve(f.getFileName.toString)))
+      prev.dvNames.foreach(d => Files.deleteIfExists(dvDir.resolve(d)))
+      val base = Versioned.latestVersion(root)
+      val c = carry(base)
+      c.files.foreach(f => linkOrCopy(f, staged.resolve(f.getFileName.toString)))
+      Versioned.writeFilesManifest(staged,
+        Versioned.listParquet(staged).map(_.getFileName.toString), c.dvNames,
+        c.statsFrom)
+      val next = base.fold(0L)(_ + 1)
+      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) next
+      else attempt(n + 1, c)
+    }
+    val next =
+      try attempt(0, Carry())
+      catch { case e: Throwable => Versioned.deleteRecursively(staged); throw e }
+    Versioned.writeLatestHint(root, next)
+    stamp.foreach(Versioned.writeStamp(root, next, _))
+    // no-ops unless configured: carried files reuse their lines from the
+    // base version (and carryExtra), new files get one build scan
+    graft.operators.BloomSidecar.ensure(root, next, carryExtra)
+    graft.operators.NdvSidecar.ensure(root, next, carryExtra)
+    next
   }
 }
 

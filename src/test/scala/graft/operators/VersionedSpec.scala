@@ -26,6 +26,20 @@ class VersionedSpec extends AnyFunSuite with SparkSpec {
     assert(Versioned.read(spark, root).select("v").as[String].collect().toSeq === Seq("a"))
   }
 
+  test("a writeNext whose job fails partway leaves the root as it was") {
+    val root = tmpRoot()
+    Versioned.writeNext(Seq((1L, "a")).toDF("id", "v"), root)
+    val boom = udf((i: Long) =>
+      if (i == 7L) throw new IllegalStateException("planted task failure") else i)
+    intercept[Exception](Versioned.writeNext(
+      spark.range(0, 20, 1, 4).select(boom($"id").as("id"), lit("b").as("v")),
+      root))
+    assert(Versioned.latestVersion(root) === Some(0L))
+    assert(Versioned.read(spark, root).select("v").as[String].collect().toSeq === Seq("a"))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "v=1")))
+    assert(Versioned.fsck(root).contains((-1L, "staging-leftovers", 0L, "")))
+  }
+
   test("retention keeps newest 3 (utils_of_backup.py:155-164)") {
     val root = tmpRoot()
     (0 until 5).foreach(i => Versioned.writeNext(Seq(i).toDF("x"), root))

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,12 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
 import graft.operators.Versioned
 
-/** The commit-atomicity seam: the optimistic claim loops must
+/** The commit-atomicity seam: the one commit routine must
   * serialize through ANY [[CommitStore]] whose version claim is
   * fail-closed — including an object-store-shaped one whose "rename"
   * is copy+delete (non-atomic data movement) and whose claims
-  * spuriously fail (a racing conditional put). The POSIX default's
-  * put-if-absent contract is pinned directly. */
+  * spuriously fail (a racing conditional put) — for every writer, the
+  * path API's included ([[ObjectStoreSim]], [[RaceOnFirstClaim]]). The
+  * POSIX default's put-if-absent contract is pinned directly. */
 class CommitStoreSpec extends AnyFunSuite with SparkSpec {
 
   import spark.implicits._
@@ -23,71 +24,6 @@ class CommitStoreSpec extends AnyFunSuite with SparkSpec {
 
   private def rows(d: DataFrame): Seq[String] =
     d.collect().map(_.toString).sorted.toSeq
-
-  /** Object-store emulation (the S3+coordinator shape): the version
-    * CLAIM is a putIfAbsent on a concurrent map (the conditional put /
-    * DynamoDB LogStore entry — the only atomic primitive assumed), the
-    * data then moves by per-file COPY + DELETE — deliberately not a
-    * rename, and deliberately after the claim. `spuriousLosses` makes
-    * the first N claims report "lost" even when free, forcing the
-    * callers' rebase loops to run. */
-  private final class ObjectStoreSim(spuriousLosses: Int) extends CommitStore {
-    val claims = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-    // a version is COMMITTED when its copy finished — the claim record,
-    // not the directory listing, is the log (the seam's list contract)
-    val completed = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-    private val spurious =
-      new java.util.concurrent.atomic.AtomicInteger(spuriousLosses)
-    val lostClaims = new java.util.concurrent.atomic.AtomicInteger(0)
-
-    private def key(root: Path, version: Long): String =
-      root.resolve(s"v=$version").toString
-
-    override def publishVersion(root: Path, staged: Path,
-                                version: Long): Boolean = {
-      if (spurious.getAndUpdate(x => math.max(0, x - 1)) > 0) {
-        lostClaims.incrementAndGet()
-        return false
-      }
-      val target = root.resolve(s"v=$version")
-      val won = Files.notExists(target) &&
-        claims.putIfAbsent(key(root, version), true) == null
-      if (!won) { lostClaims.incrementAndGet(); return false }
-      // non-atomic data movement AFTER the atomic claim: copy the
-      // staged tree file by file, then delete the staging dir; a
-      // racing lister must not see this half-copied dir as committed
-      Files.createDirectories(target)
-      val stream = Files.walk(staged)
-      try {
-        val it = stream.iterator()
-        while (it.hasNext) {
-          val p = it.next()
-          val rel = staged.relativize(p)
-          if (Files.isDirectory(p)) {
-            if (rel.toString.nonEmpty)
-              Files.createDirectories(target.resolve(rel.toString))
-          } else Files.copy(p, target.resolve(rel.toString))
-        }
-      } finally stream.close()
-      Versioned.deleteRecursively(staged)
-      completed.put(key(root, version), true)
-      true
-    }
-
-    override def publishFile(target: Path, bytes: Array[Byte]): Unit =
-      PosixCommitStore.publishFile(target, bytes)
-
-    // the log: every directory the sim didn't claim (pre-existing
-    // history) plus claims whose copy COMPLETED — never an in-flight one
-    override def listVersions(root: Path): Seq[Long] =
-      PosixCommitStore.listVersions(root).filter { v =>
-        val k = key(root, v)
-        !claims.containsKey(k) || completed.containsKey(k)
-      }
-
-    override def latestVersion(root: Path): Option[Long] =
-      listVersions(root).lastOption
-  }
 
   test("PosixCommitStore.publishVersion is put-if-absent: an existing " +
       "version loses the claim and the staging dir survives for rebase") {
@@ -174,5 +110,55 @@ class CommitStoreSpec extends AnyFunSuite with SparkSpec {
       assert(rows(Versioned.read(spark, root)) === rows(df((2L, 20L, "b"))))
       assert(Versioned.versions(root) === Seq(0L, 1L, 2L))
     }
+  }
+
+  test("writeNext claims through the store: the loser of a race with " +
+      "another writeNext rebases onto the next version") {
+    val root = Files.createTempDirectory("cs_wn_race_").toString
+    Versioned.writeNext(df((0L, 0L, "base")), root)
+    val race = new RaceOnFirstClaim(CommitStore.active,
+      () => Versioned.writeNext(df((1L, 10L, "rival")), root))
+    val v = CommitStore.withStore(race)(
+      Versioned.writeNext(df((2L, 20L, "mine")), root))
+    assert(race.fired, "writeNext must claim its version through the CommitStore")
+    assert(v === 2L)
+    assert(Versioned.versions(root) === Seq(0L, 1L, 2L))
+    assert(rows(Versioned.read(spark, root, Some(1L))) === rows(df((1L, 10L, "rival"))))
+    assert(rows(Versioned.read(spark, root, Some(2L))) === rows(df((2L, 20L, "mine"))))
+    assert(Versioned.fsck(root).contains((-1L, "staging-leftovers", 0L, "")))
+  }
+
+  test("restore, clone and convert publish through the store's claim: " +
+      "a lost claim rebases (restore) or retries (clone, convert)") {
+    val root = Files.createTempDirectory("cs_rcc_").toString
+    Versioned.writeNext(df((1L, 10L, "v0")), root)
+    Versioned.writeNext(df((2L, 20L, "v1")), root)
+    // restore's first claim loses to a rival append AND a spurious loss:
+    // it rebases onto the rival's version instead of failing
+    val sim = new ObjectStoreSim(spuriousLosses = 1)
+    val race = new RaceOnFirstClaim(sim,
+      () => Versioned.writeNext(df((3L, 30L, "rival")), root))
+    val restored = CommitStore.withStore(race)(Versioned.restoreTo(root, 0L))
+    assert(restored === 3L)
+    assert(sim.published(Paths.get(root), 3L))
+    assert(rows(Versioned.read(spark, root, Some(2L))) === rows(df((3L, 30L, "rival"))))
+    assert(rows(Versioned.read(spark, root)) === rows(df((1L, 10L, "v0"))))
+    // clone and convert claim v=0 through the sim, retrying past a
+    // spurious loss each
+    val base = Files.createTempDirectory("cs_rcc_dst_")
+    val clone = base.resolve("clone").toString
+    val conv = base.resolve("conv").toString
+    val srcDir = base.resolve("plain").toString
+    df((4L, 40L, "plain")).write.parquet(srcDir)
+    val sim2 = new ObjectStoreSim(spuriousLosses = 1)
+    CommitStore.withStore(sim2)(Versioned.cloneTo(root, clone, srcVersion = Some(1L)))
+    val sim3 = new ObjectStoreSim(spuriousLosses = 1)
+    assert(CommitStore.withStore(sim3)(Versioned.convertFrom(srcDir, conv)) === 0L)
+    assert(sim2.published(Paths.get(clone), 0L) && sim2.lostClaims.get() === 1)
+    assert(sim3.published(Paths.get(conv), 0L) && sim3.lostClaims.get() === 1)
+    assert(rows(Versioned.read(spark, clone)) === rows(df((2L, 20L, "v1"))))
+    assert(rows(Versioned.read(spark, conv)) === rows(df((4L, 40L, "plain"))))
+    Seq(root, clone, conv).foreach(r =>
+      assert(Versioned.fsck(r).contains((-1L, "staging-leftovers", 0L, "")), r))
   }
 }

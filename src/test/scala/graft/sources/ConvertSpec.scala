@@ -123,10 +123,15 @@ class ConvertSpec extends AnyFunSuite with SparkSpec {
   test("INT96 timestamps are refused by name (this reader cannot decode them)") {
     import spark.implicits._
     val src = freshSrc()
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    // restore the session's own setting afterwards: unset would fall
+    // back to Spark's INT96 default, not the session's MICROS pin, and
+    // leak INT96 timestamps into every later suite in this JVM
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
     try Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("id", "ts").write.parquet(src.toString)
-    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    finally spark.conf.set(key, prev)
     val e = intercept[Exception](spark.sql(
       s"CALL cvt.sys.convert(source_dir => '$src', target => 'ns.c6')"))
     assert(e.getMessage.contains("ts"), e.getMessage)
@@ -142,6 +147,26 @@ class ConvertSpec extends AnyFunSuite with SparkSpec {
     spark.sql("CREATE TABLE cvt.ns.c8 (id BIGINT) USING `graft-versioned`")
     intercept[Exception](spark.sql(
       s"CALL cvt.sys.convert(source_dir => '$src', target => 'ns.c8')"))
+    assert(Versioned.fsck(s"$warehouse/ns/c8").contains((-1L, "staging-leftovers", 0L, "")))
+    // a direct convert into a root that already has versions refuses
+    // (under an object-store claim log too) and leaves nothing staged
+    val versioned = Files.createTempDirectory("cvt_versioned_").toString
+    Versioned.writeNext(spark.range(3).toDF("id"), versioned)
+    val existingErr = CommitStore.withStore(new ObjectStoreSim(spuriousLosses = 1))(
+      intercept[Exception](Versioned.convertFrom(src.toString, versioned)))
+    assert(existingErr.getMessage.contains("already has versions"), existingErr.getMessage)
+    assert(Versioned.fsck(versioned).contains((-1L, "staging-leftovers", 0L, "")))
+    // ... and when a rival writer claims v=0 while the convert stages
+    val raced = Files.createTempDirectory("cvt_raced_").toString
+    val sim = new ObjectStoreSim(spuriousLosses = 1)
+    val race = new RaceOnFirstClaim(sim,
+      () => Versioned.writeNext(spark.range(5).toDF("id"), raced))
+    val racedErr = CommitStore.withStore(race)(
+      intercept[Exception](Versioned.convertFrom(src.toString, raced)))
+    assert(racedErr.getMessage.contains("already has versions"), racedErr.getMessage)
+    assert(sim.published(Paths.get(raced), 0L))
+    assert(Versioned.versions(raced) === Seq(0L))
+    assert(Versioned.fsck(raced).contains((-1L, "staging-leftovers", 0L, "")))
     val e3 = intercept[Exception](spark.sql(
       s"CALL cvt.sys.convert(source_dir => '$src', target => 'nodots')"))
     assert(e3.getMessage.contains("ns.table"), e3.getMessage)
