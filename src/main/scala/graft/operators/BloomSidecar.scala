@@ -138,9 +138,10 @@ object BloomSidecar {
   /** Post-commit hook, called by every path that publishes a version:
     * no-op unless the root's `bloomFilterColumns` property is set.
     * Carries lines for manifest files already covered by the previous
-    * surviving version (or `carryExtra` — restore/clone sources),
-    * builds filters for the rest with ONE distributed scan of those
-    * files' bloom columns, and atomically publishes the sidecar.
+    * surviving version (or `carryExtra` — the commit's stats source,
+    * e.g. a restore/clone source), builds filters for the rest with
+    * ONE distributed scan of those files' bloom columns, and atomically
+    * publishes the sidecar.
     * Without an active SparkSession only the carry half runs — the
     * missing lines cost pruning, never correctness. */
   def ensure(root: String, version: Long,
@@ -171,7 +172,7 @@ object BloomSidecar {
     val prev = Versioned.versions(root).filter(_ < version).lastOption
       .map(p => Paths.get(root, s"v=$p"))
     val carried: Map[(String, String), String] =
-      (prev.toSeq ++ carryExtra.toSeq).map(rawLines)
+      (prev.toSeq ++ carryExtra.toSeq).distinct.map(rawLines)
         .foldLeft(Map.empty[(String, String), String])(_ ++ _)
     def linesOf(name: String): Option[Seq[String]] = {
       val ls = cols.flatMap(c => carried.get((name, c)))

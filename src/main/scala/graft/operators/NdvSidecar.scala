@@ -150,8 +150,8 @@ object NdvSidecar {
   /** Post-commit hook, called by every path that publishes a version:
     * no-op unless the root's `ndvColumns` property is set. Carried
     * lines for files already covered by the previous surviving
-    * version (or `carryExtra` — restore/clone sources); one
-    * distributed scan sketches the rest. Failure never fails the
+    * version (or `carryExtra` — the commit's stats source, e.g. a
+    * restore/clone source); one distributed scan sketches the rest. Failure never fails the
     * already-committed write — absence only costs estimation. */
   def ensure(root: String, version: Long,
              carryExtra: Option[Path] = None): Unit =
@@ -176,7 +176,7 @@ object NdvSidecar {
     val prev = Versioned.versions(root).filter(_ < version).lastOption
       .map(p => Paths.get(root, s"v=$p"))
     val carried: Map[(String, String), String] =
-      (prev.toSeq ++ carryExtra.toSeq).map(rawLines)
+      (prev.toSeq ++ carryExtra.toSeq).distinct.map(rawLines)
         .foldLeft(Map.empty[(String, String), String])(_ ++ _)
     def linesOf(name: String): Option[Seq[String]] = {
       val ls = cols.flatMap(c => carried.get((name, c)))

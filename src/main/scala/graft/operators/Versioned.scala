@@ -140,13 +140,35 @@ object Versioned {
     * next version (a failed job or a lost claim never leaves a `v=N`
     * behind; a racing writer pushes this one to the version after). */
   def writeNext(df: DataFrame, root: String, commitTs: Option[Long] = None,
-                layout: Layout.WriteSpec = Layout.WriteSpec()): Long = {
+                layout: Layout.WriteSpec = Layout.WriteSpec()): Long =
+    stageAndCommit(df, root, commitTs, layout)(_ => ())
+
+  /** [[writeNext]] for a read-modify-write: `df` derives from
+    * v=`scanned`, so a commit that landed since (rows `df` never saw)
+    * fails this write loudly instead of being silently replaced. */
+  private[graft] def writeOver(df: DataFrame, root: String, scanned: Long,
+                               what: String,
+                               commitTs: Option[Long] = None): Long =
+    stageAndCommit(df, root, commitTs, Layout.WriteSpec()) { base =>
+      if (!base.contains(scanned))
+        throw VersionedWriteIo.concurrentCommit(root, scanned, what,
+          "it rewrote an older version")
+    }
+
+  private def stageAndCommit(df: DataFrame, root: String,
+                             commitTs: Option[Long], layout: Layout.WriteSpec)(
+      checkBase: Option[Long] => Unit): Long = {
+    // writer gate BEFORE the job: the manifest-time funnel check would
+    // refuse the write only after the whole job had run
+    checkWriteProtocol(root)
     val staged = Paths.get(root, s"_staging_write_${java.util.UUID.randomUUID}")
     try Layout.applySpec(df, layout).write
       .options(Layout.writerOptions(layout)).parquet(staged.toString)
     catch { case e: Throwable => deleteRecursively(staged); throw e }
-    VersionedWriteIo.commit(root, staged, commitTs)(
-      _ => VersionedWriteIo.Carry())
+    VersionedWriteIo.commit(root, staged, commitTs) { base =>
+      checkBase(base)
+      VersionedWriteIo.Carry()
+    }
   }
 
   private val CommitManifest = "_graft_commit"
@@ -422,7 +444,8 @@ object Versioned {
           .sortWithinPartitions(clusterBy.map(col): _*)
       else if (nFiles < df.rdd.getNumPartitions) df.coalesce(nFiles)
       else df
-    writeNext(compacted, root, stamp)
+    // reusing v's stamp is only sound while v is still the latest
+    writeOver(compacted, root, v, "compaction", stamp)
   }
 
   /** INCREMENTAL compaction — rewrite only the current version's data
@@ -1184,7 +1207,7 @@ object Versioned {
     // same names the source manifest did (plus its DV sidecars); a
     // racing commit only moves the restore to the version after it
     VersionedWriteIo.commit(root, staged,
-        Some(VersionedWriteIo.stampValue(commitTs)), Some(src)) { _ =>
+        Some(VersionedWriteIo.stampValue(commitTs))) { _ =>
       VersionedWriteIo.Carry(dataFiles(src),
         DeletionVectors.carryAll(src, staged), Some(src))
     }
@@ -1214,7 +1237,7 @@ object Versioned {
     Files.createDirectories(dst)
     val staged = Files.createTempDirectory(dst, "_staging_clone_")
     VersionedWriteIo.commit(dstRoot, staged,
-        Some(VersionedWriteIo.stampValue(commitTs)), Some(src)) { base =>
+        Some(VersionedWriteIo.stampValue(commitTs))) { base =>
       require(base.isEmpty, s"cloneTo: destination $dstRoot already has versions")
       // the clone inherits every protocol requirement of the source —
       // shared immutable files mean shared representation (and shared
@@ -1256,18 +1279,28 @@ object Versioned {
     val files = listParquet(src).sortBy(_.getFileName.toString)
     require(files.nonEmpty,
       s"convertFrom: no *.parquet files under $srcDir — nothing to convert")
-    // validation (a footer read each) is independent per file and
-    // latency-bound — run it in parallel so a 100k-file onboarding is
-    // bounded by pool width, not file count
-    import FileStats.ParMap
-    files.toArray.par(validateFile)
+    def refuseVersioned(base: Option[Long]): Unit = require(base.isEmpty,
+      s"convertFrom: destination $dstRoot already has versions")
+    refuseVersioned(latestVersion(dstRoot))
     val dst = Paths.get(dstRoot)
     Files.createDirectories(dst)
     val staged = Files.createTempDirectory(dst, "_staging_convert_")
+    try {
+      // validation (a footer read each) and linking are independent
+      // per file and latency-bound — run them in parallel so a
+      // 100k-file onboarding is bounded by pool width, not file count
+      import FileStats.ParMap
+      files.toArray.par { f =>
+        validateFile(f)
+        VersionedWriteIo.linkOrCopy(f, staged.resolve(f.getFileName))
+      }
+    } catch { case e: Throwable => deleteRecursively(staged); throw e }
+    // the staged files never depend on the base: a lost claim retries
+    // as is, a rival's v=0 refuses the convert
     VersionedWriteIo.commit(dstRoot, staged,
         Some(VersionedWriteIo.stampValue(commitTs))) { base =>
-      require(base.isEmpty, s"convertFrom: destination $dstRoot already has versions")
-      VersionedWriteIo.Carry(files)
+      refuseVersioned(base)
+      VersionedWriteIo.Carry()
     }
   }
 

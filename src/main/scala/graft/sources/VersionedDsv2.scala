@@ -642,7 +642,9 @@ private[sources] class GraftVersionedTable(
         val keepPhys =
           if (colMap.isEmpty) keep
           else keep.toDF(keep.columns.map(physOf).toIndexedSeq: _*)
-        Versioned.writeNext(keepPhys, root,
+        // the survivors are v=latest's: a commit racing the rewrite
+        // fails it rather than vanishing under it
+        Versioned.writeOver(keepPhys, root, latest, "a copy-on-write DELETE",
           Some(VersionedWriteIo.stampValue(None)))
     }
     // changeFeedKeys tables feed the change source from DELETEs too
@@ -4326,14 +4328,16 @@ private[graft] object VersionedWriteIo {
       }
     Versioned.deleteRecursively(fragBase)
     val touched = newPos.keySet
-    commit(root, staged, Some(stamp)) { latest =>
-      val base = rebaseOnto(root, latest, scannedVersion, touched,
-        "a merge-on-read mutation", "touched")
+    val what = "a merge-on-read mutation"
+    commit(root, staged, Some(stamp),
+        Some(concurrentCommit(root, scannedVersion, what, _))) { latest =>
+      val base = rebaseOnto(root, latest, scannedVersion, touched, what,
+        "touched")
       val baseDir = Paths.get(root, s"v=$base")
       val baseFiles = Versioned.dataFiles(baseDir)
       val missing = touched -- baseFiles.map(_.getFileName.toString).toSet
       if (missing.nonEmpty)
-        throw rowLevelConflict(root, scannedVersion, "a merge-on-read mutation",
+        throw concurrentCommit(root, scannedVersion, what,
           s"deltas target files no longer present: ${missing.mkString(", ")}")
       // sidecars: base DVs ∪ this commit's fragments, per file
       val baseDvs = DeletionVectors.dvMap(baseDir)
@@ -4455,9 +4459,11 @@ private[graft] object VersionedWriteIo {
     GraftVersionedTable.recordVariantCols(root, schema)
     // the staged output (the replacement rows) is fixed; the base we
     // rebase onto may advance while we retry against racing committers
-    commit(root, staged, Some(stamp)) { latest =>
-      val base = rebaseOnto(root, latest, scannedVersion, scannedNames,
-        "a row-level operation", "replaced")
+    val what = "a row-level operation"
+    commit(root, staged, Some(stamp),
+        Some(concurrentCommit(root, scannedVersion, what, _))) { latest =>
+      val base = rebaseOnto(root, latest, scannedVersion, scannedNames, what,
+        "replaced")
       val baseDir = Paths.get(root, s"v=$base")
       // carry-over against the CURRENT base: everything the base holds
       // except the files we are replacing
@@ -4475,8 +4481,10 @@ private[graft] object VersionedWriteIo {
     }
   }
 
-  private def rowLevelConflict(root: String, scannedVersion: Long,
-                               what: String, why: String) =
+  /** The loud failure of a write that read v=`scannedVersion` and
+    * cannot rebase over what committed since. */
+  private[graft] def concurrentCommit(root: String, scannedVersion: Long,
+                                      what: String, why: String) =
     new IllegalStateException(
       s"graft-versioned: concurrent commit under $root during $what " +
         s"(scanned v=$scannedVersion, latest is " +
@@ -4491,15 +4499,15 @@ private[graft] object VersionedWriteIo {
                          scannedVersion: Long, touched: Set[String],
                          what: String, verb: String): Long = {
     val base = latest.getOrElse(
-      throw rowLevelConflict(root, scannedVersion, what, "no versions left"))
+      throw concurrentCommit(root, scannedVersion, what, "no versions left"))
     ((scannedVersion + 1) to base).foreach { v =>
       rowLevelReplaced(root, v) match {
-        case None => throw rowLevelConflict(root, scannedVersion, what,
+        case None => throw concurrentCommit(root, scannedVersion, what,
           s"v=$v is not a row-level commit")
         case Some(replaced) =>
           val overlap = replaced.intersect(touched)
           if (overlap.nonEmpty)
-            throw rowLevelConflict(root, scannedVersion, what,
+            throw concurrentCommit(root, scannedVersion, what,
               s"v=$v also $verb ${overlap.mkString(", ")}")
       }
     }
@@ -4565,20 +4573,22 @@ private[graft] object VersionedWriteIo {
     * against the new latest. The winner gets the post-publish tail:
     * latest hint, the optional stamp (stamped AFTER publish, so a crash
     * between the two leaves an unstamped version that time travel
-    * skips), and the bloom/ndv sidecars (`carryExtra` names one more
-    * version dir whose sidecar lines carry). Any failure before the
-    * publish deletes the staging dir. Returns the committed version. */
+    * skips), and the bloom/ndv sidecars (lines carry from the winning
+    * attempt's `statsFrom`). `conflict`, when given, is how the caller
+    * names a conflict it cannot retry past — running out of attempts
+    * reports through it. Any failure before the publish deletes the
+    * staging dir. Returns the committed version. */
   def commit(root: String, staged: Path, stamp: Option[Long] = None,
-             carryExtra: Option[Path] = None)(
+             conflict: Option[String => Throwable] = None)(
       carry: Option[Long] => Carry): Long = {
     val dvDir = graft.operators.DeletionVectors.dvDir(staged)
     @scala.annotation.tailrec
-    def attempt(n: Int, prev: Carry): Long = {
+    def attempt(n: Int, prev: Carry): (Long, Carry) = {
       if (n == 20)
-        throw new IllegalStateException(
+        throw conflict.fold[Throwable](new IllegalStateException(
           s"graft-versioned: could not commit under $root after 20 " +
             "attempts — either extreme write contention or the root is " +
-            "not writable")
+            "not writable"))(_("20 rebase attempts exhausted"))
       prev.files.foreach(f => Files.deleteIfExists(staged.resolve(f.getFileName.toString)))
       prev.dvNames.foreach(d => Files.deleteIfExists(dvDir.resolve(d)))
       val base = Versioned.latestVersion(root)
@@ -4588,18 +4598,18 @@ private[graft] object VersionedWriteIo {
         Versioned.listParquet(staged).map(_.getFileName.toString), c.dvNames,
         c.statsFrom)
       val next = base.fold(0L)(_ + 1)
-      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) next
+      if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) (next, c)
       else attempt(n + 1, c)
     }
-    val next =
+    val (next, won) =
       try attempt(0, Carry())
       catch { case e: Throwable => Versioned.deleteRecursively(staged); throw e }
     Versioned.writeLatestHint(root, next)
     stamp.foreach(Versioned.writeStamp(root, next, _))
     // no-ops unless configured: carried files reuse their lines from the
-    // base version (and carryExtra), new files get one build scan
-    graft.operators.BloomSidecar.ensure(root, next, carryExtra)
-    graft.operators.NdvSidecar.ensure(root, next, carryExtra)
+    // previous version and the carry's source, new files get one build scan
+    graft.operators.BloomSidecar.ensure(root, next, won.statsFrom)
+    graft.operators.NdvSidecar.ensure(root, next, won.statsFrom)
     next
   }
 }

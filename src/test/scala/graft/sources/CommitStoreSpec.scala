@@ -161,4 +161,59 @@ class CommitStoreSpec extends AnyFunSuite with SparkSpec {
     Seq(root, clone, conv).foreach(r =>
       assert(Versioned.fsck(r).contains((-1L, "staging-leftovers", 0L, "")), r))
   }
+
+  test("compact that loses its claim to a concurrent append fails " +
+      "loudly and the append stays the latest version") {
+    val root = Files.createTempDirectory("cs_compact_race_").toString
+    val base = df((1L, 10L, "a"), (2L, 20L, "b"), (3L, 30L, "c"))
+    Versioned.writeNext(base.repartition(3), root, Some(1000L))
+    val rival = df((4L, 40L, "rival"))
+    val race = new RaceOnFirstClaim(CommitStore.active, () =>
+      rival.write.format("graft-versioned").mode("append").save(root))
+    val err = intercept[IllegalStateException](
+      CommitStore.withStore(race)(Versioned.compact(spark, root)))
+    assert(race.fired)
+    assert(err.getMessage.contains("concurrent commit"), err.getMessage)
+    assert(Versioned.versions(root) === Seq(0L, 1L))
+    assert(rows(Versioned.read(spark, root)) === rows(base.union(rival)))
+    assert(Versioned.fsck(root).contains((-1L, "staging-leftovers", 0L, "")))
+  }
+
+  test("a copy-on-write DELETE that loses its claim to a concurrent " +
+      "INSERT fails loudly and the inserted rows stay") {
+    val warehouse = Files.createTempDirectory("cs_cow_race_").toString
+    spark.conf.set("spark.sql.catalog.csrace", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.csrace.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS csrace.t")
+    spark.sql("CREATE TABLE csrace.t.cow (id BIGINT, v BIGINT) USING `graft-versioned`")
+    spark.sql("INSERT INTO csrace.t.cow SELECT id, id * 10 FROM range(0, 10)")
+    val root = s"$warehouse/t/cow"
+    val race = new RaceOnFirstClaim(CommitStore.active, () =>
+      spark.sql("INSERT INTO csrace.t.cow VALUES (100, 1000)"))
+    val err = intercept[Exception](CommitStore.withStore(race)(
+      spark.sql("DELETE FROM csrace.t.cow WHERE id < 5")))
+    assert(race.fired)
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("concurrent commit")),
+      err.toString)
+    assert(Versioned.versions(root) === Seq(0L, 1L))
+    assert(spark.sql("SELECT id FROM csrace.t.cow").collect().map(_.getLong(0))
+      .sorted.toSeq === (0L until 10L) :+ 100L)
+    assert(Versioned.fsck(root).contains((-1L, "staging-leftovers", 0L, "")))
+  }
+
+  test("a row-level commit that runs out of claim attempts fails as " +
+      "a concurrent-commit conflict") {
+    val root = Files.createTempDirectory("cs_rl_exhaust_").toString
+    df((1L, 10L, "a"), (2L, 20L, "b")).write.format("graft-versioned")
+      .option("create", "true").mode("append").save(root)
+    import org.apache.spark.sql.functions.col
+    val err = intercept[IllegalStateException](
+      CommitStore.withStore(new ObjectStoreSim(spuriousLosses = 20))(
+        VersionedWriteIo.deleteViaDv(spark, root, col("id") === 1L)))
+    assert(err.getMessage.contains("20 rebase attempts exhausted"), err.getMessage)
+    assert(err.getMessage.contains("retry the statement against current data"))
+    assert(Versioned.versions(root) === Seq(0L))
+    assert(Versioned.fsck(root).contains((-1L, "staging-leftovers", 0L, "")))
+  }
 }
