@@ -32,8 +32,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * sidecar is written AFTER the version's atomic rename: it is a pure
   * optimization layer, and every absence — no sidecar, no line for a
   * file, no filter for a column, an unparseable line — falls back to
-  * "may contain", with row-group pruning and the record filter as the
-  * correctness backstop (the same conservatism contract as
+  * "may contain", with row-group pruning and Spark's Filter above the
+  * scan as the correctness backstop (the same conservatism contract as
   * [[FileStats]]).
   *
   * Soundness under the table's mutation model: data files are
@@ -265,7 +265,7 @@ object BloomSidecar {
 
   /** Can `file`'s filters admit a row matching the pushed atom?
     * Equality-family only — everything else is Someone Else's Problem
-    * (stats, row groups, the record filter). Null probes keep the
+    * (stats, row groups, Spark's Filter). Null probes keep the
     * file: the filter holds non-null values only and IsNull semantics
     * belong to the null-count statistics. */
   def mayMatch(blooms: Map[String, BloomFilter], f: Filter): Boolean = f match {

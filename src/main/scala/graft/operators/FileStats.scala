@@ -35,7 +35,7 @@ import org.apache.spark.sql.sources._
   * Conservatism contract: every uncertainty keeps the file. Absent
   * sidecar, absent per-file line, absent column stats, unrepresentable
   * value types, NaN bounds — all fall back to "may match", and the
-  * row-group prune plus the executor-side record filter remain the
+  * row-group prune plus Spark's Filter above the scan remain the
   * correctness backstop. A column key that IS present encodes "this
   * file's schema has the column"; an atom referencing a column with no
   * key applies null-read semantics (the value an added column reads in

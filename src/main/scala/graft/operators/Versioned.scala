@@ -406,9 +406,10 @@ object Versioned {
           "before compacting")
     val bytes = dataFiles(vdir).map(Files.size).sum
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // mergeSchema: a snapshot may hold pre-evolution files next to
-    // evolved ones (catalog ADD COLUMN is metadata-only) — compacting
-    // with single-footer inference would silently drop added columns.
+    // readSnapshot's schema is the union of the snapshot's footers: a
+    // snapshot may hold pre-evolution files next to evolved ones
+    // (catalog ADD COLUMN is metadata-only), and compacting with
+    // single-footer inference would silently drop added columns.
     // readSnapshot also applies deletion vectors, so compacting a
     // DV-carrying version MATERIALIZES the deletes: the rewrite holds
     // only live rows and the new version carries no sidecars.
@@ -426,7 +427,7 @@ object Versioned {
         d.select((d.columns.toSeq.map(c => col(c).as(l2p.getOrElse(c, c))) ++
           Seq(col("_row_id").as(RowIds.MaterializedCol),
             col("_row_commit_version").as(RowIds.MaterializedVerCol))): _*)
-      } else readSnapshot(spark, root, v, mergeSchema = true)
+      } else readSnapshot(spark, root, v)
     // a clustered table re-clusters on compaction (range + sort), so
     // the rewrite RESTORES file-level min/max locality instead of
     // interleaving it away — coalesce alone merges arbitrary ranges
@@ -1090,7 +1091,7 @@ object Versioned {
     // manifest-resolved + DV-applied: the feed of a DV-mode DELETE must
     // show the deleted keys as 'removed' even though their bytes are
     // still in the (hard-linked) data files
-    def raw(v: Long) = readSnapshot(spark, root, v, mergeSchema = true)
+    def raw(v: Long) = readSnapshot(spark, root, v)
     // keys/payload arrive LOGICAL; raw snapshots read parquet files,
     // which store PHYSICAL (birth) names on a column-mapped table —
     // the projection translates per column and the FEED stores logical
@@ -1154,40 +1155,21 @@ object Versioned {
   def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(root))
       .getOrElse(throw new IllegalStateException(s"no versions under $root"))
-    readSnapshot(spark, root, v, mergeSchema = false)
+    readSnapshot(spark, root, v)
   }
 
-  /** THE snapshot read every lifecycle op routes through: the commit
-    * manifest names the files (a stray `.parquet` planted in `v=N` is
-    * invisible; pre-manifest dirs fall back to listing), and a version
-    * carrying deletion-vector sidecars reads through the DSv2 scan —
-    * the only reader that applies DVs positionally. Compaction,
-    * change-feed derivation, restore validation and the public
-    * [[read]] all agree on what a snapshot IS because they all call
-    * this. */
-  def readSnapshot(spark: SparkSession, root: String, version: Long,
-                   mergeSchema: Boolean): DataFrame = {
-    checkProtocol(root) // never hand back rows a missing feature would falsify
-    val vdir = Paths.get(root, s"v=$version")
-    val raw =
-      if (DeletionVectors.hasDvs(vdir) ||
-          readerFeatures(root).contains("type-widening"))
-        // the DSv2 scan resolves the same manifest, skips DV'd rows, and
-        // WIDENS pre-widening files on read — a plain parquet mergeSchema
-        // read cannot merge INT32 and INT64 halves of a widened column
-        spark.read.format("graft-versioned")
-          .option("versionAsOf", version.toString).load(root)
-      else {
-        val files = dataFiles(vdir).map(_.toString)
-        val r = spark.read.option("mergeSchema", mergeSchema.toString)
-        // an empty manifest (no files at all) still needs a schema source
-        if (files.isEmpty) r.parquet(vdir.toString) else r.parquet(files: _*)
-      }
-    // the materialized row-id/version columns are engine-internal (row
-    // tracking's rewrite carriers) — never part of a snapshot's
-    // logical rows
-    raw.drop(RowIds.MaterializedCol, RowIds.MaterializedVerCol)
-  }
+  /** THE snapshot read every lifecycle op routes through: the
+    * `graft-versioned` scan, which checks the protocol, names the files
+    * from the commit manifest (a stray `.parquet` planted in `v=N` is
+    * invisible; pre-manifest dirs fall back to listing), skips DV'd
+    * rows, widens pre-widening files, restores VARIANT columns and
+    * hides the materialized row-tracking carriers. Column names are
+    * PHYSICAL (no column map is passed). Compaction, change-feed
+    * derivation, restore validation and the public [[read]] all agree
+    * on what a snapshot IS because they all call this. */
+  def readSnapshot(spark: SparkSession, root: String, version: Long): DataFrame =
+    spark.read.format("graft-versioned")
+      .option("versionAsOf", version.toString).load(root)
 
   /** RESTORE: make an OLD snapshot current again as a NEW commit
     * (Delta's `RESTORE TABLE … TO VERSION AS OF`) — unlike [[rollback]]

@@ -6,13 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types => PTypes}
@@ -21,6 +24,7 @@ import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -29,9 +33,12 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.{CalendarInterval, GeographyVal, GeometryVal, UTF8String, VariantVal}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.Versioned
@@ -129,11 +136,8 @@ private[sources] object GraftVersionedTable {
     * the physical row ordinal within the row's data file, the
     * coordinate deletion vectors are keyed on and half of the delta
     * operations' row id (`(_file, _pos)`, the Iceberg shape). Always
-    * exposed; whenever a scan projects it the reader turns parquet's
-    * record-level filtering OFF (it would hide skipped rows and shift
-    * every ordinal) and evaluates the pushed predicates itself on the
-    * assembled rows — pushdown semantics are preserved, positions
-    * stay physical. */
+    * exposed; read from the parquet row index, so it stays physical
+    * whatever the scan prunes. */
   val PosColumn = "_pos"
 
   object PosMetadataColumn extends MetadataColumn {
@@ -612,8 +616,7 @@ private[sources] class GraftVersionedTable(
           } else if (graft.operators.DeletionVectors.hasDvs(vdir)) {
             // raw snapshot frames carry PHYSICAL names — project each
             // table column from its physical twin (null-fill absents)
-            val snap = Versioned.readSnapshot(spark, root, latest,
-              mergeSchema = true)
+            val snap = Versioned.readSnapshot(spark, root, latest)
             if (tableSchema.isEmpty) snap
             else snap.select(tableSchema.fields.map { f =>
               if (snap.schema.fieldNames.contains(physOf(f.name)))
@@ -913,8 +916,7 @@ private[sources] class GraftRowLevelScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GroupParquetReaderFactory(required, Array.empty, Map.empty,
-      colMap = colMap)
+    VersionedReaderFactory(required, colMap)
 }
 
 // ======================================== delta (merge-on-read) mutations
@@ -931,8 +933,8 @@ private[sources] class GraftRowLevelScan(
   * `(_file, _pos)` — the same positional coordinates the DV sidecars
   * and the Iceberg delta protocol use. Unlike the group-based path the
   * scan here needs no carry-over discipline: non-matching rows produce
-  * no delta, so pushed predicates apply FULLY (the reader's manual
-  * evaluation keeps them exact under position tracking). */
+  * no delta, so the scan prunes on pushed predicates like any snapshot
+  * read (Spark's Filter above it keeps rows exact). */
 private[sources] class GraftDeltaOperation(
     private[sources] val table: GraftVersionedTable, root: String,
     tableSchema: StructType, tableOptions: CaseInsensitiveStringMap,
@@ -1290,11 +1292,9 @@ private[sources] class GraftVersionedScanBuilder(
   // (it IS the scan's output schema) and the reader maps per lookup
   private val colMap = GraftVersionedTable.colMapOf(options)
 
-  // MERGE-ON-READ snapshots (deletion vectors present): pushed filters
-  // still apply fully — the reader evaluates them itself on assembled
-  // rows whenever position tracking disables parquet's record filter —
-  // but footer-only shortcuts (LIMIT group-trimming, aggregate
-  // pushdown) refuse themselves: footer row counts include DV'd rows.
+  // MERGE-ON-READ snapshots (deletion vectors present): footer-only
+  // shortcuts (LIMIT group-trimming, aggregate pushdown) refuse
+  // themselves — footer row counts include DV'd rows.
   private lazy val dvPresent: Boolean =
     GraftVersionedTable.snapshotHasDvs(options)
 
@@ -1311,11 +1311,12 @@ private[sources] class GraftVersionedScanBuilder(
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // translatability is judged in LOGICAL names (the schema Spark
     // sees); the stored pushed set is PHYSICAL (what footers speak)
-    val (ok, residual) = filters.partition(f =>
-      GroupParquetIo.translatable(f, fullSchema))
-    pushedLogical = ok
-    pushed = ok.map(GroupParquetIo.mapFilter(_, colMap))
-    residual // Spark re-applies these above the scan
+    pushedLogical = filters.filter(GroupParquetIo.translatable(_, fullSchema))
+    pushed = pushedLogical.map(GroupParquetIo.mapFilter(_, colMap))
+    // the pushed set prunes files and row groups only — Spark
+    // re-applies every filter above the scan (as for its own parquet
+    // scan)
+    filters
   }
 
   private var pushedLogical: Array[Filter] = Array.empty
@@ -1856,10 +1857,10 @@ private[sources] class GraftVersionedScan(
         if (keptFiles.isEmpty) Map.empty[String, Long]
         else graft.operators.NdvSidecar.mergedNdv(vdir, keptFiles)
       }.getOrElse(Map.empty)
-    // NDV-implied selectivity of the FULLY-PUSHED predicates: once a
-    // filter pushes into this scan, Catalyst removes the Filter node,
-    // so no downstream estimation can apply its selectivity — the
-    // scan's own row estimate must, or a point-filtered 30k-row
+    // NDV-implied selectivity of the pushed predicates: the Filter
+    // above the scan keeps its child's size unless CBO has min/max
+    // statistics, which this scan does not report — so the scan's own
+    // row estimate must apply it, or a point-filtered 30k-row
     // dimension still looks like 30k rows to the join planner.
     // Equality keeps ~rows/ndv, IN keeps |set|/ndv; unknown shapes and
     // unsketched columns keep selectivity 1 (conservative).
@@ -1921,8 +1922,7 @@ private[sources] class GraftVersionedScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GroupParquetReaderFactory(required, allFilters, allFilterTypes,
-      limit.map(_.toLong).getOrElse(-1L), colMap)
+    VersionedReaderFactory(required, colMap, limit.map(_.toLong).getOrElse(-1L))
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     // parse inside an option-named error: a malformed value ("abc")
@@ -2120,7 +2120,7 @@ private[sources] class GraftChangeFeedStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GroupParquetReaderFactory(required, pushed, filterTypes)
+    VersionedReaderFactory(required)
 
   override def deserializeOffset(json: String): Offset =
     GraftVersionOffset(json.trim.toLong)
@@ -2390,7 +2390,7 @@ private[sources] class GraftTableStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GroupParquetReaderFactory(required, pushed, filterTypes, -1L, colMap)
+    VersionedReaderFactory(required, colMap)
 
   override def deserializeOffset(json: String): Offset =
     GraftVersionOffset(json.trim.toLong)
@@ -2427,389 +2427,282 @@ private[sources] case class KeyedGroupParquetPartition(
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(keyVals)
 }
 
-private[sources] case class GroupParquetReaderFactory(
-    required: StructType, pushed: Array[Filter],
-    filterTypes: Map[String, DataType], limit: Long = -1L,
-    colMap: Map[String, String] = Map.empty)
+/** The reader factory of every `graft-versioned` scan: the snapshot
+  * scan, the row-level scan, the table stream and the change-feed
+  * stream. The parquet read settings are taken from the session here,
+  * on the driver, so a scan decodes the same way however its job is
+  * launched. */
+private[sources] case class VersionedReaderFactory(
+    required: StructType, colMap: Map[String, String] = Map.empty,
+    limit: Long = -1L,
+    readConf: Map[String, String] = VersionedPartitionReader.sessionReadConf())
   extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = partition match {
-    case p: GroupParquetPartition =>
-      new GroupParquetPartitionReader(p.file, p.rangeStart, p.rangeEnd,
-        required, pushed, filterTypes, limit, p.dvFile, colMap,
-        p.rowIdBase, p.rowVer)
-    case p: KeyedGroupParquetPartition =>
-      new GroupParquetPartitionReader(p.file, p.rangeStart, p.rangeEnd,
-        required, pushed, filterTypes, limit, p.dvFile, colMap,
-        p.rowIdBase, p.rowVer)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case p: GroupParquetPartition =>
+        new VersionedPartitionReader(this, p.file, p.rangeStart, p.rangeEnd,
+          p.dvFile, p.rowIdBase, p.rowVer)
+      case p: KeyedGroupParquetPartition =>
+        new VersionedPartitionReader(this, p.file, p.rangeStart, p.rangeEnd,
+          p.dvFile, p.rowIdBase, p.rowVer)
+    }
+}
+
+private[sources] object VersionedPartitionReader {
+
+  /** The session settings Spark's own parquet scan puts into its
+    * reader's Hadoop configuration. */
+  def sessionReadConf(): Map[String, String] = {
+    val c = SQLConf.get
+    Map(
+      SQLConf.SESSION_LOCAL_TIMEZONE.key -> c.sessionLocalTimeZone,
+      SQLConf.CASE_SENSITIVE.key -> c.caseSensitiveAnalysis.toString,
+      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key ->
+        c.nestedSchemaPruningEnabled.toString,
+      SQLConf.PARQUET_BINARY_AS_STRING.key -> c.isParquetBinaryAsString.toString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP.key ->
+        c.isParquetINT96AsTimestamp.toString,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key ->
+        c.parquetInferTimestampNTZEnabled.toString,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key ->
+        c.legacyParquetNanosAsLong.toString,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key ->
+        c.parquetReaderRespectUnknownTypeAnnotation.toString,
+      SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE.key ->
+        c.parquetVectorizedReaderBatchSize.toString)
+  }
+
+  // output ordinals graft synthesizes instead of reading a batch column
+  private val FileK = -1
+  private val PosK = -2
+  private val RowIdK = -3
+  private val RowVerK = -4
+
+  /** VARIANT as the writer stores it (see
+    * [[GroupParquetIo.writeMessageType]]): one BINARY holding
+    * [4-byte BE metadata length][metadata][value]. */
+  def decodeVariant(bytes: Array[Byte]): VariantVal = {
+    val mEnd = 4 + java.nio.ByteBuffer.wrap(bytes).getInt
+    new VariantVal(java.util.Arrays.copyOfRange(bytes, mEnd, bytes.length),
+      java.util.Arrays.copyOfRange(bytes, 4, mEnd))
   }
 }
 
-/** Executor-side reader: parquet example-Group assembly under a
-  * projection of (required ∪ filter) columns, with pushed predicates
-  * compiled to parquet `FilterPredicate`s (row-group stats + dictionary
-  * + record-level filtering happen inside parquet-mr; rows that fail
-  * never reach Spark). */
-private[sources] class GroupParquetPartitionReader(
-    file: String, rangeStart: Long, rangeEnd: Long,
-    required: StructType, pushed: Array[Filter],
-    filterTypes: Map[String, DataType], limit: Long = -1L,
-    dvFile: String = null, colMap: Map[String, String] = Map.empty,
-    rowIdBase: Long = -1L, rowVer: Long = -1L)
+/** Executor-side reader. Spark's `VectorizedParquetRecordReader`
+  * decodes the split; the midpoint of `[rangeStart, rangeEnd)` selects
+  * its row group (negative = whole file). On top of Spark's batches
+  * this adds only graft's own layers: column mapping (the requested
+  * columns are PHYSICAL), deletion-vector masking over the parquet
+  * row index (file-absolute, so it is also `_pos` and the base of a
+  * derived `_row_id`), the `_file` / `_row_commit_version` constants,
+  * and VARIANT decoding. Columns a file lacks read as null, and
+  * INT32 / FLOAT files under a widened BIGINT / DOUBLE column widen in
+  * Spark's decoder. Pushed filters are not applied here: they prune
+  * files and row groups at planning, and Spark re-applies them above
+  * the scan. */
+private[sources] class VersionedPartitionReader(
+    f: VersionedReaderFactory, file: String, rangeStart: Long, rangeEnd: Long,
+    dvFile: String, rowIdBase: Long, rowVer: Long)
   extends PartitionReader[InternalRow] {
+  import VersionedPartitionReader._
 
-  private val conf = new Configuration()
+  private val required = f.required
+  private val conf = new Configuration(GroupParquetIo.hadoopDefaults)
+  f.readConf.foreach { case (k, v) => conf.set(k, v) }
+  private val inputFile = HadoopInputFile.fromPath(new HPath(file), conf)
+  private val footer = ParquetFooterReader.readFooter(inputFile,
+    if (rangeStart < 0) ParquetMetadataConverter.NO_FILTER
+    else ParquetMetadataConverter.range(rangeStart, rangeEnd))
+  private val fileSchema = footer.getFileMetaData.getSchema
 
-  private val filePathUtf8 = UTF8String.fromString(file)
-
-  // column mapping: `required` is LOGICAL (the output schema); pushed
-  // filters and filterTypes arrive already PHYSICAL; file schemas are
-  // physical by construction (files store birth names forever)
-  private def physOf(logical: String): String =
-    colMap.getOrElse(logical, logical)
-
-  // merge-on-read state: positions are absolute row ordinals within
-  // the FILE, so a row-group partition needs its group's starting row
-  // index (cumulative row count of the preceding groups — computed
-  // from the same footer read that resolves the schema)
-  private val needRowId =
-    required.fieldNames.contains(GraftVersionedTable.RowIdColumn)
-
-  private val needRowVer =
-    required.fieldNames.contains(GraftVersionedTable.RowVerColumn)
-
-  private val needPos = dvFile != null ||
-    required.fieldNames.contains(GraftVersionedTable.PosColumn) ||
-    needRowId
-
-  private val (fileSchema: MessageType, startRow: Long) = {
-    val in = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf))
-    try {
-      val footer = in.getFooter
-      val schema = footer.getFileMetaData.getSchema
-      val start =
-        if (!needPos || rangeStart < 0) 0L
-        else {
-          // the same midpoint rule withFileRange uses to pick the group
-          var cum = 0L
-          var found = -1L
-          val it = footer.getBlocks.iterator()
-          while (it.hasNext && found < 0) {
-            val b = it.next()
-            val mid = b.getStartingPos + b.getCompressedSize / 2
-            if (mid >= rangeStart && mid < rangeEnd) found = cum
-            else cum += b.getRowCount
-          }
-          require(found >= 0,
-            s"graft-versioned: no row group midpoint in [$rangeStart, " +
-              s"$rangeEnd) of $file")
-          found
-        }
-      (schema, start)
-    } finally in.close()
+  private val requested =
+    scala.collection.mutable.ArrayBuffer.empty[StructField]
+  private def ask(name: String, t: DataType): Int = {
+    requested += StructField(name, t)
+    requested.length - 1
   }
+
+  // per output ordinal: the batch column it reads, or a synthesized
+  // value — a metadata column is synthesized only when the file does
+  // not store a column of that name; any other absent column is asked
+  // for anyway and Spark reads it as null (the schema-evolution
+  // contract)
+  private val source: Array[Int] = required.fields.map { c =>
+    val phys = f.colMap.getOrElse(c.name, c.name)
+    if (fileSchema.containsField(phys)) ask(phys, storedType(c.dataType))
+    else c.name match {
+      case GraftVersionedTable.FileColumn => FileK
+      case GraftVersionedTable.PosColumn => PosK
+      case GraftVersionedTable.RowIdColumn => RowIdK
+      case GraftVersionedTable.RowVerColumn => RowVerK
+      case _ => ask(phys, storedType(c.dataType))
+    }
+  }
+  private def storedType(t: DataType): DataType =
+    if (t == VariantType) BinaryType else t
+  private val isVariant = required.fields.map(_.dataType == VariantType)
+
+  // a REWRITTEN file of a row-tracking table materializes ids (and
+  // their commit versions) under physical columns; a null there, or a
+  // file without them, falls back to base + position (a MERGE-inserted
+  // row in a rewrite gets its fresh id from the base allocation)
+  private val matRowId =
+    if (source.contains(RowIdK))
+      ask(graft.operators.RowIds.MaterializedCol, LongType)
+    else -1
+  private val matRowVer =
+    if (source.contains(RowVerK))
+      ask(graft.operators.RowIds.MaterializedVerCol, LongType)
+    else -1
+  private val rowIndex =
+    if (dvFile != null || source.contains(PosK) || source.contains(RowIdK))
+      ask(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
+    else -1
+
+  private val reader = {
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      StructType(requested.toSeq).json)
+    // graft's own writer stamps no rebase marker and writes proleptic
+    // Gregorian values, so an unmarked file reads as CORRECTED;
+    // Spark-written files carry their own marker
+    val meta = footer.getFileMetaData.getKeyValueMetaData
+    val dates = DataSourceUtils.datetimeRebaseSpec(meta.get(_), "CORRECTED")
+    val int96 = DataSourceUtils.int96RebaseSpec(meta.get(_), "CORRECTED")
+    val r = new VectorizedParquetRecordReader(null, dates.mode.toString,
+      dates.timeZone, int96.mode.toString, int96.timeZone, false,
+      conf.getInt(SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE.key, 4096))
+    try {
+      r.initialize(
+        new FileSplit(new HPath(file), math.max(rangeStart, 0L),
+          if (rangeStart < 0) Long.MaxValue else rangeEnd - rangeStart,
+          Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+        Some(inputFile), None, Some(footer))
+      r.initBatch(new StructType(), InternalRow.empty)
+    } catch { case e: Throwable => r.close(); throw e }
+    r
+  }
+  private val batch = reader.resultBatch()
+  private var batchRows = 0
+  private var at = 0
+  private var data: InternalRow = _
+  private var emitted = 0L
 
   private lazy val dvPositions: Array[Long] =
-    if (dvFile == null) Array.empty
-    else graft.operators.DeletionVectors.read(java.nio.file.Paths.get(dvFile))
+    graft.operators.DeletionVectors.read(java.nio.file.Paths.get(dvFile))
   private var dvIdx = 0
-  private var rowPos: Long = startRow - 1
 
-  // projection = required ∪ filter columns (record-level filtering
-  // evaluates on the assembled record, so filter columns must be read
-  // even when pruned from the output). Columns ABSENT from this file's
-  // schema are synthesized: `_file` = the path, anything else = null
-  // (the schema-evolution contract — pre-evolution files have no value
-  // for an added column). A fully-pruned scan (count(*), SELECT _file)
-  // still needs one column to drive record iteration.
-  private def synthesized(logicalName: String): Boolean =
-    !fileSchema.containsField(physOf(logicalName))
+  private def position: Long = batch.column(rowIndex).getLong(at)
 
-  // per-required-field widening kind, computed ONCE per file:
-  // 0 = exact, 1 = INT32 stored under a BIGINT column, 2 = FLOAT
-  // stored under a DOUBLE column (the type-widening read contract)
-  private lazy val widenKind: Array[Int] = required.fields.map { f =>
-    if (synthesized(f.name)) 0
-    else {
-      val field = fileSchema.getType(fileSchema.getFieldIndex(physOf(f.name)))
-      if (!field.isPrimitive) 0
-      else (f.dataType, field.asPrimitiveType().getPrimitiveTypeName) match {
-        case (LongType, PrimitiveTypeName.INT32) => 1
-        case (DoubleType, PrimitiveTypeName.FLOAT) => 2
-        case _ => 0
-      }
-    }
-  }
-
-  // pushed-filter atoms referencing columns this file lacks evaluate
-  // under "value is null": IsNull is trivially satisfied (drop the
-  // atom), every other atom refutes the whole file (no row can match)
-  private val pushedAtoms = pushed.flatMap(GroupParquetIo.atoms)
-  private val (presentAtoms, absentAtoms) =
-    pushedAtoms.partition(_.references.forall(fileSchema.containsField))
-  private val fileRefuted =
-    absentAtoms.exists(a => !GroupParquetIo.nullSatisfied(a))
-  // atoms over TYPE-WIDENED columns stored narrow in this file cannot
-  // feed parquet's native record filter (declared long/double vs
-  // stored INT32/FLOAT is a parquet-mr error) — they are evaluated by
-  // hand on assembled rows, with widening reads, below
-  private val (nativeAtoms, widenedAtoms) = presentAtoms.partition(
-    GroupParquetIo.fileTypeMatched(_, fileSchema, filterTypes))
-
-  // a REWRITTEN file of a row-tracking table materializes ids under
-  // this physical column — read it when `_row_id` is projected;
-  // derived files fall back to base + position
-  private val matRowIdPresent = needRowId &&
-    fileSchema.containsField(graft.operators.RowIds.MaterializedCol)
-
-  private val matRowVerPresent = needRowVer &&
-    fileSchema.containsField(graft.operators.RowIds.MaterializedVerCol)
-
-  private val projNames: Seq[String] = {
-    // physical projection: required maps logical→physical, filterTypes
-    // keys are physical already — never double-map a physical name
-    val want = (required.fieldNames.map(physOf) ++ filterTypes.keys ++
-        (if (matRowIdPresent) Seq(graft.operators.RowIds.MaterializedCol)
-         else Nil) ++
-        (if (matRowVerPresent) Seq(graft.operators.RowIds.MaterializedVerCol)
-         else Nil))
-      .distinct.filter(fileSchema.containsField).toSeq
-    if (want.nonEmpty) want else Seq(fileSchema.getFields.get(0).getName)
-  }
-
-  private lazy val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val projected = new MessageType(fileSchema.getName,
-      projNames.map { n =>
-        require(fileSchema.containsField(n),
-          s"graft-versioned: column '$n' not in parquet file $file")
-        fileSchema.getType(fileSchema.getFieldIndex(n))
-      }.asJava)
-    conf.set(ReadSupport.PARQUET_READ_SCHEMA, projected.toString)
-    val b0 = ParquetReader.builder(new GroupReadSupport(), new HPath(file))
-      .withConf(conf)
-    // row-group split: the range's midpoint rule selects exactly this
-    // partition's group (negative range = whole file)
-    val b = if (rangeStart >= 0) b0.withFileRange(rangeStart, rangeEnd) else b0
-    // position tracking forbids record-level filtering: parquet hides
-    // the rows a record filter skips, which would shift every ordinal.
-    // Pushdown semantics survive because next() then evaluates the
-    // SAME pushed atoms itself on each assembled row (evalAtoms).
-    val compiled =
-      if (needPos) None else GroupParquetIo.compile(nativeAtoms, filterTypes)
-    compiled match {
-      case Some(pred) => b.withFilter(FilterCompat.get(pred)).build()
-      case None => b.build()
-    }
-  }
-
-  private var current: org.apache.parquet.example.data.Group = _
-  private var emitted = 0L
-  private var opened = false
-
-  // position tracking turned parquet's record filter off — the reader
-  // honors the pushed predicates itself, same vocabulary, same
-  // three-valued semantics (an atom over a null value never matches;
-  // only IsNull does). Widened-column atoms are ALWAYS manual (the
-  // native filter can't see them in a narrow file).
-  private val manualAtoms =
-    if (needPos) presentAtoms else widenedAtoms
-  private val manualEval = manualAtoms.nonEmpty
-
-  private def atomHolds(g: org.apache.parquet.example.data.Group,
-                        f: Filter): Boolean = {
-    val gType = g.getType
-    def isNull(a: String): Boolean = {
-      val gi = gType.getFieldIndex(a)
-      g.getFieldRepetitionCount(gi) == 0
-    }
-    // compare the stored value with the literal under the COLUMN's
-    // type — the same normalization the parquet compile path uses
-    // (dates to epoch days, timestamps to micros, strings by unsigned
-    // UTF-8 byte order). Returns None when the stored value is null.
-    def cmp(a: String, v: Any): Option[Int] = {
-      if (isNull(a)) return None
-      val gi = gType.getFieldIndex(a)
-      def narrowInt: Boolean = // pre-widening file: INT32 under BIGINT
-        gType.getType(gi).asPrimitiveType().getPrimitiveTypeName ==
-          PrimitiveTypeName.INT32
-      def narrowFloat: Boolean = // pre-widening file: FLOAT under DOUBLE
-        gType.getType(gi).asPrimitiveType().getPrimitiveTypeName ==
-          PrimitiveTypeName.FLOAT
-      Some(filterTypes(a) match {
-        case LongType => java.lang.Long.compare(
-          if (narrowInt) g.getInteger(gi, 0).toLong else g.getLong(gi, 0),
-          v.asInstanceOf[Number].longValue())
-        case TimestampType | TimestampNTZType => java.lang.Long.compare(
-          g.getLong(gi, 0), GroupParquetIo.toMicros(v))
-        case IntegerType => java.lang.Integer.compare(
-          g.getInteger(gi, 0), v.asInstanceOf[Number].intValue())
-        case DateType => java.lang.Integer.compare(
-          g.getInteger(gi, 0), GroupParquetIo.toDays(v))
-        case DoubleType => java.lang.Double.compare(
-          if (narrowFloat) g.getFloat(gi, 0).toDouble else g.getDouble(gi, 0),
-          v.asInstanceOf[Number].doubleValue())
-        case FloatType => java.lang.Float.compare(
-          g.getFloat(gi, 0), v.asInstanceOf[Number].floatValue())
-        case BooleanType => java.lang.Boolean.compare(
-          g.getBoolean(gi, 0), v.asInstanceOf[Boolean])
-        case StringType =>
-          UTF8String.fromBytes(g.getBinary(gi, 0).getBytes)
-            .compareTo(UTF8String.fromString(v.toString))
-        case other => throw new UnsupportedOperationException(
-          s"graft-versioned: cannot evaluate pushed filter on type $other")
-      })
-    }
-    f match {
-      case EqualTo(a, v) => cmp(a, v).contains(0)
-      case GreaterThan(a, v) => cmp(a, v).exists(_ > 0)
-      case GreaterThanOrEqual(a, v) => cmp(a, v).exists(_ >= 0)
-      case LessThan(a, v) => cmp(a, v).exists(_ < 0)
-      case LessThanOrEqual(a, v) => cmp(a, v).exists(_ <= 0)
-      case IsNull(a) => isNull(a)
-      case IsNotNull(a) => !isNull(a)
-      case In(a, vs) => vs.exists(v => cmp(a, v).contains(0))
-      case And(l, r) => atomHolds(g, l) && atomHolds(g, r)
-      case Or(l, r) => atomHolds(g, l) || atomHolds(g, r)
-      case other => throw new UnsupportedOperationException(
-        s"graft-versioned: unevaluable pushed filter $other — " +
-          "translatable() and atomHolds() drifted apart")
-    }
+  // deletion-vector skip: both the rows and the positions arrive in
+  // ascending order, so one pointer walks the sorted DV once
+  private def live: Boolean = dvFile == null || {
+    val p = position
+    while (dvIdx < dvPositions.length && dvPositions(dvIdx) < p) dvIdx += 1
+    dvIdx >= dvPositions.length || dvPositions(dvIdx) != p
   }
 
   override def next(): Boolean = {
-    // a filter on a column this file lacks (and null doesn't satisfy)
-    // can match no row — never even open the file
-    if (fileRefuted) return false
     // a pushed LIMIT needs at most `limit` rows from EACH partition —
     // the engine-side final LIMIT (partial pushdown) does the rest
-    if (limit >= 0 && emitted >= limit) return false
-    opened = true
-    var live = false
-    while (!live) {
-      current = reader.read()
-      if (current == null) return false
-      rowPos += 1
-      // deletion-vector skip: both the rows and the positions arrive
-      // in ascending order, so one pointer walks the sorted DV once
-      if (dvFile != null) {
-        while (dvIdx < dvPositions.length && dvPositions(dvIdx) < rowPos)
-          dvIdx += 1
-        live = dvIdx >= dvPositions.length || dvPositions(dvIdx) != rowPos
-      } else live = true
-      // pushed predicates, applied by hand when the record filter is
-      // off for position tracking — pushdown stays fully honored
-      if (live && manualEval)
-        live = manualAtoms.forall(atomHolds(current, _))
+    if (f.limit >= 0 && emitted >= f.limit) return false
+    var found = false
+    while (!found) {
+      at += 1
+      while (at >= batchRows) {
+        if (!reader.nextBatch()) return false
+        batchRows = batch.numRows()
+        at = 0
+      }
+      found = live
     }
+    data = batch.getRow(at)
     emitted += 1
     true
   }
 
-  override def get(): InternalRow = {
-    val g = current
-    val gType = g.getType
-    val row = new GenericInternalRow(required.length)
-    var i = 0
-    while (i < required.length) {
-      val f = required.fields(i)
-      if (synthesized(f.name)) {
-        if (f.name == GraftVersionedTable.FileColumn) row.update(i, filePathUtf8)
-        else if (f.name == GraftVersionedTable.PosColumn) row.setLong(i, rowPos)
-        else if (f.name == GraftVersionedTable.RowIdColumn) {
-          // a materialized NULL falls back to the file's base range: a
-          // MERGE-inserted row in a rewrite has no source id — its
-          // fresh id comes from the base allocation (disjoint from all
-          // carried ids by the monotone mark)
-          val fallback =
-            if (matRowIdPresent) {
-              val mi = gType.getFieldIndex(graft.operators.RowIds.MaterializedCol)
-              g.getFieldRepetitionCount(mi) == 0
-            } else true
-          if (!fallback) {
-            val mi = gType.getFieldIndex(graft.operators.RowIds.MaterializedCol)
-            row.setLong(i, g.getLong(mi, 0))
-          } else {
-            require(rowIdBase >= 0,
-              s"graft-versioned: `_row_id` requested but $file has no " +
-                "row-id base — the snapshot predates row tracking " +
-                "(enable assigns ids from the current version forward)")
-            row.setLong(i, rowIdBase + rowPos)
-          }
-        }
-        else if (f.name == GraftVersionedTable.RowVerColumn) {
-          val fallback =
-            if (matRowVerPresent) {
-              val mi = gType.getFieldIndex(
-                graft.operators.RowIds.MaterializedVerCol)
-              g.getFieldRepetitionCount(mi) == 0
-            } else true
-          if (!fallback) {
-            val mi = gType.getFieldIndex(
-              graft.operators.RowIds.MaterializedVerCol)
-            row.setLong(i, g.getLong(mi, 0))
-          } else {
-            require(rowVer >= 0,
-              s"graft-versioned: `_row_commit_version` requested but " +
-                s"$file has no adding-commit record — the snapshot " +
-                "predates row tracking")
-            row.setLong(i, rowVer)
-          }
-        }
-        else row.update(i, null)
-        i += 1
-      } else {
-      val gi = gType.getFieldIndex(physOf(f.name))
-      if (g.getFieldRepetitionCount(gi) == 0) row.update(i, null)
-      else f.dataType match {
-        // TYPE WIDENING (INT→BIGINT, FLOAT→DOUBLE): a pre-widening
-        // file stores the narrow primitive under the widened manifest
-        // column — widen on read, exact by construction
-        case LongType    =>
-          if (widenKind(i) == 1) row.setLong(i, g.getInteger(gi, 0).toLong)
-          else row.setLong(i, g.getLong(gi, 0))
-        case IntegerType => row.setInt(i, g.getInteger(gi, 0))
-        case DoubleType  =>
-          if (widenKind(i) == 2) row.setDouble(i, g.getFloat(gi, 0).toDouble)
-          else row.setDouble(i, g.getDouble(gi, 0))
-        case FloatType   => row.setFloat(i, g.getFloat(gi, 0))
-        case BooleanType => row.setBoolean(i, g.getBoolean(gi, 0))
-        case DateType    => row.setInt(i, g.getInteger(gi, 0))
-        case StringType  =>
-          row.update(i, UTF8String.fromBytes(g.getBinary(gi, 0).getBytes))
-        case TimestampType | TimestampNTZType =>
-          row.setLong(i, g.getLong(gi, 0)) // micros, the parquet encoding
-        case VariantType =>
-          // [4-byte BE metadata length][metadata][value] — the writer's
-          // VARIANT encoding (GroupParquetIo.writeMessageType)
-          val bytes = g.getBinary(gi, 0).getBytes
-          val buf = java.nio.ByteBuffer.wrap(bytes)
-          val mLen = buf.getInt
-          val m = new Array[Byte](mLen)
-          buf.get(m)
-          val d = new Array[Byte](bytes.length - 4 - mLen)
-          buf.get(d)
-          row.update(i, new org.apache.spark.unsafe.types.VariantVal(d, m))
-        case other => throw new UnsupportedOperationException(
-          s"graft-versioned: unsupported column type ${other.simpleString} " +
-            s"for '${f.name}' — the reader covers the version-store " +
-            "column set (long/int/double/float/boolean/string/date/" +
-            "timestamp/variant)")
+  private val filePath = UTF8String.fromString(file)
+
+  private def synthesizedLong(kind: Int): Long = kind match {
+    case PosK => position
+    case RowIdK =>
+      if (!data.isNullAt(matRowId)) data.getLong(matRowId)
+      else {
+        require(rowIdBase >= 0,
+          s"graft-versioned: `_row_id` requested but $file has no " +
+            "row-id base — the snapshot predates row tracking " +
+            "(enable assigns ids from the current version forward)")
+        rowIdBase + position
       }
-      i += 1
+    case RowVerK =>
+      if (!data.isNullAt(matRowVer)) data.getLong(matRowVer)
+      else {
+        require(rowVer >= 0,
+          s"graft-versioned: `_row_commit_version` requested but " +
+            s"$file has no adding-commit record — the snapshot " +
+            "predates row tracking")
+        rowVer
       }
-    }
-    row
   }
 
-  // only close what next() actually opened — closing an untouched
-  // lazy reader would open the file just to shut it
-  override def close(): Unit = if (opened) reader.close()
+  /** The current row as a view over the batch row: valid until the
+    * next `next()`, which is all Spark's scan needs (it projects every
+    * row before advancing). */
+  private object row extends InternalRow {
+    override def numFields: Int = source.length
+    override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+    override def update(i: Int, value: Any): Unit =
+      throw new UnsupportedOperationException
+    override def copy(): InternalRow = new GenericInternalRow(
+      Array.tabulate[Any](source.length)(i =>
+        InternalRow.copyValue(get(i, required(i).dataType))))
+    override def isNullAt(i: Int): Boolean =
+      source(i) >= 0 && data.isNullAt(source(i))
+    override def getBoolean(i: Int): Boolean = data.getBoolean(source(i))
+    override def getByte(i: Int): Byte = data.getByte(source(i))
+    override def getShort(i: Int): Short = data.getShort(source(i))
+    override def getInt(i: Int): Int = data.getInt(source(i))
+    override def getLong(i: Int): Long =
+      if (source(i) >= 0) data.getLong(source(i)) else synthesizedLong(source(i))
+    override def getFloat(i: Int): Float = data.getFloat(source(i))
+    override def getDouble(i: Int): Double = data.getDouble(source(i))
+    override def getDecimal(i: Int, precision: Int, scale: Int): Decimal =
+      data.getDecimal(source(i), precision, scale)
+    override def getUTF8String(i: Int): UTF8String =
+      if (source(i) == FileK) filePath else data.getUTF8String(source(i))
+    override def getBinary(i: Int): Array[Byte] = data.getBinary(source(i))
+    override def getGeography(i: Int): GeographyVal = data.getGeography(source(i))
+    override def getGeometry(i: Int): GeometryVal = data.getGeometry(source(i))
+    override def getInterval(i: Int): CalendarInterval = data.getInterval(source(i))
+    override def getVariant(i: Int): VariantVal = decodeVariant(getBinary(i))
+    override def getStruct(i: Int, numFields: Int): InternalRow =
+      data.getStruct(source(i), numFields)
+    override def getArray(i: Int): ArrayData = data.getArray(source(i))
+    override def getMap(i: Int): MapData = data.getMap(source(i))
+    override def get(i: Int, t: DataType): AnyRef =
+      if (isNullAt(i)) null
+      else if (source(i) == FileK) filePath
+      else if (source(i) < 0) Long.box(getLong(i))
+      else if (isVariant(i)) getVariant(i)
+      else data.get(source(i), t)
+  }
+
+  override def get(): InternalRow = row
+
+  override def close(): Unit = reader.close()
 }
 
-/** Spark [[Filter]] → parquet [[FilterPredicate]] translation for the
-  * supported atomic types. `translatable` (pushdown time) and `compile`
-  * (read time) agree by construction: anything accepted at pushdown has
-  * a typed compilation, so Spark only re-applies true residuals. */
+/** Driver-side planning of `graft-versioned` scans: file pruning by
+  * the stats and Bloom sidecars, footer reads, and row-group pruning
+  * with Spark [[Filter]]s compiled to parquet [[FilterPredicate]]s.
+  * `translatable` (pushdown time) and `compile` (planning time) agree
+  * by construction: anything accepted at pushdown has a typed
+  * compilation. Pruning is the only use of the pushed set — Spark
+  * re-applies every filter above the scan. Also the write side's
+  * parquet schema ([[writeMessageType]]). */
 private[sources] object GroupParquetIo {
 
   /** One data file's footer state: its schema, the row groups the
@@ -2861,12 +2754,17 @@ private[sources] object GroupParquetIo {
     }
   }
 
+  /** Hadoop's default configuration, parsed once per JVM (each
+    * `new Configuration()` re-parses the default XML resources);
+    * read-only here, copied where a reader sets keys. */
+  lazy val hadoopDefaults: Configuration = new Configuration()
+
   /** One driver-side footer read per file → schema + row groups. */
   def readFooters(files: Seq[java.nio.file.Path]): Seq[FileGroups] =
     files.sortBy(_.getFileName.toString).map { p =>
-      val in = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new HPath(p.toString), new Configuration()))
-      val footer = try in.getFooter finally in.close()
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(new HPath(p.toString), hadoopDefaults),
+        ParquetMetadataConverter.NO_FILTER)
       val blocks = footer.getBlocks.asScala.toSeq
       FileGroups(p.toString, footer.getFileMetaData.getSchema,
         blocks, blocks.size)
@@ -2922,14 +2820,6 @@ private[sources] object GroupParquetIo {
     case _ => false
   }
 
-  /** Drop row groups whose column statistics cannot satisfy the
-    * pushed predicate — parquet's own StatisticsFilter, applied at
-    * the DRIVER so a pruned group never becomes a task. Evaluated
-    * PER FILE: an atom on a column the file lacks (pre-evolution
-    * file) reads as null — IsNull keeps the file (atom dropped),
-    * anything else refutes it outright. A predicate the translation
-    * cannot express simply skips pruning (the executor-side record
-    * filter still applies it). */
   /** The parquet primitive a Catalyst type is STORED as by this
     * writer — the vocabulary of the type-widening check. */
   private[sources] def storedPrimitive(t: DataType): Option[PrimitiveTypeName] =
@@ -2949,8 +2839,7 @@ private[sources] object GroupParquetIo {
     * TYPE-WIDENED table a pre-widening file stores INT32/FLOAT under a
     * BIGINT/DOUBLE manifest column — parquet-mr rejects a long/double
     * predicate over such a column, so mismatched atoms must skip the
-    * native stats/page path for this file (the caller evaluates them
-    * itself on assembled, widened rows). */
+    * row-group stats filter for this file. */
   private[sources] def fileTypeMatched(a: Filter, schema: MessageType,
                                        types: Map[String, DataType]): Boolean =
     a.references.forall { r =>
@@ -2962,6 +2851,14 @@ private[sources] object GroupParquetIo {
       }
     }
 
+  /** Drop row groups whose column statistics cannot satisfy the
+    * pushed predicate — parquet's own StatisticsFilter, applied at
+    * the DRIVER so a pruned group never becomes a task. Evaluated
+    * PER FILE: an atom on a column the file lacks (pre-evolution
+    * file) reads as null — IsNull keeps the file (atom dropped),
+    * anything else refutes it outright. A predicate the translation
+    * cannot express simply skips pruning (Spark's Filter above the
+    * scan still applies it). */
   def pruneByStats(footers: Seq[FileGroups], pushed: Array[Filter],
                    filterTypes: Map[String, DataType]): Seq[FileGroups] = {
     val as = pushed.flatMap(atoms)
@@ -2972,7 +2869,7 @@ private[sources] object GroupParquetIo {
       if (absent.exists(a => !nullSatisfied(a))) fg.copy(kept = Seq.empty)
       // atoms over columns this file stores NARROWER than declared
       // (pre-widening files) cannot drive the native row-group filter —
-      // conservatively keep the groups; the reader still applies them
+      // conservatively keep the groups; Spark's Filter still applies them
       else compile(present.filter(fileTypeMatched(_, fg.schema, filterTypes)),
           filterTypes) match {
         case None => fg
@@ -2987,8 +2884,8 @@ private[sources] object GroupParquetIo {
   /** Plan one input partition PER SURVIVING ROW GROUP: each partition
     * carries the byte range `[startingPos, startingPos +
     * compressedSize)` whose midpoint is inside exactly that group
-    * (parquet-mr's own range→group rule, so the executor-side
-    * `withFileRange` selects it and nothing else). Files are the
+    * (parquet-mr's own range→group rule, so the reader's ranged
+    * footer read selects it and nothing else). Files are the
     * durability unit, row groups the parallelism unit — a compacted
     * 1 GB file still fans out to its ~8 groups instead of capping the
     * stage at file count. */
@@ -3463,10 +3360,10 @@ private[sources] object GroupParquetIo {
       case StringType => FilterApi.eq(FilterApi.binaryColumn(a), null.asInstanceOf[Binary])
     }
 
-  /** Catalyst schema → parquet MessageType for the WRITE side — the
-    * exact mirror of the reader's type set, so anything this writer
-    * commits the reader (and Spark's own vectorized parquet scan) reads
-    * back losslessly. Fails loudly on any type outside the set — at
+  /** Catalyst schema → parquet MessageType for the WRITE side: the
+    * standard parquet encodings Spark's vectorized reader decodes back
+    * losslessly (VARIANT is graft's framed BINARY, which the scan
+    * decodes itself). Fails loudly on any type outside the set — at
     * write-BUILD time (driver), before a single task launches. */
   def writeMessageType(schema: StructType): MessageType = {
     require(schema.nonEmpty, "graft-versioned: cannot write a zero-column schema")

@@ -174,6 +174,46 @@ class DeletionVectorSpec extends AnyFunSuite with SparkSpec {
     assert(got === (5L to 15L).filterNot(_ == 10L))
   }
 
+  test("DV masking across row groups: positions past a split file's first group") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft_dv_rg_").toString
+    // one physical file with MANY row groups, written in id order, so a
+    // row's id is its ordinal in the file
+    spark.range(0, 200000).selectExpr("id", "id * 7 AS v")
+      .coalesce(1).write.option("parquet.block.size", "65536")
+      .parquet(s"$root/v=0")
+    val files = Versioned.dataFiles(java.nio.file.Paths.get(root, "v=0"))
+    assert(files.size === 1)
+    val blocks = GroupParquetIo.readFooters(files).head.kept
+    assert(blocks.size > 2, s"expected many row groups, got ${blocks.size}")
+    val firstGroupRows = blocks.head.getRowCount
+    // every deleted position lies in the second or a later row group
+    def doomed(c: org.apache.spark.sql.Column) =
+      c >= firstGroupRows && (c % 997 === 3L || c >= 199990L)
+    VersionedWriteIo.deleteViaDv(spark, root, doomed(col("id")))
+    assert(DeletionVectors.hasDvs(java.nio.file.Paths.get(root, "v=1")))
+    val survivors = spark.range(0, 200000).toDF("id").filter(!doomed(col("id")))
+    val nSurvivors = survivors.count()
+    assert(nSurvivors < 200000L - 10L)
+    val back = spark.read.format("graft-versioned").load(root)
+    assert(back.rdd.getNumPartitions > 1,
+      "the DV'd file must still fan out per row group")
+    def sameIds(a: org.apache.spark.sql.DataFrame,
+                b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.count() === b.count())
+      assert(a.select("id").exceptAll(b.select("id")).count() === 0L)
+      assert(b.select("id").exceptAll(a.select("id")).count() === 0L)
+    }
+    sameIds(back, survivors)
+    // `_pos` is the row's ordinal in the file on every surviving row
+    val withPos = back.select(col("id"), col("_pos"))
+    assert(withPos.count() === nSurvivors)
+    assert(withPos.filter(col("id") =!= col("_pos")).count() === 0L)
+    // a filtered read returns exactly the filtered survivors
+    sameIds(back.filter(col("v") >= 7L * 150000L),
+      survivors.filter(col("id") >= 150000L))
+  }
+
   test("DV DELETE feeds the change feed: deleted keys appear as 'removed'") {
     val (t, root) = freshTable(extraProps = ", 'changeFeedKeys'='id'")
     spark.sql(s"DELETE FROM $t WHERE id < 3")

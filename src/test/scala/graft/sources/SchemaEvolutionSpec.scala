@@ -382,9 +382,9 @@ class SchemaEvolutionSpec extends AnyFunSuite with SparkSpec {
       .mode("append").save(root)
     assert(graft.operators.Versioned.versions(root) === Seq(0L, 1L))
     // v=1 holds MIXED footers (hard-linked v=0 files + the new ones) —
-    // a path-based root reads the full evolved schema via mergeSchema
-    val cur = graft.operators.Versioned.readSnapshot(spark, root, 1L,
-      mergeSchema = true)
+    // a path-based root reads the full evolved schema (the union of
+    // the snapshot's footers)
+    val cur = graft.operators.Versioned.readSnapshot(spark, root, 1L)
     assert(cur.schema.fieldNames.toSeq.sorted === Seq("id", "tag", "v"))
     assert(cur.count() === 25L)
     assert(cur.where("tag IS NULL").count() === 20L)

@@ -136,6 +136,27 @@ class VersionedWriteSpec extends AnyFunSuite with SparkSpec {
       s"sibling predicates still push; variant ones must not:\n$plan")
   }
 
+  test("Versioned.read of a VARIANT table returns VARIANT, same values as " +
+      "the DSv2 read") {
+    val root = freshRoot("variantread")
+    spark.range(4).selectExpr("id",
+      "parse_json(to_json(struct(id * 2 AS n, concat('s', id) AS s))) " +
+        "AS payload")
+      .write.format("graft-versioned").option("create", "true")
+      .mode("append").save(root)
+    val viaRead = Versioned.read(spark, root)
+    assert(viaRead.schema("payload").dataType ===
+      org.apache.spark.sql.types.VariantType)
+    def values(d: DataFrame): Seq[String] =
+      d.selectExpr("id", "variant_get(payload, '$.n', 'bigint')",
+          "variant_get(payload, '$.s', 'string')", "to_json(payload)")
+        .orderBy("id").collect().map(_.toString).toSeq
+    val expected =
+      values(spark.read.format("graft-versioned").load(root))
+    assert(values(viaRead) === expected)
+    assert(expected.head === """[0,0,s0,{"n":0,"s":"s0"}]""")
+  }
+
   test("fail-loud: append schema drift, unsupported type, write to pinned snapshot") {
     val root = freshRoot("loud")
     df((1L, 100L, "a")).write.format("graft-versioned")
