@@ -83,10 +83,15 @@ object Cdc {
     */
   def snapshotDiff(before: DataFrame, after: DataFrame,
                    keyCols: Seq[String], payload: Seq[String]): DataFrame = {
-    val b = payload.foldLeft(before)((df, c) => df.withColumnRenamed(c, s"old_$c"))
-      .withColumn("__in_b", lit(1))
-    val a = payload.foldLeft(after)((df, c) => df.withColumnRenamed(c, s"new_$c"))
-      .withColumn("__in_a", lit(1))
+    // one projection per side (each Dataset is analyzed eagerly):
+    // payload columns renamed in place, then the side's presence marker
+    def side(df: DataFrame, prefix: String, marker: String): DataFrame =
+      df.select(df.columns.toSeq.map { c =>
+        val ref = df.col(s"`${c.replace("`", "``")}`")
+        if (payload.contains(c)) ref.as(prefix + c) else ref
+      } :+ lit(1).as(marker): _*)
+    val b = side(before, "old_", "__in_b")
+    val a = side(after, "new_", "__in_a")
     val joined = b.join(a, keyCols, "full_outer")
     val changed = payload.map(c =>
       !(col(s"old_$c") <=> col(s"new_$c"))).reduce(_ || _)

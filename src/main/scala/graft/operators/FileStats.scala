@@ -5,13 +5,15 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.sources._
+
+import graft.sources.GroupParquetIo
 
 /** Per-commit FILE STATISTICS sidecar (`_graft_stats`) — the manifest
   * half of data skipping. The commit records, for every data file it
@@ -69,9 +71,9 @@ object FileStats {
     * granularity: min of mins, max of maxes, sum of null counts. A
     * row group missing a statistic poisons only that component. */
   def collect(file: Path): FileStat = {
-    val in = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(file.toString), new Configuration()))
-    val footer = try in.getFooter finally in.close()
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromPath(new HPath(file.toString), GroupParquetIo.hadoopDefaults),
+      ParquetMetadataConverter.NO_FILTER)
     val blocks = footer.getBlocks.asScala.toSeq
     val schema = footer.getFileMetaData.getSchema
     val rows = blocks.map(_.getRowCount).sum

@@ -2,8 +2,14 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
+
+import graft.sources.GroupParquetIo
 
 /** Data-layout clustering for scan pruning — the write-side half of the
   * 100 TB story. Range-partitioning by a single column gives perfect
@@ -169,25 +175,22 @@ object Layout {
     * assumed. */
   def rowGroupLongStats(dir: java.nio.file.Path,
                         column: String): Seq[(Long, Long, Long)] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     Versioned.dataFiles(dir).sortBy(_.getFileName.toString).flatMap { f =>
-      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), conf))
-      try {
-        in.getFooter.getBlocks.asScala.toSeq.map { block =>
-          val col = block.getColumns.asScala
-            .find(_.getPath.toDotString == column)
-            .getOrElse(throw new IllegalArgumentException(
-              s"column '$column' not in ${f.getFileName}"))
-          val st = col.getStatistics
-          require(st != null && !st.isEmpty,
-            s"no statistics for '$column' in ${f.getFileName}")
-          (st.genericGetMin.asInstanceOf[Number].longValue(),
-           st.genericGetMax.asInstanceOf[Number].longValue(),
-           block.getRowCount)
-        }
-      } finally in.close()
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(new HPath(f.toString), GroupParquetIo.hadoopDefaults),
+        ParquetMetadataConverter.NO_FILTER)
+      footer.getBlocks.asScala.toSeq.map { block =>
+        val col = block.getColumns.asScala
+          .find(_.getPath.toDotString == column)
+          .getOrElse(throw new IllegalArgumentException(
+            s"column '$column' not in ${f.getFileName}"))
+        val st = col.getStatistics
+        require(st != null && !st.isEmpty,
+          s"no statistics for '$column' in ${f.getFileName}")
+        (st.genericGetMin.asInstanceOf[Number].longValue(),
+         st.genericGetMax.asInstanceOf[Number].longValue(),
+         block.getRowCount)
+      }
     }
   }
 

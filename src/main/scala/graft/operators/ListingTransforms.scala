@@ -21,9 +21,18 @@ import graft.functions.{PersianText, RelativeDates}
   * fields it shares with the canonical schema are handled in
   * `kilidEnvelope`.
   *
-  * At scale each transform is a single narrow projection over the raw
+  * At scale each transform is a stack of narrow projections over the raw
   * JSON column — no shuffle, fully codegen'd, safe to fuse with the
   * dedup/sink stages downstream.
+  *
+  * The rule every transform here follows: a `Column` value is an
+  * expression tree, not a computed result, so a `Column` referenced
+  * more than once is inlined at every reference (and nested references
+  * multiply). A subexpression that is read more than once and is not
+  * trivial is computed once, as a column of an intermediate projection
+  * (a "stage"), and later expressions read it by attribute. The analyzed
+  * tree's size is what Catalyst pays per call and per streaming
+  * micro-batch; `ListingTransformsSpec` bounds divar's.
   */
 object ListingTransforms {
 
@@ -35,10 +44,8 @@ object ListingTransforms {
 
   /** Last array element matching `p` (reference loops let later matches
     * overwrite earlier ones), else null. */
-  private def lastWhere(arr: Column, p: Column => Column): Column = {
-    val f = filter(arr, p)
-    get(f, size(f) - 1)
-  }
+  private def lastWhere(arr: Column, p: Column => Column): Column =
+    try_element_at(filter(arr, p), lit(-1))
 
   private def emptyStrArray: Column = array().cast(ArrayType(StringType))
 
@@ -189,17 +196,15 @@ object ListingTransforms {
   /** divar raw JSON (string col) → canonical listing columns
     * (divar_transformer.py:89-638). `refTime` replaces datetime.now().
     *
-    * Structured as STAGED projections: the shared navigation roots
-    * (LIST_DATA widgets, group-info items, modal widget list, the money
-    * fallbacks) are materialized as intermediate columns, so the ~50
-    * output expressions reference attributes instead of each inlining
-    * its own copy of the section-filter subtrees. With everything
-    * inlined the analyzed tree carried hundreds of duplicated
-    * higher-order-function subtrees and Catalyst planning alone cost
-    * ~0.7s per query (flat across data scales); staging cuts the tree
-    * ~10× while producing the identical result. CollapseProject keeps
-    * the stages because the shared expressions are non-cheap and
-    * multiply referenced. */
+    * Structured as STAGED projections (the rule above): the navigation
+    * roots, the normalized modal list, each last-match lookup of the
+    * feature fold, the money fallbacks, the geo chains, the regex
+    * matches and the strings the numeric parsers read twice are each
+    * computed once, as a column of an intermediate projection. Staged,
+    * the analyzed plan holds 3,105 expression nodes; with these inlined
+    * it held 23,098 (`ListingTransformsSpec` guards ≤ 6,000).
+    * CollapseProject keeps the stages because the shared expressions
+    * are non-cheap and multiply referenced. */
   def divarTransform(raw: DataFrame, jsonCol: String, urlCol: String,
                      refTime: Column): DataFrame = {
     val parsed = raw.withColumn("__d", from_json(col(jsonCol), divarSchema))
@@ -213,6 +218,9 @@ object ListingTransforms {
 
     def sectionByName(name: String): Column =
       firstWhere(sections, s => s("section_name") === name)
+
+    // "N از M" (floor N of M), matched in the floor row and the description
+    val ofTotal = "(\\d+)\\s*از\\s*(\\d+)"
 
     // ---- stage 1: per-section navigation roots (one filter each)
     val s1 = parsed.select(
@@ -245,7 +253,17 @@ object ListingTransforms {
       lastWhere(W, w =>
         w("widget_type") === "UNEXPANDABLE_ROW" && w("data")("title") === title
       )("data")("value")
-    val groupFeatureRow = firstWhere(W, w => w("widget_type") === "GROUP_FEATURE_ROW")
+
+    // ------------- geo (seo first, then MAP fuzzy/exact)
+    // All the reference's geo chains are `a or b or ...` — Python
+    // truthiness, so empty strings fall through like nulls; the MAP
+    // branch (including radius!) is consulted only when the seo lat or
+    // lon is missing, and inside it the seo value survives as the
+    // per-coordinate fallback (divar_transformer.py:563-595).
+    val seoGeo = d("seo")("post_seo_schema")("geo")
+    val loc = col("__mapw")("data")("location")
+    val fuzzy = loc("fuzzy_data")
+    val exact = loc("exact_data")
 
     // ---- stage 2: widget-level roots (reference __widgets by attribute)
     val s2 = s1.select(col("*"),
@@ -253,9 +271,7 @@ object ListingTransforms {
         filter(W, w =>
           w("widget_type") === "GROUP_INFO_ROW" && w("data")("items").isNotNull),
         w => w("data")("items"))).as("__ginfo"),
-      groupFeatureRow("data")("items").as("__gfi"),
-      groupFeatureRow("data")("action")("payload")("modal_page")("widget_list")
-        .as("__modal"),
+      firstWhere(W, w => w("widget_type") === "GROUP_FEATURE_ROW")("data").as("__gfr"),
       firstWhere(W, w => w("widget_type") === "RENT_SLIDER").as("__slider"),
       unexpandable("قیمت کل")("data")("value").as("__priceRow"),
       rowValue("ودیعه").as("__creditRow"),
@@ -267,25 +283,25 @@ object ListingTransforms {
       // (divar_transformer.py:550-556)
       lastWhere(W, w =>
         w("widget_type") === "UNEXPANDABLE_ROW" &&
-          w("data")("title") === "نوع ملک").as("__propW"))
+          w("data")("title") === "نوع ملک").as("__propW"),
+      truthyOr(seoGeo("latitude"), seoGeo("lat")).as("__seoLat"),
+      truthyOr(seoGeo("longitude"), seoGeo("lng"), seoGeo("long")).as("__seoLon"),
+      coalesce(fuzzy("point"), fuzzy("center")).as("__fuzzyPt"),
+      regexp_extract(PersianText.persianToEnglishDigits(col("__desc")), ofTotal, 2)
+        .as("__descTotal"))
 
     val groupInfoItems = col("__ginfo")
-    val groupFeatureItems = col("__gfi")
-    val modalFeatures = col("__modal")
     val breadcrumbTitle = col("__bc")
-    val descriptionText = col("__desc")
     val subtitle = col("__subtitle")
     val rentSlider = col("__slider")
     val creditRow = col("__creditRow")
     val rentRow = col("__rentRow")
+    val rawModal = col("__gfr")("action")("payload")("modal_page")("widget_list")
 
     def groupInfoValue(titleContains: String): Column =
       firstWhere(groupInfoItems, it => it("title").contains(titleContains))("value")
-
-    // `if subtitle:` — an EMPTY subtitle yields no publish time (null),
-    // it must not fall into text_to_date's refTime default
-    val createdAtMonth = when(subtitle.isNotNull && subtitle =!= "",
-      RelativeDates.textToDateDivar(trim(get(split(subtitle, " در "), lit(0))), refTime))
+    val modalValue: String => Column = title =>
+      firstWhere(rawModal, m => m("data")("title") === title)("data")("value")
 
     // ------------- price block
     val priceMode =
@@ -317,15 +333,80 @@ object ListingTransforms {
       val cleaned = trim(regexp_replace(regexp_replace(en, "[‏،]", ""), " تومان", ""))
       when(regexp_replace(cleaned, "\\.", "").rlike("^\\d+$"), cleaned.try_cast(DoubleType))
     }
-    // ---- stage 3: money fallbacks (each referenced by several outputs)
+
+    // `mdata.get("title","") or mdata.get("text","") or ""` — Python
+    // truthiness: an EMPTY title falls through to text, not just a null
+    // one (divar_transformer.py:513-514)
+    def modalTitle(mw: Column): Column = {
+      val t = mw("data")("title")
+      val x = mw("data")("text")
+      when(t.isNotNull && t =!= "", t)
+        .otherwise(when(x.isNotNull && x =!= "", x).otherwise(lit("")))
+    }
+
+    val seoLat = col("__seoLat")
+    val seoLon = col("__seoLon")
+    val fuzzyPoint = col("__fuzzyPt")
+    val mapNeeded = (seoLat.isNull || seoLon.isNull) && col("__mapw").isNotNull
+    def mapCoord(fromFuzzy: Column, fromExact: Column, seo: Column): Column =
+      when(mapNeeded,
+        when(fuzzy.isNotNull, coalesce(fromFuzzy, seo))
+          .when(exact.isNotNull, coalesce(fromExact, seo))
+          .otherwise(seo))
+        .otherwise(seo)
+
+    // ---- stage 3: item-level roots — the feature items, the modal list
+    // normalized once to (widget_type, title, value), the modal lookups,
+    // the money fallbacks (each referenced by several outputs), the
+    // group-info values read more than once, and the geo strings
     val s3 = s2.select(col("*"),
+      col("__gfr")("items").as("__gfi"),
+      transform(rawModal, mw => struct(
+        mw("widget_type").as("widget_type"),
+        modalTitle(mw).as("title"),
+        mw("data")("value").as("value"))).as("__modal"),
+      modalValue("تعداد واحد در طبقه").as("__unitRaw"),
       coalesce(
         when(creditRow.isNotNull, cleanedMoney(creditRow)),
         when(truthyNum(webCredit), webCredit)).as("__fbCredit"),
       coalesce(
         when(rentRow.isNotNull && rentRow.contains("رایگان"), lit(0.0))
           .when(rentRow.isNotNull, cleanedMoney(rentRow)),
-        when(truthyNum(webRent), webRent)).as("__fbRent"))
+        when(truthyNum(webRent), webRent)).as("__fbRent"),
+      groupInfoValue("اتاق").as("__rooms"),
+      // construction year: EXACT title match and no break → last item
+      // wins (divar_transformer.py:542-548), unlike متراژ/اتاق which use
+      // substring-contains with break (first wins)
+      lastWhere(groupInfoItems, it => it("title") === "ساخت")("value").as("__built"),
+      PersianText.persianToEnglishDigits(col("__floorRaw")).as("__floorEn"),
+      mapCoord(truthyOr(fuzzyPoint("latitude"), fuzzyPoint("lat")),
+        truthyOr(exact("latitude"), exact("lat")), seoLat).as("__lat"),
+      mapCoord(truthyOr(fuzzyPoint("longitude"), fuzzyPoint("lng")),
+        truthyOr(exact("longitude"), exact("lng")), seoLon).as("__lon"),
+      when(mapNeeded,
+        when(fuzzy.isNotNull, truthyOr(fuzzy("radius"), fuzzy("r")))
+          .when(exact.isNotNull, lit(null).cast(StringType))
+          .otherwise(loc("radius"))).as("__radius"))
+
+    val groupFeatureItems = col("__gfi")
+    val modalFeatures = col("__modal")
+
+    // ---- stage 4 collects what the outputs below read more than once
+    // (the feature fold's last-match roots, the regex matches, the
+    // strings the numeric parsers read twice): `staged` registers an
+    // expression and returns its attribute, so each is computed once
+    val stage4 = scala.collection.mutable.ArrayBuffer.empty[Column]
+    def staged(c: Column): Column = {
+      val name = s"__r${stage4.size}"
+      stage4 += c.as(name)
+      col(name)
+    }
+
+    // `if subtitle:` — an EMPTY subtitle yields no publish time (null),
+    // it must not fall into text_to_date's refTime default
+    val createdAtMonth = when(subtitle.isNotNull && subtitle =!= "",
+      RelativeDates.textToDateDivar(
+        staged(trim(get(split(subtitle, " در "), lit(0)))), refTime))
 
     val fbCredit = col("__fbCredit")
     val fbRent = col("__fbRent")
@@ -365,68 +446,55 @@ object ListingTransforms {
     val buildingSize = groupInfoValue("متراژ")
 
     val deedWidget = col("__deedW")
-    val modalValue: String => Column = title =>
-      firstWhere(modalFeatures, m => m("data")("title") === title)("data")("value")
     val rawDeed = when(deedWidget.isNotNull, deedWidget("data")("value"))
       .otherwise(modalValue("سند"))
     val deedType = element_at(deedTypeMap, rawDeed)
 
-    val rawFloor = col("__floorRaw")
     // Python's re.\d matches Persian digits — translate first for parity.
-    val rawFloorEn = PersianText.persianToEnglishDigits(rawFloor)
+    val rawFloorEn = col("__floorEn")
+    val floorOf = staged(regexp_extract(rawFloorEn, ofTotal, 1))
     val floorStr =
-      when(rawFloor.isin("همکف", "هم‌کف"), "0")
-        .when(regexp_extract(rawFloorEn, "(\\d+)\\s*از\\s*(\\d+)", 1) =!= "",
-          regexp_extract(rawFloorEn, "(\\d+)\\s*از\\s*(\\d+)", 1))
+      when(col("__floorRaw").isin("همکف", "هم‌کف"), "0")
+        .when(floorOf =!= "", floorOf)
         .when(rawFloorEn.try_cast(DoubleType).isNotNull, rawFloorEn)
 
-    val roomsRaw = groupInfoValue("اتاق")
+    val roomsRaw = col("__rooms")
     val roomsStr = when(roomsRaw === "بدون اتاق", "0")
       .when(roomsRaw === "+۴", "5")
       .otherwise(roomsRaw)
 
-    val descriptionEn = PersianText.persianToEnglishDigits(descriptionText)
+    val floorTotal = staged(regexp_extract(rawFloorEn, ofTotal, 2))
+    val descTotal = col("__descTotal")
     val totalFloors = coalesce(
-      when(regexp_extract(rawFloorEn, "(\\d+)\\s*از\\s*(\\d+)", 2) =!= "",
-        regexp_extract(rawFloorEn, "(\\d+)\\s*از\\s*(\\d+)", 2)),
-      when(regexp_extract(descriptionEn, "(\\d+)\\s*از\\s*(\\d+)", 2) =!= "",
-        regexp_extract(descriptionEn, "(\\d+)\\s*از\\s*(\\d+)", 2)))
+      when(floorTotal =!= "", floorTotal),
+      when(descTotal =!= "", descTotal))
 
-    val unitRaw = modalValue("تعداد واحد در طبقه")
-    val unitEn = PersianText.persianToEnglishDigits(unitRaw)
-    val unitPerFloor = when(
-        regexp_extract(unitEn, "بیشتر از\\s*(\\d+)", 1) =!= "",
-        (regexp_extract(unitEn, "بیشتر از\\s*(\\d+)", 1).try_cast(LongType) + 1)
-          .cast(StringType))
+    val unitRaw = col("__unitRaw")
+    val unitMore = staged(regexp_extract(
+      PersianText.persianToEnglishDigits(unitRaw), "بیشتر از\\s*(\\d+)", 1))
+    val unitPerFloor = when(unitMore =!= "",
+        (unitMore.try_cast(LongType) + 1).cast(StringType))
       .otherwise(unitRaw)
 
     // ------------- feature fold (group items pass, then modal override)
-    // `mdata.get("title","") or mdata.get("text","") or ""` — Python
-    // truthiness: an EMPTY title falls through to text, not just a null
-    // one (divar_transformer.py:513-514)
-    def modalTitle(mw: Column): Column = {
-      val t = mw("data")("title")
-      val x = mw("data")("text")
-      when(t.isNotNull && t =!= "", t)
-        .otherwise(when(x.isNotNull && x =!= "", x).otherwise(lit("")))
-    }
-
-    def featureBool(keyword: String): Column = {
-      val g = lastWhere(groupFeatureItems, it => it("title").contains(keyword))
-      val gVal = when(g.isNotNull,
+    def groupBool(g: Column): Column =
+      when(g.isNotNull,
         when(g("title").contains("ندارد"), false)
           .when(g("available").isNotNull, g("available"))
           .otherwise(true))
-      val m = lastWhere(modalFeatures, mw => modalTitle(mw).contains(keyword))
+
+    def featureBool(keyword: String): Column = {
+      val g = staged(lastWhere(groupFeatureItems, it => it("title").contains(keyword)))
+      val m = staged(lastWhere(modalFeatures, mw => mw("title").contains(keyword)))
       val mVal = when(m.isNotNull,
-        when(modalTitle(m).contains("ندارد"), false).otherwise(true))
-      coalesce(mVal, gVal)
+        when(m("title").contains("ندارد"), false).otherwise(true))
+      coalesce(mVal, groupBool(g))
     }
 
     def modalEnum(keyword: String, mapping: Column): Column = {
-      val m = lastWhere(modalFeatures, mw => modalTitle(mw).contains(keyword))
+      val m = staged(lastWhere(modalFeatures, mw => mw("title").contains(keyword)))
       when(m.isNotNull,
-        coalesce(element_at(mapping, modalTitle(m)), lit("unselect")))
+        coalesce(element_at(mapping, m("title")), lit("unselect")))
     }
 
     // enum-string columns also receive the boolean feature pass
@@ -442,39 +510,32 @@ object ListingTransforms {
     def modalInterleaved(enumTrigger: String, mapping: Column, boolKeyword: String,
                          enumWidget: Option[String] = None): Column = {
       def isEnum(mw: Column): Column = {
-        val t = modalTitle(mw).contains(enumTrigger)
+        val t = mw("title").contains(enumTrigger)
         enumWidget.map(w => mw("widget_type") === w && t).getOrElse(t)
       }
-      val m = lastWhere(modalFeatures,
-        mw => isEnum(mw) || modalTitle(mw).contains(boolKeyword))
-      val g = lastWhere(groupFeatureItems, it => it("title").contains(boolKeyword))
-      val gVal = when(g.isNotNull,
-        when(g("title").contains("ندارد"), false)
-          .when(g("available").isNotNull, g("available"))
-          .otherwise(true)).cast(StringType)
+      val m = staged(lastWhere(modalFeatures,
+        mw => isEnum(mw) || mw("title").contains(boolKeyword)))
+      val g = staged(lastWhere(groupFeatureItems, it => it("title").contains(boolKeyword)))
       val mVal = when(isEnum(m),
-          coalesce(element_at(mapping, modalTitle(m)), lit("unselect")))
-        .otherwise(when(modalTitle(m).contains("ندارد"), lit(false))
+          coalesce(element_at(mapping, m("title")), lit("unselect")))
+        .otherwise(when(m("title").contains("ندارد"), lit(false))
           .otherwise(lit(true)).cast(StringType))
-      when(m.isNotNull, mVal).otherwise(gVal)
+      when(m.isNotNull, mVal).otherwise(groupBool(g).cast(StringType))
     }
 
+    def modalRow(title: String): Column =
+      staged(lastWhere(modalFeatures, mw =>
+        mw("widget_type") === "UNEXPANDABLE_ROW" && mw("title") === title))
     val isRebuilt = {
-      val m = lastWhere(modalFeatures, mw =>
-        mw("widget_type") === "UNEXPANDABLE_ROW" && modalTitle(mw) === "وضعیت واحد")
-      when(m.isNotNull, m("data")("value") === "بازسازی شده")
+      val m = modalRow("وضعیت واحد")
+      when(m.isNotNull, m("value") === "بازسازی شده")
     }
     val buildingDirection = {
-      val m = lastWhere(modalFeatures, mw =>
-        mw("widget_type") === "UNEXPANDABLE_ROW" && modalTitle(mw) === "جهت ساختمان")
+      val m = modalRow("جهت ساختمان")
       when(m.isNotNull,
-        coalesce(element_at(buildingDirectionMap, m("data")("value")), lit("unselect")))
+        coalesce(element_at(buildingDirectionMap, m("value")), lit("unselect")))
     }
-    // construction year: EXACT title match and no break → last item wins
-    // (divar_transformer.py:542-548), unlike متراژ/اتاق which use
-    // substring-contains with break (first wins)
-    val constructionRaw =
-      lastWhere(groupInfoItems, it => it("title") === "ساخت")("value")
+    val constructionRaw = col("__built")
     val constructionYear = when(
         PersianText.persianToEnglishDigits(constructionRaw).contains("قبل"), "-1370")
       .otherwise(constructionRaw)
@@ -492,42 +553,8 @@ object ListingTransforms {
       concat(coalesce(seoImages, emptyStrArray), coalesce(carouselImages, emptyStrArray)),
       i => i.isNotNull && i =!= ""))
 
-    // ------------- geo (seo first, then MAP fuzzy/exact)
-    // All the reference's geo chains are `a or b or ...` — Python
-    // truthiness, so empty strings fall through like nulls; the MAP
-    // branch (including radius!) is consulted only when the seo lat or
-    // lon is missing, and inside it the seo value survives as the
-    // per-coordinate fallback (divar_transformer.py:563-595).
-    val seoGeo = d("seo")("post_seo_schema")("geo")
-    val seoLat = truthyOr(seoGeo("latitude"), seoGeo("lat"))
-    val seoLon = truthyOr(seoGeo("longitude"), seoGeo("lng"), seoGeo("long"))
-    val mapWidget = col("__mapw")
-    val mapNeeded = (seoLat.isNull || seoLon.isNull) && mapWidget.isNotNull
-    val loc = mapWidget("data")("location")
-    val fuzzy = loc("fuzzy_data")
-    val exact = loc("exact_data")
-    val fuzzyPoint = coalesce(fuzzy("point"), fuzzy("center"))
-    val lat = when(mapNeeded,
-      when(fuzzy.isNotNull,
-        coalesce(truthyOr(fuzzyPoint("latitude"), fuzzyPoint("lat")), seoLat))
-        .when(exact.isNotNull,
-          coalesce(truthyOr(exact("latitude"), exact("lat")), seoLat))
-        .otherwise(seoLat))
-      .otherwise(seoLat)
-    val lon = when(mapNeeded,
-      when(fuzzy.isNotNull,
-        coalesce(truthyOr(fuzzyPoint("longitude"), fuzzyPoint("lng")), seoLon))
-        .when(exact.isNotNull,
-          coalesce(truthyOr(exact("longitude"), exact("lng")), seoLon))
-        .otherwise(seoLon))
-      .otherwise(seoLon)
-    val radius = when(mapNeeded,
-      when(fuzzy.isNotNull, truthyOr(fuzzy("radius"), fuzzy("r")))
-        .when(exact.isNotNull, lit(null).cast(StringType))
-        .otherwise(loc("radius")))
-
     import PersianText.{toDoubleOrNull, toLongOrNull}
-    s3.select(
+    val outputs = Seq(
       col(urlCol).as("content_url"),
       refTime.as("created_at"),
       truthyOr(d("analytics")("cat2")).as("cat2_slug"),
@@ -544,7 +571,7 @@ object ListingTransforms {
       lit(null).cast(StringType).as("rent_to_single"),
       rentType.as("rent_type"),
       priceMode.as("price_mode"),
-      toLongOrNull(priceValueStr).as("price_value"),
+      toLongOrNull(staged(priceValueStr)).as("price_value"),
       creditMode.as("credit_mode"),
       creditValue.as("credit_value"),
       rentCreditTransform.as("rent_credit_transform"),
@@ -554,7 +581,7 @@ object ListingTransforms {
       transformableRent.as("transformable_rent"),
       transformedRent.as("transformed_rent"),
       toDoubleOrNull(landSize).as("land_size"),
-      toDoubleOrNull(buildingSize).as("building_size"),
+      toDoubleOrNull(staged(buildingSize)).as("building_size"),
       deedType.as("deed_type"),
       lit(null).cast(BooleanType).as("has_business_deed"),
       toLongOrNull(floorStr).cast(IntegerType).as("floor"),
@@ -591,10 +618,11 @@ object ListingTransforms {
       lit(null).cast(LongType).as("rent_price_on_regular_days"),
       lit(null).cast(LongType).as("rent_price_on_special_days"),
       lit(null).cast(LongType).as("rent_price_at_weekends"),
-      toDoubleOrNull(lat).as("location_latitude"),
-      toDoubleOrNull(lon).as("location_longitude"),
-      toDoubleOrNull(radius).as("location_radius"),
+      toDoubleOrNull(col("__lat")).as("location_latitude"),
+      toDoubleOrNull(col("__lon")).as("location_longitude"),
+      toDoubleOrNull(col("__radius")).as("location_radius"),
       images.as("images"))
+    s3.select(col("*") +: stage4.toSeq: _*).select(outputs: _*)
   }
 
   // ------------------------------------------------------------- sheypoor
@@ -634,23 +662,37 @@ object ListingTransforms {
     def truthy(c: Column): Column = c.isNotNull && c =!= ""
     def orNone(c: Column): Column = when(truthy(c), c)
 
-    val b1 = get(attrs("categories"), lit(0))("name")
-    val b2 = get(attrs("categories"), lit(1))("name")
+    val locParts = split(attrs("location"), "،")
+
+    // ---- stage 1: the values read more than once (the divarTransform
+    // rule: a Column referenced twice is inlined twice)
+    val s1 = parsed.select(col(urlCol), d,
+      get(attrs("categories"), lit(0))("name").as("__b1"),
+      get(attrs("categories"), lit(1))("name").as("__b2"),
+      trim(get(locParts, lit(0))).as("__p0"),
+      trim(get(locParts, lit(1))).as("__p1"),
+      get(attrs("price"), lit(0)).as("__price"),
+      getAttr("نوع سند").as("__deed"))
+
+    val b1 = col("__b1")
+    val b2 = col("__b2")
     val breadCrumb = when(truthy(b1),
       when(truthy(b2), concat(b1, lit("/"), b2)).otherwise(b1))
-
-    val locParts = split(attrs("location"), "،")
-    val p0 = trim(get(locParts, lit(0)))
-    val p1 = trim(get(locParts, lit(1)))
 
     val publishTime = when(attrs("timePassedLabel").isNotNull,
       RelativeDates.textToDateSheypoor(attrs("timePassedLabel"), refTime))
 
-    val p = get(attrs("price"), lit(0))
+    val p = col("__price")
     val label = trim(coalesce(p("label"), lit("")))
-    val amount = digitsOnlyDouble(p("amount"))
-    val isCredit = p.isNotNull && label.isin("رهن", "رهن کامل")
-    val isRent = p.isNotNull && label === "اجاره"
+    // ---- stage 2: the price kind and amount
+    val s2 = s1.select(col("*"),
+      (p.isNotNull && label.isin("رهن", "رهن کامل")).as("__isCredit"),
+      (p.isNotNull && label === "اجاره").as("__isRent"),
+      digitsOnlyDouble(p("amount")).as("__amount"))
+
+    val amount = col("__amount")
+    val isCredit = col("__isCredit")
+    val isRent = col("__isRent")
     val isPrice = p.isNotNull && !isCredit && !isRent
 
     val creditValue = when(isCredit, amount)
@@ -661,15 +703,15 @@ object ListingTransforms {
         .when(creditValue.isNotNull && creditValue =!= 0 &&
               rentValue.isNotNull && rentValue =!= 0, "rent_credit")
 
-    val deedType = getAttr("نوع سند")
+    val deedType = col("__deed")
 
-    parsed.select(
+    s2.select(
       col(urlCol).as("content_url"),
       refTime.as("created_at"),
       slug(b1).as("cat2_slug"),
       slug(b2).as("cat3_slug"),
-      slug(p0).as("city_slug"),
-      slug(p1).as("neighborhood_slug"),
+      slug(col("__p0")).as("city_slug"),
+      slug(col("__p1")).as("neighborhood_slug"),
       coalesce(publishTime, refTime).as("created_at_month"),
       lit(null).cast(StringType).as("user_type"),
       orNone(d("description")).as("description"),
@@ -786,10 +828,23 @@ object ListingTransforms {
     val md = dd("more_details")
     val breadcrumb = page("breadcrumb")
 
-    val name = coalesce(get(breadcrumb, lit(1))("name"), lit(""))
-    val firstWord = trim(get(split(name, " "), lit(0)))
-    val cat2 = when(firstWord.isin("خرید", "اجاره"), firstWord)
-    val rest = trim(name.substr(length(firstWord) + 1, length(name)))
+    val priceRent = dd("price_rent")
+    val priceSell = dd("price_sell")
+    val priceMortgage = dd("price_mortgage")
+
+    // ---- staged like divarTransform: each value read more than once is
+    // one column of a projection, referenced by attribute
+    val s1 = parsed.select(col(urlCol), col("__d"),
+      coalesce(get(breadcrumb, lit(1))("name"), lit("")).as("__name"),
+      (priceRent.isNull && priceSell.isNull && priceMortgage.isNull).as("__allNull"))
+    val name = col("__name")
+    val s2 = s1.select(col("*"), trim(get(split(name, " "), lit(0))).as("__first"))
+    val firstWord = col("__first")
+    val s3 = s2.select(col("*"),
+      when(firstWord.isin("خرید", "اجاره"), firstWord).as("__cat2"),
+      trim(name.substr(length(firstWord) + 1, length(name))).as("__rest"))
+    val cat2 = col("__cat2")
+    val rest = col("__rest")
     // startswith against the candidate list in reference order: plain
     // "آپارتمان" is listed BEFORE "آپارتمان اداری", so the shorter prefix
     // intentionally wins — exactly like the reference's first-
@@ -802,10 +857,7 @@ object ListingTransforms {
         .when(dd("creator_properties")("real_estate").isNotNull, "مشاور املاک")
         .when(dd("creator_properties")("consultant").isNotNull, "مشاور مستقل")
 
-    val priceRent = dd("price_rent")
-    val priceSell = dd("price_sell")
-    val priceMortgage = dd("price_mortgage")
-    val allNull = priceRent.isNull && priceSell.isNull && priceMortgage.isNull
+    val allNull = col("__allNull")
 
     val rentType =
       when(priceMortgage.isNotNull && priceMortgage =!= 0 &&
@@ -829,7 +881,7 @@ object ListingTransforms {
 
     val createdAtMonth = to_timestamp(dd("date_publish"))
 
-    parsed.select(
+    s3.select(
       col(urlCol).as("content_url"),
       refTime.as("created_at"),
       cat2.as("cat2_slug"),

@@ -2703,7 +2703,7 @@ private[sources] class VersionedPartitionReader(
   * compilation. Pruning is the only use of the pushed set — Spark
   * re-applies every filter above the scan. Also the write side's
   * parquet schema ([[writeMessageType]]). */
-private[sources] object GroupParquetIo {
+private[graft] object GroupParquetIo {
 
   /** One data file's footer state: its schema, the row groups the
     * pushed predicate kept, and the pre-prune group count (for the
@@ -4582,7 +4582,7 @@ private[sources] class GroupParquetDataWriter(
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     path = java.nio.file.Paths.get(dir, currentName)
     writer = ExampleParquetWriter.builder(new HPath(path.toString))
-      .withType(msgType).withConf(new Configuration()).build()
+      .withType(msgType).withConf(new Configuration(GroupParquetIo.hadoopDefaults)).build()
   }
 
   private[sources] def forceCreateAndClose(): Unit = { open(); writer.close() }

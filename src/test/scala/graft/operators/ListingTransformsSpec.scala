@@ -710,6 +710,18 @@ class ListingTransformsSpec extends AnyFunSuite with SparkSpec {
       |images = []""")))
   }
 
+  test("divar: analyzed plan stays under 6,000 expression nodes") {
+    // every Column value referenced more than once is inlined at each
+    // reference; with the shared subexpressions inlined the analyzed
+    // plan held 23k nodes, re-analyzed per call and re-optimized per
+    // streaming micro-batch. Staged, it holds about 3k.
+    val plan = ListingTransforms.divarTransform(
+      Seq(("u", "{}")).toDF("url", "raw"), "raw", "url", ref).queryExecution.analyzed
+    var nodes = 0L
+    plan.foreach(_.expressions.foreach(_.foreach(_ => nodes += 1)))
+    assert(nodes <= 6000, s"divarTransform's analyzed plan has $nodes expression nodes")
+  }
+
   private val sheypoorRentJson =
     """{
       | "attributes": {
