@@ -50,19 +50,16 @@ object PersianText {
     regexp_replace(persianToEnglishDigits(c.cast(StringType)), "[^\\d.+\\-]", "")
 
   /** F4: parse as double, null on garbage/empty (Python `float(...)` +
-    * except → None). */
-  def toDoubleOrNull(c: Column): Column = {
-    val s = numericGarbageStripped(c)
-    when(s === "", lit(null).cast(DoubleType)).otherwise(s.try_cast(DoubleType))
-  }
+    * except → None) — `try_cast` of an empty string is already null, so
+    * the argument appears in the plan once. */
+  def toDoubleOrNull(c: Column): Column =
+    numericGarbageStripped(c).try_cast(DoubleType)
 
   /** F4 (int fields): Python `int(str)` — fails (→ null) on any
     * non-integral string such as "12.7"; Spark's string→long cast has the
     * same null-on-non-integral behavior. */
-  def toLongOrNull(c: Column): Column = {
-    val s = numericGarbageStripped(c)
-    when(s === "", lit(null).cast(LongType)).otherwise(s.try_cast(LongType))
-  }
+  def toLongOrNull(c: Column): Column =
+    numericGarbageStripped(c).try_cast(LongType)
 
   /** F6: toman amount — number × unit word; "توافقی" (negotiable) and
     * number-less text carry no amount. The reference returns a mixed

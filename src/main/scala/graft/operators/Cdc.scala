@@ -80,6 +80,13 @@ object Cdc {
     * reconciliation primitive between a rebuilt table and its serving
     * copy (the reference's full-rebuild DAG swaps blindly; this is the
     * audited form).
+    *
+    * A keyed diff is defined only when the key picks out at most one
+    * row per side: with two rows under one key the join pairs every
+    * row of one side with every row of the other. The versioned store's
+    * stored change feed relies on the same rule, which is what lets it
+    * diff only the rows a commit changed
+    * ([[Versioned.writeFeedFor]]).
     */
   def snapshotDiff(before: DataFrame, after: DataFrame,
                    keyCols: Seq[String], payload: Seq[String]): DataFrame = {

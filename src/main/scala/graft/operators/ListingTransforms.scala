@@ -879,7 +879,9 @@ object ListingTransforms {
     val breadCrumbStr = when(breadcrumb.isNotNull && size(breadcrumb) > 0,
       concat(array_join(crumbNames, "\n/\n"), lit("\n/")))
 
-    val createdAtMonth = to_timestamp(dd("date_publish"))
+    // a malformed date nulls this column only: under ANSI mode
+    // `to_timestamp` would fail the whole job on one bad document
+    val createdAtMonth = try_to_timestamp(dd("date_publish"))
 
     s3.select(
       col(urlCol).as("content_url"),

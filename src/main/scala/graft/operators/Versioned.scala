@@ -3,8 +3,9 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.VersionedWriteIo
 
@@ -1065,14 +1066,14 @@ object Versioned {
     * need a join per batch; storing them at write time makes each commit
     * a file listing). The initial version's feed is all-'added'. Feed
     * rows carry `commit_version` so a multi-commit batch stays
-    * attributable. Diff cost is one full-outer join per commit at write
-    * time — the price of an incremental downstream.
+    * attributable. The diff is derived from the rows the commit changed
+    * ([[writeFeedFor]]); `df`'s schema types the feed columns.
     */
   def writeNextWithFeed(df: DataFrame, root: String, keys: Seq[String],
                         payload: Seq[String],
                         commitTs: Option[Long] = None): Long = {
     val next = writeNext(df, root, commitTs)
-    writeFeedFor(df.sparkSession, root, next, keys, payload)
+    writeFeedFor(df.sparkSession, root, next, df.schema, keys, payload)
     next
   }
 
@@ -1081,50 +1082,54 @@ object Versioned {
     * 'changed' / 'removed' with old_/new_ payload), or all-'added' for
     * a first commit. Factored out of [[writeNextWithFeed]] so DSv2/SQL
     * commits (INSERT, UPDATE, MERGE, DELETE on a `changeFeedKeys`
-    * table) can emit the same feed the streaming change-feed source
-    * drains. Reads snapshots with explicit mergeSchema-safe columns:
-    * payload columns absent from pre-evolution files read as null. */
+    * table), streaming epochs and the catalog's RESTORE/CLONE emit the
+    * same feed the streaming change-feed source drains.
+    *
+    * The feed is derived from what the commit CHANGED, not from the two
+    * snapshots: [[graft.sources.CommitImages]] diffs the two manifests
+    * and reads the before images (rows the commit took away) and after
+    * images (rows it made live) by file and position, typed by `schema`
+    * — the caller's table schema in LOGICAL names (`colMap` maps them to
+    * the physical ones files store), so nothing is inferred. Only a
+    * commit with both kinds (an UPDATE, a MERGE, an overwrite, a
+    * restore) pairs them by key; a DV DELETE's rows are all 'removed'
+    * and an append's all 'added', with no join. Paired sides are
+    * coalesced to one partition each, so the join needs no exchange and
+    * the whole feed is one Spark job; its input is the changed rows on
+    * a deletion-vector table and the rewritten files on a copy-on-write
+    * one.
+    *
+    * ONE LIVE ROW PER KEY: the feed equals `Cdc.snapshotDiff` of the two
+    * snapshots whenever the feed keys pick out at most one live row per
+    * version — the only case in which a keyed diff is defined at all.
+    * Under that rule a key whose row the commit removed and did not
+    * re-add is gone after it, and a key it added was absent before. */
   def writeFeedFor(spark: SparkSession, root: String, version: Long,
-                   keys: Seq[String], payload: Seq[String],
+                   schema: StructType, keys: Seq[String], payload: Seq[String],
                    colMap: Map[String, String] = Map.empty): Unit = {
+    val missing = (keys ++ payload).filterNot(schema.fieldNames.contains)
+    require(missing.isEmpty,
+      s"change feed column(s) ${missing.mkString(", ")} are not in the " +
+        s"table schema of $root")
+    // every image column reads nullable: a write schema may mark a
+    // column non-null that older rows of the table hold nulls in
+    val cols = StructType((keys ++ payload).map(schema(_).copy(nullable = true)))
     val prev = versions(root).filter(_ < version).lastOption
-    // manifest-resolved + DV-applied: the feed of a DV-mode DELETE must
-    // show the deleted keys as 'removed' even though their bytes are
-    // still in the (hard-linked) data files
-    def raw(v: Long) = readSnapshot(spark, root, v)
-    // keys/payload arrive LOGICAL; raw snapshots read parquet files,
-    // which store PHYSICAL (birth) names on a column-mapped table —
-    // the projection translates per column and the FEED stores logical
-    def physOf(n: String): String = colMap.getOrElse(n, n)
-    // align both snapshots to the same (keys ++ payload) projection: a
-    // PRE-evolution snapshot may lack an added column entirely — it
-    // reads as null there, typed from whichever snapshot has it
-    val rawCur = raw(version)
-    val rawPrev = prev.map(raw)
-    // a DSv2-resolved snapshot (DVs, type widening) surfaces LOGICAL
-    // names; raw parquet reads surface PHYSICAL ones — accept either
-    def typeOf(name: String) =
-      rawCur.schema.fields.find(f => f.name == physOf(name) || f.name == name)
-        .orElse(rawPrev.flatMap(_.schema.fields.find(f =>
-          f.name == physOf(name) || f.name == name)))
-        .getOrElse(throw new IllegalArgumentException(
-          s"change feed column '$name' exists in no snapshot under $root"))
-        .dataType
-    def snap(df: DataFrame) = df.select((keys ++ payload).map { n =>
-      if (df.schema.fieldNames.contains(physOf(n))) col(physOf(n)).as(n)
-      else if (df.schema.fieldNames.contains(n)) col(n).as(n)
-      else lit(null).cast(typeOf(n)).as(n)
-    }: _*)
-    val cur = snap(rawCur)
-    val feed = rawPrev match {
-      case Some(p) =>
-        Cdc.snapshotDiff(snap(p), cur, keys, payload)
-      case None =>
-        cur.select(
-          keys.map(col) ++
-            Seq(lit("added").as("change_type")) ++
-            payload.map(c => lit(null).cast(cur.schema(c).dataType).as(s"old_$c")) ++
-            payload.map(c => col(c).as(s"new_$c")): _*)
+    def typed(c: String) = lit(null).cast(cols(c).dataType)
+    // an unpaired side: every row is an addition or a removal
+    def oneSided(df: DataFrame, changeType: String): DataFrame = {
+      val removed = changeType == "removed"
+      df.select(keys.map(col) ++ Seq(lit(changeType).as("change_type")) ++
+        payload.map(c => (if (removed) col(c) else typed(c)).as(s"old_$c")) ++
+        payload.map(c => (if (removed) typed(c) else col(c)).as(s"new_$c")): _*)
+    }
+    val feed = graft.sources.CommitImages.of(spark, root, prev, version, cols, colMap) match {
+      case (Some(before), Some(after)) =>
+        Cdc.snapshotDiff(before.coalesce(1), after.coalesce(1), keys, payload)
+      case (Some(before), None) => oneSided(before, "removed")
+      case (None, Some(after)) => oneSided(after, "added")
+      case (None, None) =>
+        oneSided(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cols), "added")
     }
     feed
       .select(keys.map(col) ++
@@ -1164,9 +1169,9 @@ object Versioned {
     * invisible; pre-manifest dirs fall back to listing), skips DV'd
     * rows, widens pre-widening files, restores VARIANT columns and
     * hides the materialized row-tracking carriers. Column names are
-    * PHYSICAL (no column map is passed). Compaction, change-feed
-    * derivation, restore validation and the public [[read]] all agree
-    * on what a snapshot IS because they all call this. */
+    * PHYSICAL (no column map is passed). Compaction, restore
+    * validation and the public [[read]] all agree on what a snapshot IS
+    * because they all call this. */
   def readSnapshot(spark: SparkSession, root: String, version: Long): DataFrame =
     spark.read.format("graft-versioned")
       .option("versionAsOf", version.toString).load(root)

@@ -2016,7 +2016,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           Files.readAllBytes(manifestOf(ident)),
           java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]
         Versioned.writeFeedFor(SparkSession.active,
-          tablePath(ident).toString, version, keys,
+          tablePath(ident).toString, version, schema, keys,
           schema.fieldNames.filterNot(keys.contains).toSeq,
           readColMap(ident).map(_._1).getOrElse(Map.empty))
       }

@@ -573,7 +573,7 @@ private[sources] class GraftVersionedTable(
       // worst of both worlds.
       case Some(p) if options.getBoolean("deletionVectors", false) =>
         VersionedWriteIo.deleteViaDv(spark, root, p,
-          Option(options.get("colmap")))
+          Option(options.get("colmap")), Some(tableSchema))
       case _ =>
         // copy-on-write: survivors become a new version. Read with the
         // TABLE schema, not footer inference: a snapshot holding
@@ -655,7 +655,7 @@ private[sources] class GraftVersionedTable(
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
     if (feedKeys.nonEmpty)
-      Versioned.writeFeedFor(spark, root, v, feedKeys,
+      Versioned.writeFeedFor(spark, root, v, tableSchema, feedKeys,
         tableSchema.fieldNames.filterNot(feedKeys.contains).toSeq,
         GraftVersionedTable.colMapOf(options))
   }
@@ -1134,7 +1134,7 @@ private[sources] class GraftDeltaBatchWrite(
       AutoFillCommitMessage.nextBases(f, messages)))
     if (feedKeys.nonEmpty)
       Versioned.writeFeedFor(SparkSession.active, root, committed,
-        feedKeys,
+        op.table.schema(), feedKeys,
         op.table.schema().fieldNames.filterNot(feedKeys.contains).toSeq,
         colMap)
   }
@@ -2409,10 +2409,14 @@ private[sources] case class GraftVersionOffset(version: Long) extends Offset {
   * row group inside the file (parquet-mr's own split rule), so a 1 GB
   * file with 8 row groups fans out to 8 tasks — file count no longer
   * caps parallelism at scale. A negative range means "whole file"
-  * (streaming-feed fallbacks and older call sites). */
+  * (streaming-feed fallbacks and older call sites). `only`, when set,
+  * inverts the deletion-vector walk: the split yields exactly the rows
+  * at those sorted file positions, whatever their DV state (how a
+  * commit's change images are read, [[CommitImages]]). */
 private[sources] case class GroupParquetPartition(
     file: String, rangeStart: Long = -1L, rangeEnd: Long = -1L,
-    dvFile: String = null, rowIdBase: Long = -1L, rowVer: Long = -1L)
+    dvFile: String = null, rowIdBase: Long = -1L, rowVer: Long = -1L,
+    only: Array[Long] = null)
   extends InputPartition
 
 /** A split that knows its partition-column values — the
@@ -2442,7 +2446,7 @@ private[sources] case class VersionedReaderFactory(
     partition match {
       case p: GroupParquetPartition =>
         new VersionedPartitionReader(this, p.file, p.rangeStart, p.rangeEnd,
-          p.dvFile, p.rowIdBase, p.rowVer)
+          p.dvFile, p.rowIdBase, p.rowVer, p.only)
       case p: KeyedGroupParquetPartition =>
         new VersionedPartitionReader(this, p.file, p.rangeStart, p.rangeEnd,
           p.dvFile, p.rowIdBase, p.rowVer)
@@ -2496,14 +2500,16 @@ private[sources] object VersionedPartitionReader {
   * columns are PHYSICAL), deletion-vector masking over the parquet
   * row index (file-absolute, so it is also `_pos` and the base of a
   * derived `_row_id`), the `_file` / `_row_commit_version` constants,
-  * and VARIANT decoding. Columns a file lacks read as null, and
+  * and VARIANT decoding. Given `only`, the same walk keeps the listed
+  * positions instead of skipping them and stops after the last one.
+  * Columns a file lacks read as null, and
   * INT32 / FLOAT files under a widened BIGINT / DOUBLE column widen in
   * Spark's decoder. Pushed filters are not applied here: they prune
   * files and row groups at planning, and Spark re-applies them above
   * the scan. */
 private[sources] class VersionedPartitionReader(
     f: VersionedReaderFactory, file: String, rangeStart: Long, rangeEnd: Long,
-    dvFile: String, rowIdBase: Long, rowVer: Long)
+    dvFile: String, rowIdBase: Long, rowVer: Long, only: Array[Long] = null)
   extends PartitionReader[InternalRow] {
   import VersionedPartitionReader._
 
@@ -2556,7 +2562,8 @@ private[sources] class VersionedPartitionReader(
       ask(graft.operators.RowIds.MaterializedVerCol, LongType)
     else -1
   private val rowIndex =
-    if (dvFile != null || source.contains(PosK) || source.contains(RowIdK))
+    if (dvFile != null || only != null || source.contains(PosK) ||
+        source.contains(RowIdK))
       ask(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType)
     else -1
 
@@ -2591,24 +2598,34 @@ private[sources] class VersionedPartitionReader(
   private var data: InternalRow = _
   private var emitted = 0L
 
-  private lazy val dvPositions: Array[Long] =
-    graft.operators.DeletionVectors.read(java.nio.file.Paths.get(dvFile))
-  private var dvIdx = 0
+  // the sorted positions the walk skips (a DV) or keeps (`only`)
+  private val keep = only != null
+  private val walk: Array[Long] =
+    if (keep) only
+    else if (dvFile != null)
+      graft.operators.DeletionVectors.read(java.nio.file.Paths.get(dvFile))
+    else null
+  private var walkIdx = 0
 
   private def position: Long = batch.column(rowIndex).getLong(at)
 
-  // deletion-vector skip: both the rows and the positions arrive in
-  // ascending order, so one pointer walks the sorted DV once
-  private def live: Boolean = dvFile == null || {
+  // both the rows and the positions arrive in ascending order, so one
+  // pointer walks the sorted positions once; a row is emitted when its
+  // position is listed exactly when the walk keeps positions
+  private def live: Boolean = walk == null || {
     val p = position
-    while (dvIdx < dvPositions.length && dvPositions(dvIdx) < p) dvIdx += 1
-    dvIdx >= dvPositions.length || dvPositions(dvIdx) != p
+    while (walkIdx < walk.length && walk(walkIdx) < p) walkIdx += 1
+    val listed = walkIdx < walk.length && walk(walkIdx) == p
+    if (listed) walkIdx += 1
+    listed == keep
   }
 
   override def next(): Boolean = {
     // a pushed LIMIT needs at most `limit` rows from EACH partition —
     // the engine-side final LIMIT (partial pushdown) does the rest
     if (f.limit >= 0 && emitted >= f.limit) return false
+    // a kept-positions walk is done once its last position was emitted
+    if (keep && walkIdx >= walk.length) return false
     var found = false
     while (!found) {
       at += 1
@@ -3902,7 +3919,7 @@ private[sources] class GraftBatchWrite(
     // INSERT/UPDATE/MERGE/DELETE all feed the streaming change source
     if (feedKeys.nonEmpty)
       Versioned.writeFeedFor(SparkSession.active, root, committed,
-        feedKeys, schema.fieldNames.filterNot(feedKeys.contains).toSeq,
+        schema, feedKeys, schema.fieldNames.filterNot(feedKeys.contains).toSeq,
         colMap)
   }
 
@@ -3973,7 +3990,7 @@ private[sources] class GraftStreamingWrite(
     // (replayed epochs return before reaching here, so no double feed)
     if (feedKeys.nonEmpty)
       Versioned.writeFeedFor(SparkSession.active, root, committed,
-        feedKeys, schema.fieldNames.filterNot(feedKeys.contains).toSeq,
+        schema, feedKeys, schema.fieldNames.filterNot(feedKeys.contains).toSeq,
         colMap)
   }
 
@@ -4277,12 +4294,17 @@ private[graft] object VersionedWriteIo {
     * committed version. */
   def deleteViaDv(spark: SparkSession, root: String,
                   pred: org.apache.spark.sql.Column,
-                  colMapOpt: Option[String] = None): Long = {
+                  colMapOpt: Option[String] = None,
+                  schema: Option[StructType] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, collect_list, lit}
     import graft.operators.DeletionVectors
     val scanned = Versioned.latestVersion(root).getOrElse(
       throw new IllegalStateException(s"no versions under $root"))
-    val snapReader = spark.read.format("graft-versioned")
+    // a table's schema types the scan, so nothing is inferred; a bare
+    // path has none to give
+    val snapReader = schema.filter(_.nonEmpty)
+      .fold(spark.read.format("graft-versioned"))(
+        spark.read.format("graft-versioned").schema(_))
       .option("versionAsOf", scanned.toString)
     // the discovery scan must surface LOGICAL column names — the
     // predicate was written against them

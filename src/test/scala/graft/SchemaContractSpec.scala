@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * float32 embedding contract) must canonicalize exactly across the
   * physical encodings a regenerated fixture could plausibly ship, or
   * fail loudly at the scan with the column named. */
-class SchemaContractSpec extends AnyFunSuite with SparkSpec {
+class SchemaContractSpec extends AnyFunSuite with SparkSpec with JobCounting {
 
   private def tmp(): String = Files.createTempDirectory("contract").toString
 
@@ -34,33 +33,6 @@ class SchemaContractSpec extends AnyFunSuite with SparkSpec {
 
   private def ntzOrderDate = java.time.LocalDateTime.ofEpochSecond(
     instantMicros / 1000000L, 0, java.time.ZoneOffset.UTC)
-
-  /** Runs `body` under a fresh job group and returns its result with the
-    * number of Spark jobs it started. Listener events arrive
-    * asynchronously but in order, so a sentinel job run afterwards marks
-    * the point by which every job of `body` has been seen. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val group = s"jobs_${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "listener never saw the sentinel job")
-      (out, seen.toArray.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("Tables.table infers a fresh file's schema with at most one job, then reuses it with none") {
     val dir = tmp(); writeOrders(dir, TimestampNTZType, ntzOrderDate)

@@ -710,6 +710,38 @@ class ListingTransformsSpec extends AnyFunSuite with SparkSpec {
       |images = []""")))
   }
 
+  test("mrestate golden row: a malformed date_publish nulls created_at_month only") {
+    val doc = mrestateJson.replace("2025-09-15T10:30:00Z", "not a date")
+    val out = ListingTransforms.mrestateTransform(
+      Seq(("https://mrestate.ir/p/bad-date", doc)).toDF("url", "raw"), "raw", "url", ref)
+    assertGolden(out, siteGoldenSchema, Map(
+      "https://mrestate.ir/p/bad-date" -> golden("""
+      |content_url = https://mrestate.ir/p/bad-date
+      |created_at = 2025-10-21 12:00:00.0
+      |cat2_slug = خرید
+      |cat3_slug = آپارتمان
+      |city_slug = تهران
+      |neighborhood_slug = ونک
+      |user_type = مشاور املاک
+      |description = توضیح
+      |title = آپارتمان ۱۰۰ متری
+      |price_value = 9500000000
+      |building_size = 100.0
+      |floor = 4
+      |rooms_count = 2
+      |has_balcony = true
+      |has_elevator = true
+      |has_warehouse = false
+      |has_parking = true
+      |construction_year = 1400
+      |has_security_guard = true
+      |has_pool = false
+      |location_latitude = 35.76
+      |location_longitude = 51.42
+      |images = [https://mrestate.ir/media/a.jpg, http://x/b.jpg]
+      |bread_crumb = خانه\n/\nخرید آپارتمان در تهران\n/\nونک\n/""")))
+  }
+
   test("divar: analyzed plan stays under 6,000 expression nodes") {
     // every Column value referenced more than once is inlined at each
     // reference; with the shared subexpressions inlined the analyzed

@@ -109,6 +109,16 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a pair of sides too big for one partition joins through an exchange") {
+    val (t, root) = freshTable(Dv)
+    val key = "spark.sql.maxSinglePartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try spark.sql(s"UPDATE $t SET v = v + 1 WHERE id % 2 = 0")
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assertFeedIsDiff(root, 1L, sqlRead(t))
+  }
+
   test("a delete after an update on the same deletion-vector file") {
     val (t, root) = freshTable(Dv)
     spark.sql(s"UPDATE $t SET v = -v WHERE id % 5 = 0")
@@ -187,6 +197,32 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
       ON t.id = s.id WHEN MATCHED THEN UPDATE SET tag = 'mm'
       WHEN NOT MATCHED THEN INSERT (id, v, tag, score) VALUES (s.id, 0, 'n', 0.0)""") // v4
     (1L to 4L).foreach(assertFeedIsDiff(root, _, sqlRead(t)))
+  }
+
+  test("positions past a file's first row group: a DV DELETE and the RESTORE undoing it") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft_feed_eq_rg_").toString
+    // one file of many row groups, in id order: a row's id is its position
+    spark.range(0, 200000).selectExpr("id", "id * 7 AS v")
+      .coalesce(1).write.option("parquet.block.size", "65536")
+      .parquet(s"$root/v=0")
+    val files = Versioned.dataFiles(java.nio.file.Paths.get(root, "v=0"))
+    val blocks = GroupParquetIo.readFooters(files).head.kept
+    assert(blocks.size > 2, s"expected many row groups, got ${blocks.size}")
+    val firstGroupRows = blocks.head.getRowCount
+    VersionedWriteIo.deleteViaDv(spark, root,
+      col("id") >= firstGroupRows && (col("id") % 997 === 3L || col("id") >= 199990L))
+    Versioned.restoreTo(root, 0L)
+    val read = (v: Long) => Versioned.read(spark, root, Some(v))
+    val schema = read(0L).schema
+    Versioned.writeFeedFor(spark, root, 1L, schema, Seq("id"), Seq("v"))
+    Versioned.writeFeedFor(spark, root, 2L, schema, Seq("id"), Seq("v"))
+    assertFeedIsDiff(root, 1L, read)
+    assertFeedIsDiff(root, 2L, read)
+    val removed = spark.read.parquet(Versioned.feedDir(root, 1L))
+    assert(removed.count() > 100L && removed.where("change_type <> 'removed'").isEmpty)
+    assert(spark.read.parquet(Versioned.feedDir(root, 2L))
+      .where("change_type = 'added'").count() === removed.count())
   }
 
   test("writeNextWithFeed: a path-based root") {

@@ -69,7 +69,8 @@ class FeedHermeticitySpec extends AnyFunSuite with SparkSpec {
     val feedDir = Paths.get(Versioned.feedDir(root, 0L))
     val before = Files.readString(feedDir.resolve("_graft_files"))
     // re-derive the same feed (idempotent maintenance) — manifest tracks
-    Versioned.writeFeedFor(spark, root, 0L, Seq("id"), Seq("price"))
+    Versioned.writeFeedFor(spark, root, 0L,
+      Versioned.read(spark, root, Some(0L)).schema, Seq("id"), Seq("price"))
     val after = Files.readString(feedDir.resolve("_graft_files"))
     val names = Versioned.dataFiles(feedDir).map(_.getFileName.toString).sorted
     assert(after.linesIterator.map(_.drop(2)).toSeq.sorted === names)
