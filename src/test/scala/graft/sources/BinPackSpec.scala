@@ -110,4 +110,38 @@ class BinPackSpec extends AnyFunSuite with SparkSpec {
         .map(x => Option(x.getMessage).getOrElse("")).toSeq
     assert(chain(e).exists(_.contains("cannot combine")), chain(e).toString)
   }
+
+  test("a DV'd, renamed and evolved table compacts to its live rows under " +
+      "the logical schema and sheds the sidecars") {
+    sql("DROP TABLE IF EXISTS gbin.ns.t4")
+    sql("CREATE TABLE gbin.ns.t4 (id BIGINT, grp BIGINT) USING `graft-versioned` " +
+      "TBLPROPERTIES ('clusterBy'='id', 'writePartitions'='1', " +
+      "'deletionVectors'='true')")
+    spark.range(20000).selectExpr("id", "id % 7 AS grp")
+      .createOrReplaceTempView("bulk4")
+    sql("INSERT INTO gbin.ns.t4 SELECT id, grp FROM bulk4")
+    sql("INSERT INTO gbin.ns.t4 VALUES (20000, 1), (20001, 2), (20002, 3)")
+    // column mapping: files keep the birth name, reads see `cat`
+    sql("ALTER TABLE gbin.ns.t4 RENAME COLUMN grp TO cat")
+    sql("ALTER TABLE gbin.ns.t4 ADD COLUMN tag STRING")
+    sql("INSERT INTO gbin.ns.t4 VALUES (20003, 4, 'x'), (20004, 5, 'y')")
+    sql("DELETE FROM gbin.ns.t4 WHERE id IN (20001, 20004)")
+    val root = s"$warehouse/ns/t4"
+    val v0 = Versioned.latestVersion(root).get
+    assert(DeletionVectors.dvMap(JP.get(root, s"v=$v0")).nonEmpty,
+      "the DELETE must have taken the DV path")
+    val before = sql("SELECT * FROM gbin.ns.t4").collect().map(_.toString).sorted.toSeq
+    val v = sql("CALL gbin.sys.compact(table => 'ns.t4', " +
+      "target_file_bytes => 1048576, only_smaller_than => 16384)")
+      .collect()(0).getLong(0)
+    assert(v === v0 + 1)
+    assert(DeletionVectors.dvMap(JP.get(root, s"v=$v")).isEmpty,
+      "bin-packing must materialize the tail's DVs away")
+    assert(spark.table("gbin.ns.t4").columns.toSeq === Seq("id", "cat", "tag"))
+    assert(sql("SELECT * FROM gbin.ns.t4").collect().map(_.toString).sorted.toSeq
+      === before)
+    assert(sql("SELECT id, cat, tag FROM gbin.ns.t4 WHERE id >= 20000 ORDER BY id")
+      .collect().map(_.toString).toSeq ===
+      Seq("[20000,1,null]", "[20002,3,null]", "[20003,4,x]"))
+  }
 }
