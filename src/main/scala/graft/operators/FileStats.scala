@@ -118,7 +118,8 @@ object FileStats {
   /** Physical value → stored statistic, or None when the type's raw
     * ordering does not match its logical ordering (unsigned ints,
     * decimals) or the value cannot round-trip through JSON (NaN/Inf,
-    * non-UTF-8 binary). Timestamp-annotated longs normalize to MICROS
+    * un-annotated binary — the store's framed VARIANT, see
+    * [[graft.sources.VersionedDataWriter.fileSchema]]). Timestamp-annotated longs normalize to MICROS
     * (whatever unit the footer declares), date-annotated ints stay
     * epoch days — the probe coercion in [[numeric]] converts pushed
     * java.sql/java.time literals to the same scales, so time-range

@@ -407,28 +407,10 @@ object Versioned {
           "before compacting")
     val bytes = dataFiles(vdir).map(Files.size).sum
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    // readSnapshot's schema is the union of the snapshot's footers: a
-    // snapshot may hold pre-evolution files next to evolved ones
-    // (catalog ADD COLUMN is metadata-only), and compacting with
-    // single-footer inference would silently drop added columns.
-    // readSnapshot also applies deletion vectors, so compacting a
-    // DV-carrying version MATERIALIZES the deletes: the rewrite holds
-    // only live rows and the new version carries no sidecars.
-    // A row-tracking table compacts WITH its ids: the rewrite reorders
-    // and renames files, so `base + position` no longer addresses the
-    // original rows — each row's id MATERIALIZES into the rewritten
-    // files as the physical `_graft_row_id` column (Delta's
-    // materialized row-id contract), and the commit funnel flags the
-    // new files so readers serve the column instead of the base.
-    val df =
-      if (RowIds.enabled(root)) {
-        val d = spark.read.format("graft-versioned")
-          .option("versionAsOf", v.toString).load(root)
-        val l2p = colMapL2P(root)
-        d.select((d.columns.toSeq.map(c => col(c).as(l2p.getOrElse(c, c))) ++
-          Seq(col("_row_id").as(RowIds.MaterializedCol),
-            col("_row_commit_version").as(RowIds.MaterializedVerCol))): _*)
-      } else readSnapshot(spark, root, v)
+    // compacting a DV-carrying version MATERIALIZES the deletes: the
+    // rewrite holds only live rows and the new version carries no
+    // sidecars
+    val df = storedRows(spark, root, v)
     // a clustered table re-clusters on compaction (range + sort), so
     // the rewrite RESTORES file-level min/max locality instead of
     // interleaving it away — coalesce alone merges arbitrary ranges
@@ -462,10 +444,9 @@ object Versioned {
     * on the un-rewritten files (Delta's OPTIMIZE bin-packing contract:
     * only files under the threshold are touched).
     *
-    * DV-carrying small files are compacted too — their deleted
-    * positions anti-join away against `_metadata.row_index` (the same
-    * absolute in-file ordinals the sidecars store), so the rewrite
-    * holds only live rows and sheds the sidecars. Returns the new
+    * DV-carrying small files are compacted too — the scan masks their
+    * deleted positions, so the rewrite holds only live rows and sheds
+    * the sidecars. Returns the new
     * version, or the CURRENT one when fewer than two files qualify
     * (nothing to merge — no empty commit). */
   def compactSmall(spark: SparkSession, root: String,
@@ -618,7 +599,7 @@ object Versioned {
         val part = listParquet(tmpDir).headOption.getOrElse {
           // zero survivors and the writer cut no file: cut an empty one
           val phys = org.apache.spark.sql.types.StructType(raw.schema.fields)
-          graft.sources.GroupParquetWriterFactory(phys, tmpDir.toString)
+          graft.sources.VersionedWriterFactory(phys, tmpDir.toString)
             .emptyFile("part-empty.parquet")
           listParquet(tmpDir).head
         }
@@ -674,77 +655,48 @@ object Versioned {
     }
   }
 
-  /** Shared rewrite half of [[compactSmall]]/[[compactWhere]]: read the
-    * LIVE rows of exactly `selected` (DV- and widening-aware), re-cut
-    * them at the byte target (re-clustered when the table has a layout
-    * contract), and land the swap as a row-level commit — untouched
-    * files hard-link, concurrent disjoint row-level commits rebase. */
-  /** logical → physical column mapping of the root, empty when the
-    * table carries none (rewrites write PHYSICAL names — files store
-    * birth names whatever wrote them). */
-  private[graft] def colMapL2P(root: String): Map[String, String] = {
-    val cm = Paths.get(root, "_graft_colmap")
-    if (!Files.exists(cm)) Map.empty
-    else new String(Files.readAllBytes(cm),
-      java.nio.charset.StandardCharsets.UTF_8).linesIterator
-      .map(_.split("\t", -1)).collect {
-        case Array("m", l, p) => l -> p }.toMap
+  /** The live rows of v=`v` as its files store them — what a
+    * compaction rewrites. ONE read path, the `graft-versioned` scan: it
+    * masks deletion vectors and widens narrow files, and the path load
+    * keeps PHYSICAL names (files store birth names whatever wrote them,
+    * so column mapping needs no translation). Its schema is the union
+    * of the snapshot's footers (a pre-evolution file null-fills a
+    * catalog-ADDed column), read as the files store it — VARIANT stays
+    * its framed BINARY, copied byte for byte. A row-tracking table
+    * rewrites WITH its ids: the rewrite reorders and renames files, so
+    * `base + position` no longer addresses the original rows — each
+    * row's id MATERIALIZES as the physical `_graft_row_id` column
+    * (Delta's materialized row-id contract; the scan serves derived AND
+    * already-materialized ids through `_row_id`), and the commit
+    * funnel flags the new files so readers serve the column. `only`
+    * restricts the scan to those data files, pruned by `_file` before
+    * any footer read. */
+  private def storedRows(spark: SparkSession, root: String, v: Long,
+                         only: Option[Seq[Path]] = None): DataFrame = {
+    val d = spark.read.format("graft-versioned")
+      .schema(graft.sources.VersionedDataWriter.fileSchema(
+        readSnapshot(spark, root, v).schema))
+      .option("versionAsOf", v.toString).load(root)
+    val ids =
+      if (!RowIds.enabled(root)) Nil
+      else Seq(col("_row_id").as(RowIds.MaterializedCol),
+        col("_row_commit_version").as(RowIds.MaterializedVerCol))
+    only.fold(d)(fs => d.filter(col("_file").isin(fs.map(_.toString): _*)))
+      .select(d.columns.toSeq.map(col) ++ ids: _*)
   }
 
+  /** Shared rewrite half of [[compactSmall]]/[[compactWhere]]: read the
+    * LIVE rows of exactly `selected` ([[storedRows]]), re-cut them at
+    * the byte target (re-clustered when the table has a layout
+    * contract), and land the swap as a row-level commit — untouched
+    * files hard-link, concurrent disjoint row-level commits rebase. */
   private def rewriteFiles(spark: SparkSession, root: String, v: Long,
                            selected: Seq[Path], targetFileBytes: Long,
                            clusterBy: Seq[String],
                            stamp: Option[Long]): Long = {
-    val vdir = Paths.get(root, s"v=$v")
     val smalls = selected
     val names = smalls.map(_.getFileName.toString).toSet
-    val dvPositions: Seq[(String, Long)] =
-      DeletionVectors.dvMap(vdir)
-        .filter { case (n, _) => names(n) }
-        .toSeq.flatMap { case (n, p) => DeletionVectors.read(p).map(n -> _) }
-    // physical-name space end to end: the files store physical names
-    // and the rewrite writes physical names, so column mapping needs
-    // no translation here (clusterBy arrives already physical)
-    val widened = readerFeatures(root).contains("type-widening")
-    val tracked = RowIds.enabled(root)
-    val live =
-      if (widened || tracked) {
-        // a widened snapshot's small files can hold narrow AND wide
-        // halves of the same column — plain parquet cannot merge them,
-        // so read through the DSv2 scan (it widens per file and applies
-        // DVs positionally), restricted to the small files, and
-        // translate logical names back to physical for the rewrite.
-        // A row-tracking rewrite additionally carries each row's id
-        // into the replacement files (materialized `_graft_row_id` —
-        // the scan serves derived AND already-materialized sources
-        // uniformly through `_row_id`).
-        val df = spark.read.format("graft-versioned")
-          .option("versionAsOf", v.toString).load(root)
-        val dataCols = df.columns.toSeq
-        val l2p = colMapL2P(root)
-        val projected = dataCols.map(c => col(c).as(l2p.getOrElse(c, c))) ++
-          (if (tracked)
-            Seq(col("_row_id").as(RowIds.MaterializedCol),
-              col("_row_commit_version").as(RowIds.MaterializedVerCol))
-          else Nil)
-        df.filter(col("_file").isin(smalls.map(_.toString): _*))
-          .select(projected: _*)
-      } else {
-        val base = spark.read.option("mergeSchema", "true")
-          .parquet(smalls.map(_.toString): _*)
-        if (dvPositions.isEmpty) base
-        else {
-          import spark.implicits._
-          // deleted (file, position) pairs of SMALL files only — bounded
-          // by the tail's row count by definition, broadcast-joined away
-          val dels = dvPositions.toDF("__f", "__p")
-          base
-            .withColumn("__f", col("_metadata.file_name"))
-            .withColumn("__p", col("_metadata.row_index"))
-            .join(broadcast(dels), Seq("__f", "__p"), "left_anti")
-            .drop("__f", "__p")
-        }
-      }
+    val live = storedRows(spark, root, v, Some(smalls))
     val bytes = smalls.map(Files.size).sum
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val rewritten =

@@ -1848,7 +1848,7 @@ object VersionedGate {
     * store the raw JSON ONCE as variant, extract typed fields at
     * query time). The store encodes a variant as one un-annotated
     * BINARY ([4-byte BE metadata length][metadata][value] — see
-    * `GroupParquetIo.writeMessageType`), which makes the type-contract
+    * `VersionedDataWriter.fileSchema`), which makes the type-contract
     * refusals structural: FileStats collects no min/max on un-annotated
     * binary, `statOrdered` refuses MIN/MAX agg pushdown, and no source
     * Filter can reference a variant column — extraction predicates stay

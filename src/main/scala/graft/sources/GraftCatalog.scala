@@ -490,7 +490,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (existedBefore &&
           Versioned.latestVersion(root.toString) == versionBefore) {
         val staging = Files.createTempDirectory(root, "_staging_replace_")
-        GroupParquetWriterFactory(
+        VersionedWriterFactory(
           GraftVersionedTable.physicalSchema(declared, stagedColMap),
           staging.toString).emptyFile("part-empty.parquet")
         VersionedWriteIo.commitStaged(root.toString, staging,
@@ -575,7 +575,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"graft catalog: PARTITIONED BY derives column '${d.name}', which " +
           "is already a declared GENERATED/IDENTITY column")
     }
-    GroupParquetIo.writeMessageType(schema2) // DDL-time type check
+    VersionedDataWriter.checkWritable(schema2) // DDL-time type check
     new GraftStagedTable(ident, schema2, specs ++ derived, props2, exists,
       derived.map(_.name).toSet)
   }
@@ -675,7 +675,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * CTAS/RTAS commit. */
   private def publishTableContract(ident: Identifier, schema: StructType,
                                    properties: util.Map[String, String]): Unit = {
-    GroupParquetIo.writeMessageType(schema) // DDL-time type check, fail loud
+    VersionedDataWriter.checkWritable(schema) // DDL-time type check, fail loud
     // validate the layout contract (TBLPROPERTIES: clusterBy,
     // writePartitions, targetFileBytes) at DDL time, not first insert
     Option(properties.get("clusterBy")).filter(_.nonEmpty).foreach { cb =>
@@ -1072,7 +1072,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "TBLPROPERTIES; a narrowing or cross-family retype would " +
             "change the meaning of immutable history")
     }
-    GroupParquetIo.writeMessageType(schema) // evolved schema must stay writable
+    VersionedDataWriter.checkWritable(schema) // evolved schema must stay writable
     Files.write(m, schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     writeProps(ident, props)
     // persist the mapping once it carries information (a rename, a
@@ -1799,8 +1799,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           val schema = SparkSession.active.read
             .option("mergeSchema", "true")
             .parquet(files.map(_.toString): _*).schema
-          // the store's type-set gate, at convert time not first read
-          val expected = GroupParquetIo.writeMessageType(schema)
+          // the store's type-set gate, at convert time not first read;
+          // each file must hold the parquet types the store itself
+          // writes (Spark's converter under the store's write settings)
+          VersionedDataWriter.checkWritable(schema)
+          val expected = VersionedDataWriter.messageType(schema)
           def validate(f: Path): Unit =
             GroupParquetIo.readFooters(Seq(f)).head.schema.getFields.asScala
               .foreach { fld =>

@@ -9,21 +9,18 @@ import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetWriter}
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types => PTypes}
+import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BaseGenericInternalRow, BoundReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -34,7 +31,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport, ParquetWriteSupport, SparkToParquetSchemaConverter, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -361,7 +358,7 @@ private[sources] object GraftVersionedTable {
             rev.get(f.name).map(l => f.copy(name = l))).toSeq)
         }
       // VARIANT columns are stored as un-annotated BINARY (see
-      // GroupParquetIo.writeMessageType), so footer inference yields
+      // VersionedDataWriter.fileSchema), so footer inference yields
       // BinaryType — the root-level marker the DSv2 writer records
       // restores the logical type for path-based loads (catalog loads
       // carry the persisted StructType and never reach inference)
@@ -855,8 +852,7 @@ private[sources] class GraftRowLevelScan(
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
     val v1 = org.apache.spark.sql.graftbridge.PredicateBridge.toV1(predicates)
-    val (onFile, onData) = v1.partition(
-      _.references.toSet == Set(GraftVersionedTable.FileColumn))
+    val (onFile, onData) = v1.partition(GroupParquetIo.onFile)
     runtimeFile = onFile
     val usable = onData.filter(GroupParquetIo.translatable(_, fullSchema))
     runtimeDataTypes = usable.flatMap(_.references).distinct.flatMap(n =>
@@ -866,20 +862,6 @@ private[sources] class GraftRowLevelScan(
   }
 
   @volatile private var runtimeDataTypes: Map[String, DataType] = Map.empty
-
-  /** Conservative `_file` predicate evaluation: None = not understood
-    * (keep the file). */
-  private def fileKeep(f: Filter, path: String): Option[Boolean] = f match {
-    case EqualTo(GraftVersionedTable.FileColumn, v) => Some(v == path)
-    case EqualNullSafe(GraftVersionedTable.FileColumn, v) => Some(v == path)
-    case In(GraftVersionedTable.FileColumn, vs) => Some(vs.contains(path))
-    case IsNotNull(GraftVersionedTable.FileColumn) => Some(true)
-    case And(l, r) =>
-      for { a <- fileKeep(l, path); b <- fileKeep(r, path) } yield a && b
-    case Or(l, r) =>
-      for { a <- fileKeep(l, path); b <- fileKeep(r, path) } yield a || b
-    case _ => None
-  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val version = GraftVersionedTable.resolveVersion(root, options)
@@ -892,18 +874,15 @@ private[sources] class GraftRowLevelScan(
     // the replaced set) only the files that can hold a matching row,
     // and planning stops costing one footer GET per table file
     val statsKept = GroupParquetIo.pruneFilesByStats(
-      Versioned.dataFiles(dir), graft.operators.FileStats.read(dir),
-      dataFilters)
+      GroupParquetIo.pruneFilesByName(Versioned.dataFiles(dir), runtimeFile),
+      graft.operators.FileStats.read(dir), dataFilters)
     val bloomKept = GroupParquetIo.pruneFilesByBloom(statsKept, dir, dataFilters)
     val footers = GroupParquetIo.readFooters(bloomKept)
-    val kept = footers.filter { fg =>
-      val byFile = runtimeFile.forall(f =>
-        fileKeep(f, fg.file).getOrElse(true))
-      // a file survives the data hints unless EVERY row group refutes
-      // them — only then can no row need modification
-      byFile && GroupParquetIo.pruneByStats(Seq(fg), dataFilters, dataTypes)
-        .head.kept.nonEmpty
-    }
+    // a file survives the data hints unless EVERY row group refutes
+    // them — only then can no row need modification
+    val kept = footers.filter(fg =>
+      GroupParquetIo.pruneByStats(Seq(fg), dataFilters, dataTypes)
+        .head.kept.nonEmpty)
     op.scannedState = Some((version,
       kept.map(fg => java.nio.file.Paths.get(fg.file).getFileName.toString).toSet))
     // full files, split per row group for parallelism — never filtered;
@@ -1005,7 +984,7 @@ private[sources] class GraftDeltaWriteBuilder(
     // rows CAN be inserted, their types must be writable — checked
     // here at build time, before a task launches
     if (info.schema().nonEmpty)
-      GroupParquetIo.writeMessageType(
+      VersionedDataWriter.checkWritable(
         GraftVersionedTable.physicalSchema(info.schema(), colMap))
     val feedKeys = Option(tableOptions.get("changeFeedKeys"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
@@ -1210,11 +1189,11 @@ private[sources] class GraftDeltaDataWriter(
       LongType, nullable = true)))
 
   private val insertWriter =
-    new GroupParquetDataWriter(dir, baseName + ".parquet", writeSchema)
+    new VersionedDataWriter(dir, baseName + ".parquet", writeSchema)
   private val deletes =
     scala.collection.mutable.HashMap.empty[String, scala.collection.mutable.ArrayBuffer[Long]]
 
-  // reused per-row buffers: GroupParquetDataWriter consumes the row
+  // reused per-row buffers: VersionedDataWriter consumes the row
   // synchronously, so one id cell + one join shell suffice
   private val idCell = new GenericInternalRow(1)
   private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
@@ -1313,6 +1292,7 @@ private[sources] class GraftVersionedScanBuilder(
     // sees); the stored pushed set is PHYSICAL (what footers speak)
     pushedLogical = filters.filter(GroupParquetIo.translatable(_, fullSchema))
     pushed = pushedLogical.map(GroupParquetIo.mapFilter(_, colMap))
+    pushedOnFile = filters.filter(GroupParquetIo.onFile)
     // the pushed set prunes files and row groups only — Spark
     // re-applies every filter above the scan (as for its own parquet
     // scan)
@@ -1320,6 +1300,7 @@ private[sources] class GraftVersionedScanBuilder(
   }
 
   private var pushedLogical: Array[Filter] = Array.empty
+  private var pushedOnFile: Array[Filter] = Array.empty
 
   override def pushedFilters(): Array[Filter] = pushedLogical
 
@@ -1387,7 +1368,8 @@ private[sources] class GraftVersionedScanBuilder(
         pushedLogical.flatMap(_.references).distinct.flatMap(n =>
           fullSchema.fields.find(_.name == n)
             .map(f => colMap.getOrElse(f.name, f.name) -> f.dataType)).toMap
-      new GraftVersionedScan(required, pushed, filterTypes, options, limit)
+      new GraftVersionedScan(required, pushed, filterTypes, options, limit,
+        onFile = pushedOnFile)
   }
 }
 
@@ -1430,7 +1412,8 @@ private[sources] object AggRowReaderFactory extends PartitionReaderFactory {
 private[sources] class GraftVersionedScan(
     required: StructType, pushed: Array[Filter],
     filterTypes: Map[String, DataType], options: CaseInsensitiveStringMap,
-    limit: Option[Int] = None, runtimeFilterable: Boolean = true)
+    limit: Option[Int] = None, runtimeFilterable: Boolean = true,
+    onFile: Array[Filter] = Array.empty)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeV2Filtering
   with SupportsReportPartitioning {
@@ -1619,13 +1602,15 @@ private[sources] class GraftVersionedScan(
             s"(existing: ${Versioned.versions(root).mkString("v=", ", v=", "")})")
         val dirPath = java.nio.file.Paths.get(dir)
         val all = Versioned.dataFiles(dirPath)
-        // FILE-level skip from the commit's stats sidecar BEFORE any
-        // footer is opened: at object-store scale planning cost is one
-        // round trip per surviving file, so a selective predicate on a
-        // clustered table prunes most of the snapshot for the price of
-        // one sidecar read. Row-group pruning still runs on survivors.
+        // FILE-level skip by name (`_file` predicates), then from the
+        // commit's stats sidecar, BEFORE any footer is opened: at
+        // object-store scale planning cost is one round trip per
+        // surviving file, so a selective predicate on a clustered table
+        // prunes most of the snapshot for the price of one sidecar
+        // read. Row-group pruning still runs on survivors.
         val kept = GroupParquetIo.pruneFilesByStats(
-          all, graft.operators.FileStats.read(dirPath),
+          GroupParquetIo.pruneFilesByName(all, onFile),
+          graft.operators.FileStats.read(dirPath),
           allFilters ++ bucketPruneFilters)
         // second file-level layer: per-file Bloom membership refutes
         // equality probes min/max can't (high-cardinality keys scatter
@@ -2484,7 +2469,7 @@ private[sources] object VersionedPartitionReader {
   private val RowVerK = -4
 
   /** VARIANT as the writer stores it (see
-    * [[GroupParquetIo.writeMessageType]]): one BINARY holding
+    * [[VersionedDataWriter.fileSchema]]): one BINARY holding
     * [4-byte BE metadata length][metadata][value]. */
   def decodeVariant(bytes: Array[Byte]): VariantVal = {
     val mEnd = 4 + java.nio.ByteBuffer.wrap(bytes).getInt
@@ -2713,13 +2698,13 @@ private[sources] class VersionedPartitionReader(
 }
 
 /** Driver-side planning of `graft-versioned` scans: file pruning by
-  * the stats and Bloom sidecars, footer reads, and row-group pruning
+  * name (`_file` predicates) and by the stats and Bloom sidecars,
+  * footer reads, and row-group pruning
   * with Spark [[Filter]]s compiled to parquet [[FilterPredicate]]s.
   * `translatable` (pushdown time) and `compile` (planning time) agree
   * by construction: anything accepted at pushdown has a typed
   * compilation. Pruning is the only use of the pushed set — Spark
-  * re-applies every filter above the scan. Also the write side's
-  * parquet schema ([[writeMessageType]]). */
+  * re-applies every filter above the scan. */
 private[graft] object GroupParquetIo {
 
   /** One data file's footer state: its schema, the row groups the
@@ -2770,6 +2755,32 @@ private[graft] object GroupParquetIo {
       }
     }
   }
+
+  /** A predicate on the `_file` metadata column alone. */
+  def onFile(f: Filter): Boolean =
+    f.references.toSet == Set(GraftVersionedTable.FileColumn)
+
+  /** Conservative `_file` predicate evaluation: None = not understood
+    * (keep the file). */
+  private def fileKeep(f: Filter, path: String): Option[Boolean] = f match {
+    case EqualTo(GraftVersionedTable.FileColumn, v) => Some(v == path)
+    case EqualNullSafe(GraftVersionedTable.FileColumn, v) => Some(v == path)
+    case In(GraftVersionedTable.FileColumn, vs) => Some(vs.contains(path))
+    case IsNotNull(GraftVersionedTable.FileColumn) => Some(true)
+    case And(l, r) =>
+      for { a <- fileKeep(l, path); b <- fileKeep(r, path) } yield a && b
+    case Or(l, r) =>
+      for { a <- fileKeep(l, path); b <- fileKeep(r, path) } yield a || b
+    case _ => None
+  }
+
+  /** FILE-level skipping by name: drop the files a `_file` predicate
+    * refutes (a bin-pack rewrite's `_file IN (…)`, the row-level
+    * scan's runtime group filter), before any footer I/O. */
+  def pruneFilesByName(files: Seq[java.nio.file.Path],
+                       onFile: Array[Filter]): Seq[java.nio.file.Path] =
+    if (onFile.isEmpty) files
+    else files.filter(p => onFile.forall(fileKeep(_, p.toString).getOrElse(true)))
 
   /** Hadoop's default configuration, parsed once per JVM (each
     * `new Configuration()` re-parses the default XML resources);
@@ -3376,62 +3387,6 @@ private[graft] object GroupParquetIo {
       case BooleanType => FilterApi.eq(FilterApi.booleanColumn(a), null.asInstanceOf[java.lang.Boolean])
       case StringType => FilterApi.eq(FilterApi.binaryColumn(a), null.asInstanceOf[Binary])
     }
-
-  /** Catalyst schema → parquet MessageType for the WRITE side: the
-    * standard parquet encodings Spark's vectorized reader decodes back
-    * losslessly (VARIANT is graft's framed BINARY, which the scan
-    * decodes itself). Fails loudly on any type outside the set — at
-    * write-BUILD time (driver), before a single task launches. */
-  def writeMessageType(schema: StructType): MessageType = {
-    require(schema.nonEmpty, "graft-versioned: cannot write a zero-column schema")
-    val b = PTypes.buildMessage()
-    schema.fields.foreach { f =>
-      f.dataType match {
-        case LongType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.INT64, Repetition.OPTIONAL).named(f.name))
-        case IntegerType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.INT32, Repetition.OPTIONAL).named(f.name))
-        case DoubleType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.DOUBLE, Repetition.OPTIONAL).named(f.name))
-        case FloatType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.FLOAT, Repetition.OPTIONAL).named(f.name))
-        case BooleanType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.BOOLEAN, Repetition.OPTIONAL).named(f.name))
-        case StringType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.BINARY, Repetition.OPTIONAL)
-            .as(LogicalTypeAnnotation.stringType()).named(f.name))
-        case DateType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.INT32, Repetition.OPTIONAL)
-            .as(LogicalTypeAnnotation.dateType()).named(f.name))
-        case TimestampType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.INT64, Repetition.OPTIONAL)
-            .as(LogicalTypeAnnotation.timestampType(true,
-              LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name))
-        case TimestampNTZType =>
-          b.addField(PTypes.primitive(PrimitiveTypeName.INT64, Repetition.OPTIONAL)
-            .as(LogicalTypeAnnotation.timestampType(false,
-              LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name))
-        case VariantType =>
-          // VARIANT (Spark 4 semi-structured ingest): ONE un-annotated
-          // BINARY holding [4-byte BE metadata length][metadata][value]
-          // — the store's own encoding (shredded storage later). The
-          // missing annotation is load-bearing: FileStats.toV refuses
-          // min/max on un-annotated BINARY BY CONSTRUCTION (raw byte
-          // order is meaningless for variant; null counts still
-          // collect), statOrdered refuses MIN/MAX agg pushdown, and no
-          // source Filter ever references a variant column so filters
-          // on extracted fields stay engine-side residuals — loudly
-          // visible as an empty PushedFilters on the scan.
-          b.addField(PTypes.primitive(PrimitiveTypeName.BINARY,
-            Repetition.OPTIONAL).named(f.name))
-        case other => throw new UnsupportedOperationException(
-          s"graft-versioned: unsupported column type ${other.simpleString} " +
-            s"for '${f.name}' — the store's column set is " +
-            "long/int/double/float/boolean/string/date/timestamp/variant")
-      }
-    }
-    b.named("graft_versioned")
-  }
 }
 
 // ============================================================ write path
@@ -3461,7 +3416,7 @@ private[sources] class GraftVersionedWriteBuilder(
   override def truncate(): WriteBuilder = { replace = true; this }
 
   override def build(): Write = {
-    GroupParquetIo.writeMessageType(info.schema()) // fail loud on unsupported types now
+    VersionedDataWriter.checkWritable(info.schema()) // fail loud on unsupported types now
     // an appendOnly table refuses snapshot replacement (INSERT
     // OVERWRITE / TRUNCATE / mode("overwrite")) — only bootstrap
     // overwrite of an EMPTY root passes (nothing is replaced). The
@@ -3856,7 +3811,7 @@ private[sources] class GraftBatchWrite(
     // auto-fill wrapper computes derived cluster values BEFORE the
     // inner writer sees the row) — every committed file pins exactly
     // one partition tuple, the storage-partitioned-join invariant
-    val inner = GroupParquetWriterFactory(physSchema, staged.toString,
+    val inner = VersionedWriterFactory(physSchema, staged.toString,
       partClusterCols.map(c =>
         physSchema.fieldIndex(colMap.getOrElse(c, c))))
     autoFill.fold(inner: DataWriterFactory)(f =>
@@ -3957,7 +3912,7 @@ private[sources] class GraftStreamingWrite(
     // values and pruning + storage-partitioned joins degrade until the
     // next OPTIMIZE re-pins. Unsorted micro-batch input only costs
     // extra files (one per key run); the invariant holds regardless.
-    val inner = GroupParquetWriterFactory(physSchema, stagedBase.toString,
+    val inner = VersionedWriterFactory(physSchema, stagedBase.toString,
       partClusterCols.map(c =>
         physSchema.fieldIndex(colMap.getOrElse(c, c))))
     // GENERATED fill (bucket/temporal/truncate cluster columns):
@@ -4393,7 +4348,7 @@ private[graft] object VersionedWriteIo {
       // a fully-pruned no-op still commits a readable version; the
       // schema needs a carrier only when nothing else survived
       if (carryOver.isEmpty && Versioned.listParquet(staged).isEmpty)
-        GroupParquetWriterFactory(schema, staged.toString)
+        VersionedWriterFactory(schema, staged.toString)
           .emptyFile(uniqueEmptyName())
       writeRowLevelMarker(staged, scannedNames)
       Carry(carryOver, dvNames, Some(baseDir))
@@ -4442,7 +4397,7 @@ private[graft] object VersionedWriteIo {
     // an all-empty-partitions write still commits a readable version:
     // one zero-row file carries the schema for every future reader
     if (Versioned.listParquet(staged).isEmpty)
-      GroupParquetWriterFactory(schema, staged.toString)
+      VersionedWriterFactory(schema, staged.toString)
         .emptyFile(uniqueEmptyName())
     GraftVersionedTable.recordVariantCols(root, schema)
     epochTag.foreach { t =>
@@ -4541,7 +4496,7 @@ private[graft] object VersionedWriteIo {
   * unreplaced files forward under the SAME name, so name-keyed
   * identity (DV sidecars, file-level conflict checks) stays stable
   * across versions. */
-private[graft] case class GroupParquetWriterFactory(
+private[graft] case class VersionedWriterFactory(
     schema: StructType, stagingDir: String,
     splitIdx: Seq[Int] = Seq.empty)
   extends DataWriterFactory with StreamingDataWriterFactory {
@@ -4549,26 +4504,113 @@ private[graft] case class GroupParquetWriterFactory(
   private def unique: String = java.util.UUID.randomUUID.toString.take(8)
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GroupParquetDataWriter(stagingDir,
+    new VersionedDataWriter(stagingDir,
       f"part-$partitionId%05d-$taskId-$unique.parquet", schema, splitIdx)
 
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new GroupParquetDataWriter(s"$stagingDir/epoch=$epochId",
+    new VersionedDataWriter(s"$stagingDir/epoch=$epochId",
       f"part-$partitionId%05d-$taskId-$unique.parquet", schema, splitIdx)
 
   /** Zero-row file with the write schema (driver-side, commit path). */
   def emptyFile(name: String): Unit =
-    new GroupParquetDataWriter(stagingDir, name, schema).forceCreateAndClose()
+    new VersionedDataWriter(stagingDir, name, schema).forceCreateAndClose()
 }
 
-private[sources] class GroupParquetDataWriter(
+/** The store's column types and how its files encode them. Encoding is
+  * Spark's own: [[ParquetWriteSupport]] writes the rows and
+  * [[SparkToParquetSchemaConverter]] maps the types, both configured
+  * by [[writeDefaults]] — never by the session, so a file's layout
+  * does not depend on who wrote it. */
+private[graft] object VersionedDataWriter {
+
+  /** Refuses a schema the store cannot write — at write-BUILD or DDL
+    * time (driver), before a single task launches. */
+  def checkWritable(schema: StructType): Unit = {
+    require(schema.nonEmpty, "graft-versioned: cannot write a zero-column schema")
+    schema.fields.foreach { f =>
+      f.dataType match {
+        case LongType | IntegerType | DoubleType | FloatType | BooleanType |
+             StringType | DateType | TimestampType | TimestampNTZType |
+             VariantType =>
+        case other => throw new UnsupportedOperationException(
+          s"graft-versioned: unsupported column type ${other.simpleString} " +
+            s"for '${f.name}' — the store's column set is " +
+            "long/int/double/float/boolean/string/date/timestamp/variant")
+      }
+    }
+  }
+
+  /** The row schema the files record (footer inference reads it
+    * back): every column nullable, no field metadata, and VARIANT as
+    * ONE un-annotated BINARY of framed bytes ([[FramedVariantRow]]),
+    * restored on path loads by the root's `_graft_variant_cols`. The
+    * missing annotation is load-bearing: FileStats.toV refuses min/max
+    * on it (null counts still collect), statOrdered refuses MIN/MAX agg
+    * pushdown, and no source Filter ever references a variant column. */
+  def fileSchema(schema: StructType): StructType =
+    StructType(schema.fields.map(f => StructField(f.name, f.dataType match {
+      case VariantType => BinaryType
+      case t => t
+    })))
+
+  /** Hadoop defaults plus the keys [[ParquetWriteSupport]]`.init`
+    * requires, fixed to the store's encoding: standard (non-legacy)
+    * layout, INT64 TIMESTAMP(MICROS), no field ids, no VARIANT
+    * annotation (VARIANT never reaches the converter as VARIANT). */
+  lazy val writeDefaults: Configuration = {
+    val c = new Configuration(GroupParquetIo.hadoopDefaults)
+    c.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+    c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+    c.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
+    c.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+    c
+  }
+
+  /** The parquet schema a file written with `schema` carries. */
+  def messageType(schema: StructType): MessageType =
+    new SparkToParquetSchemaConverter(writeDefaults).convert(fileSchema(schema))
+
+  private[sources] class Builder(path: HPath)
+    extends ParquetWriter.Builder[InternalRow, Builder](path) {
+    override def self(): Builder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+}
+
+/** `row` with its VARIANT ordinals read as the framed BINARY the file
+  * schema declares ([4-byte BE metadata length][metadata][value],
+  * decoded by [[VersionedPartitionReader.decodeVariant]]); every other
+  * ordinal reads through. */
+private final class FramedVariantRow(types: Array[DataType])
+  extends InternalRow with BaseGenericInternalRow {
+  var row: InternalRow = _
+  override protected def genericGet(i: Int): Any =
+    if (types(i) != VariantType) row.get(i, types(i))
+    else {
+      val v = row.getVariant(i)
+      val (m, d) = (v.getMetadata, v.getValue)
+      java.nio.ByteBuffer.allocate(4 + m.length + d.length)
+        .putInt(m.length).put(m).put(d).array()
+    }
+  override def isNullAt(i: Int): Boolean = row.isNullAt(i)
+  override def numFields: Int = types.length
+  override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+  override def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException
+}
+
+private[sources] class VersionedDataWriter(
     dir: String, fileName: String, schema: StructType,
     splitIdx: Seq[Int] = Seq.empty)
   extends DataWriter[InternalRow] {
 
-  private lazy val msgType: MessageType = GroupParquetIo.writeMessageType(schema)
-  private var writer: ParquetWriter[Group] = null
+  private val fileSchema = VersionedDataWriter.fileSchema(schema)
+  private val framed =
+    if (!schema.exists(_.dataType == VariantType)) None
+    else Some(new FramedVariantRow(schema.fields.map(_.dataType)))
+  private var writer: ParquetWriter[InternalRow] = null
   private var path: java.nio.file.Path = null
 
   // partition-boundary file roll: the names of files already closed by
@@ -4578,23 +4620,12 @@ private[sources] class GroupParquetDataWriter(
   // previous partition — close the file and start the next, and every
   // committed file pins exactly ONE partition tuple (min == max in the
   // stats sidecar: the invariant storage-partitioned joins prove
-  // against). Values are COPIED out of the row (Spark reuses buffers).
+  // against). The key is COPIED out of the row (Spark reuses buffers).
   private val rolled = scala.collection.mutable.ArrayBuffer.empty[String]
   private var fileSeq = 0
-  private var lastKey: Seq[Any] = null
-
-  private def keyOf(row: InternalRow): Seq[Any] =
-    splitIdx.map { i =>
-      if (row.isNullAt(i)) null
-      else schema.fields(i).dataType match {
-        case LongType => row.getLong(i)
-        case IntegerType | DateType => row.getInt(i)
-        case TimestampType | TimestampNTZType => row.getLong(i)
-        case BooleanType => row.getBoolean(i)
-        case StringType => row.getUTF8String(i).toString
-        case _ => null // unexpected partition type: never roll on it
-      }
-    }
+  private var lastKey: InternalRow = null
+  private lazy val keyOf = UnsafeProjection.create(splitIdx.map(i =>
+    BoundReference(i, schema.fields(i).dataType, nullable = true)))
 
   private def currentName: String =
     if (splitIdx.isEmpty || fileSeq == 0) fileName
@@ -4603,8 +4634,11 @@ private[sources] class GroupParquetDataWriter(
   private def open(): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     path = java.nio.file.Paths.get(dir, currentName)
-    writer = ExampleParquetWriter.builder(new HPath(path.toString))
-      .withType(msgType).withConf(new Configuration(GroupParquetIo.hadoopDefaults)).build()
+    // codec and row-group/page sizes: the parquet-mr builder defaults
+    val conf = new Configuration(VersionedDataWriter.writeDefaults)
+    ParquetWriteSupport.setSchema(fileSchema, conf)
+    writer = new VersionedDataWriter.Builder(new HPath(path.toString))
+      .withConf(conf).build()
   }
 
   private[sources] def forceCreateAndClose(): Unit = { open(); writer.close() }
@@ -4612,43 +4646,21 @@ private[sources] class GroupParquetDataWriter(
   override def write(row: InternalRow): Unit = {
     if (splitIdx.nonEmpty) {
       val key = keyOf(row)
-      if (lastKey != null && key != lastKey && writer != null) {
-        writer.close()
-        rolled += currentName
-        fileSeq += 1
-        writer = null
+      if (lastKey == null || key != lastKey) {
+        if (writer != null) {
+          writer.close()
+          rolled += currentName
+          fileSeq += 1
+          writer = null
+        }
+        lastKey = key.copy()
       }
-      lastKey = key
     }
     if (writer == null) open()
-    val g = new SimpleGroup(msgType)
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) schema.fields(i).dataType match {
-        case LongType    => g.add(i, row.getLong(i))
-        case IntegerType => g.add(i, row.getInt(i))
-        case DateType    => g.add(i, row.getInt(i))
-        case TimestampType | TimestampNTZType => g.add(i, row.getLong(i))
-        case DoubleType  => g.add(i, row.getDouble(i))
-        case FloatType   => g.add(i, row.getFloat(i))
-        case BooleanType => g.add(i, row.getBoolean(i))
-        case StringType  =>
-          g.add(i, Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-        case VariantType =>
-          // [4-byte BE metadata length][metadata][value] — see
-          // GroupParquetIo.writeMessageType's VARIANT contract
-          val v = row.getVariant(i)
-          val m = v.getMetadata
-          val d = v.getValue
-          val buf = java.nio.ByteBuffer.allocate(4 + m.length + d.length)
-          buf.putInt(m.length).put(m).put(d)
-          g.add(i, Binary.fromConstantByteArray(buf.array()))
-        case other => throw new UnsupportedOperationException(
-          s"graft-versioned: unsupported column type ${other.simpleString}")
-      }
-      i += 1
+    framed match {
+      case Some(f) => f.row = row; writer.write(f)
+      case None => writer.write(row)
     }
-    writer.write(g)
   }
 
   override def commit(): WriterCommitMessage = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
 /** Counts the Spark jobs a block starts. Listener events arrive
   * asynchronously but in order, so a sentinel job run afterwards marks
@@ -39,5 +39,25 @@ trait JobCounting { self: SparkSpec =>
   protected def jobsDuring[A](body: => A): (A, Int) = {
     val (out, jobs) = jobEventsDuring(body)
     (out, jobs.size)
+  }
+
+  /** Runs `body` and returns its result with the input records its
+    * jobs' tasks read (`inputMetrics.recordsRead`, summed over every
+    * task of every job the block started). */
+  protected def recordsReadDuring[A](body: => A): (A, Long) = {
+    val read = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m =>
+          read.merge(t.stageId, java.lang.Long.valueOf(m.inputMetrics.recordsRead),
+            (a: java.lang.Long, b: java.lang.Long) => java.lang.Long.valueOf(a + b)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (out, jobs) = jobEventsDuring(body)
+      import scala.jdk.CollectionConverters._
+      val stages = jobs.flatMap(_.stageIds).toSet
+      (out, read.asScala.collect { case (s, n) if stages(s) => n.longValue }.sum)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.{Files => JF, Paths => JP}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSpec
+import graft.{JobCounting, SparkSpec}
 import graft.operators.{DeletionVectors, Versioned}
 
 /** Incremental OPTIMIZE ([[Versioned.compactSmall]] via
@@ -13,7 +13,7 @@ import graft.operators.{DeletionVectors, Versioned}
   * rewritten, the clustered bulk hard-links over byte-identical, DV'd
   * small files materialize to live rows, and the no-op edge commits
   * nothing. */
-class BinPackSpec extends AnyFunSuite with SparkSpec {
+class BinPackSpec extends AnyFunSuite with SparkSpec with JobCounting {
 
   private lazy val warehouse: String = {
     val w = java.nio.file.Files.createTempDirectory("graft_binpack_").toString
@@ -121,10 +121,12 @@ class BinPackSpec extends AnyFunSuite with SparkSpec {
       .createOrReplaceTempView("bulk4")
     sql("INSERT INTO gbin.ns.t4 SELECT id, grp FROM bulk4")
     sql("INSERT INTO gbin.ns.t4 VALUES (20000, 1), (20001, 2), (20002, 3)")
-    // column mapping: files keep the birth name, reads see `cat`
+    // column mapping: files keep the birth name `grp`, reads see
+    // `cat`; the re-added `grp` gets a fresh physical name
     sql("ALTER TABLE gbin.ns.t4 RENAME COLUMN grp TO cat")
     sql("ALTER TABLE gbin.ns.t4 ADD COLUMN tag STRING")
-    sql("INSERT INTO gbin.ns.t4 VALUES (20003, 4, 'x'), (20004, 5, 'y')")
+    sql("ALTER TABLE gbin.ns.t4 ADD COLUMN grp BIGINT")
+    sql("INSERT INTO gbin.ns.t4 VALUES (20003, 4, 'x', 40), (20004, 5, 'y', 50)")
     sql("DELETE FROM gbin.ns.t4 WHERE id IN (20001, 20004)")
     val root = s"$warehouse/ns/t4"
     val v0 = Versioned.latestVersion(root).get
@@ -137,11 +139,109 @@ class BinPackSpec extends AnyFunSuite with SparkSpec {
     assert(v === v0 + 1)
     assert(DeletionVectors.dvMap(JP.get(root, s"v=$v")).isEmpty,
       "bin-packing must materialize the tail's DVs away")
-    assert(spark.table("gbin.ns.t4").columns.toSeq === Seq("id", "cat", "tag"))
+    assert(spark.table("gbin.ns.t4").columns.toSeq === Seq("id", "cat", "tag", "grp"))
     assert(sql("SELECT * FROM gbin.ns.t4").collect().map(_.toString).sorted.toSeq
       === before)
-    assert(sql("SELECT id, cat, tag FROM gbin.ns.t4 WHERE id >= 20000 ORDER BY id")
+    assert(sql("SELECT id, cat, tag, grp FROM gbin.ns.t4 WHERE id >= 20000 ORDER BY id")
       .collect().map(_.toString).toSeq ===
-      Seq("[20000,1,null]", "[20002,3,null]", "[20003,4,x]"))
+      Seq("[20000,1,null,null]", "[20002,3,null,null]", "[20003,4,x,40]"))
+  }
+
+  /** Four small appends over one big file; returns the root. */
+  private def smallTail(t: String, props: String): String = {
+    sql(s"DROP TABLE IF EXISTS gbin.ns.$t")
+    sql(s"CREATE TABLE gbin.ns.$t (id INT, grp BIGINT) USING `graft-versioned` " +
+      s"TBLPROPERTIES ($props)")
+    spark.range(20000).selectExpr("CAST(id AS INT) AS id", "id % 7 AS grp")
+      .createOrReplaceTempView(s"bulk_$t")
+    sql(s"INSERT INTO gbin.ns.$t SELECT id, grp FROM bulk_$t")
+    s"$warehouse/ns/$t"
+  }
+
+  test("bin-pack of a type-widened table reads only the small files' rows") {
+    val root = smallTail("t5", "'writePartitions'='1', 'clusterBy'='id'")
+    sql("ALTER TABLE gbin.ns.t5 ALTER COLUMN id TYPE BIGINT")
+    assert(Versioned.readerFeatures(root).contains("type-widening"))
+    sql("INSERT INTO gbin.ns.t5 VALUES (20000, 1)")
+    sql("INSERT INTO gbin.ns.t5 VALUES (20001, 2)")
+    sql("INSERT INTO gbin.ns.t5 VALUES (3000000000, 3)")
+    val (v, read) = recordsReadDuring(
+      Versioned.compactSmall(spark, root, smallerThanBytes = 16384,
+        targetFileBytes = 1L << 20))
+    assert(Versioned.dataFiles(JP.get(root, s"v=$v")).size === 2)
+    assert(read === 3L, "the rewrite must read the three small rows only")
+    assert(sql("SELECT count(*), max(id) FROM gbin.ns.t5").collect()(0)
+      .toString === "[20003,3000000000]")
+  }
+
+  test("bin-pack of a row-tracked table reads only the small files' rows " +
+      "and keeps their ids") {
+    val root = smallTail("t6",
+      "'writePartitions'='1', 'clusterBy'='id', 'rowTracking'='true'")
+    sql("INSERT INTO gbin.ns.t6 VALUES (20000, 1)")
+    sql("INSERT INTO gbin.ns.t6 VALUES (20001, 2)")
+    sql("INSERT INTO gbin.ns.t6 VALUES (20002, 3)")
+    def ids = sql("SELECT id, _row_id FROM gbin.ns.t6 WHERE id >= 19998")
+      .collect().map(_.toString).sorted.toSeq
+    val before = ids
+    val (v, read) = recordsReadDuring(
+      Versioned.compactSmall(spark, root, smallerThanBytes = 16384,
+        targetFileBytes = 1L << 20))
+    assert(Versioned.dataFiles(JP.get(root, s"v=$v")).size === 2)
+    assert(read === 3L, "the rewrite must read the three small rows only")
+    assert(ids === before)
+    assert(sql("SELECT count(*) FROM gbin.ns.t6").collect()(0).getLong(0)
+      === 20003L)
+  }
+
+  test("compaction keeps VARIANT in the store's framed encoding, " +
+      "whole-table and bin-pack") {
+    def variantTable(t: String): Unit = {
+      sql(s"DROP TABLE IF EXISTS gbin.ns.$t")
+      sql(s"CREATE TABLE gbin.ns.$t (id BIGINT, payload VARIANT) " +
+        "USING `graft-versioned`")
+      Seq((0, 3), (3, 6)).foreach { case (a, b) =>
+        sql(s"INSERT INTO gbin.ns.$t SELECT id, " +
+          s"parse_json(to_json(named_struct('n', id))) FROM range($a, $b)")
+      }
+    }
+    def rows(t: String): Seq[String] = spark.table(s"gbin.ns.$t")
+      .selectExpr("id", "to_json(payload)").orderBy("id")
+      .collect().map(_.toString).toSeq
+    val want = (0 until 6).map(i => s"[$i,{\"n\":$i}]")
+    variantTable("t7")
+    sql("CALL gbin.sys.compact(table => 'ns.t7')").collect()
+    assert(rows("t7") === want)
+    variantTable("t8")
+    sql("CALL gbin.sys.compact(table => 'ns.t8', " +
+      "target_file_bytes => 1048576, only_smaller_than => 1048576)").collect()
+    assert(rows("t8") === want)
+    Seq("t7", "t8").foreach { t =>
+      val root = s"$warehouse/ns/$t"
+      Versioned.dataFiles(JP.get(root, s"v=${Versioned.latestVersion(root).get}"))
+        .foreach { f =>
+          val fld = spark.read.parquet(f.toString).schema("payload")
+          assert(fld.dataType === org.apache.spark.sql.types.BinaryType,
+            s"$t: ${f.getFileName} stores payload as ${fld.dataType}")
+        }
+    }
+  }
+
+  test("compacting a row-tracked table whose re-added column reuses a " +
+      "renamed column's name keeps every column's values") {
+    sql("DROP TABLE IF EXISTS gbin.ns.t9")
+    sql("CREATE TABLE gbin.ns.t9 (id BIGINT, grp BIGINT) USING `graft-versioned` " +
+      "TBLPROPERTIES ('rowTracking'='true')")
+    sql("INSERT INTO gbin.ns.t9 VALUES (1, 10), (2, 20)")
+    sql("ALTER TABLE gbin.ns.t9 RENAME COLUMN grp TO cat")
+    sql("ALTER TABLE gbin.ns.t9 ADD COLUMN grp BIGINT")
+    sql("INSERT INTO gbin.ns.t9 VALUES (3, 30, 300)")
+    def all = sql("SELECT id, cat, grp, _row_id FROM gbin.ns.t9 ORDER BY id")
+      .collect().map(_.toString).toSeq
+    val before = all
+    assert(before.map(_.split(",").take(3).mkString(",")) ===
+      Seq("[1,10,null", "[2,20,null", "[3,30,300"))
+    sql("CALL gbin.sys.compact(table => 'ns.t9')").collect()
+    assert(all === before)
   }
 }

@@ -24,7 +24,9 @@ import graft.operators.FileStats.{B, ColStat, D, L, S, V}
   * epochs and the zero-row schema carrier of an all-empty write: every
   * column's parquet primitive type, logical annotation and repetition,
   * the codec, and the `_graft_stats` line of each new file; every row
-  * reads back equal, VARIANT included. */
+  * reads back equal, VARIANT included. Also the partition-boundary
+  * roll: one task writing several identity-partition values cuts one
+  * file per value, whatever the key's type. */
 class StoreFileContractSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val warehouse: String = {
@@ -228,5 +230,28 @@ class StoreFileContractSpec extends AnyFunSuite with SparkSpec {
     assert(rendered(spark.table(t)) === want)
     // a path-based load restores VARIANT from the root's marker
     assert(rendered(spark.read.format("graft-versioned").load(root)) === want)
+  }
+
+  test("one task writing three DOUBLE partition values cuts three files, " +
+      "each pinning one value") {
+    warehouse
+    val t = "gfc.ns.droll"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, d DOUBLE) USING `graft-versioned` " +
+      "PARTITIONED BY (d) TBLPROPERTIES ('writePartitions'='1')")
+    spark.sql(s"INSERT INTO $t SELECT id, CAST(id % 3 AS DOUBLE) / 2 " +
+      "FROM range(0, 30)")
+    val vdir = Paths.get(warehouse, "ns", "droll", "v=0")
+    val stats = FileStats.read(vdir)
+    val files = Versioned.dataFiles(vdir)
+    assert(files.size === 3, files.map(_.getFileName).toString)
+    val pinned = files.map { f =>
+      val cs = stats(f.getFileName.toString).cols("d")
+      assert(cs.lo.isDefined && cs.lo === cs.hi,
+        s"${f.getFileName} spans d in [${cs.lo}, ${cs.hi}]")
+      cs.lo.get
+    }
+    assert(pinned.toSet === Set[V](D(0.0), D(0.5), D(1.0)))
+    assert(spark.table(t).count() === 30L)
   }
 }
