@@ -677,12 +677,10 @@ object Versioned {
       .schema(graft.sources.VersionedDataWriter.fileSchema(
         readSnapshot(spark, root, v).schema))
       .option("versionAsOf", v.toString).load(root)
-    val ids =
-      if (!RowIds.enabled(root)) Nil
-      else Seq(col("_row_id").as(RowIds.MaterializedCol),
-        col("_row_commit_version").as(RowIds.MaterializedVerCol))
-    only.fold(d)(fs => d.filter(col("_file").isin(fs.map(_.toString): _*)))
-      .select(d.columns.toSeq.map(col) ++ ids: _*)
+    val rows = only.fold(d)(fs => d.filter(col("_file").isin(fs.map(_.toString): _*)))
+    if (!RowIds.enabled(root)) rows
+    else rows.select(col("*"), col("_row_id").as(RowIds.MaterializedCol),
+      col("_row_commit_version").as(RowIds.MaterializedVerCol))
   }
 
   /** Shared rewrite half of [[compactSmall]]/[[compactWhere]]: read the
