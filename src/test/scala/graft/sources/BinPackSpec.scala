@@ -147,8 +147,9 @@ class BinPackSpec extends AnyFunSuite with SparkSpec with JobCounting {
       Seq("[20000,1,null,null]", "[20002,3,null,null]", "[20003,4,x,40]"))
   }
 
-  /** Four small appends over one big file; returns the root. */
-  private def smallTail(t: String, props: String): String = {
+  /** A table holding one big file (each test appends its small tail);
+    * returns the root. */
+  private def oneBigFile(t: String, props: String): String = {
     sql(s"DROP TABLE IF EXISTS gbin.ns.$t")
     sql(s"CREATE TABLE gbin.ns.$t (id INT, grp BIGINT) USING `graft-versioned` " +
       s"TBLPROPERTIES ($props)")
@@ -159,7 +160,7 @@ class BinPackSpec extends AnyFunSuite with SparkSpec with JobCounting {
   }
 
   test("bin-pack of a type-widened table reads only the small files' rows") {
-    val root = smallTail("t5", "'writePartitions'='1', 'clusterBy'='id'")
+    val root = oneBigFile("t5", "'writePartitions'='1', 'clusterBy'='id'")
     sql("ALTER TABLE gbin.ns.t5 ALTER COLUMN id TYPE BIGINT")
     assert(Versioned.readerFeatures(root).contains("type-widening"))
     sql("INSERT INTO gbin.ns.t5 VALUES (20000, 1)")
@@ -176,7 +177,7 @@ class BinPackSpec extends AnyFunSuite with SparkSpec with JobCounting {
 
   test("bin-pack of a row-tracked table reads only the small files' rows " +
       "and keeps their ids") {
-    val root = smallTail("t6",
+    val root = oneBigFile("t6",
       "'writePartitions'='1', 'clusterBy'='id', 'rowTracking'='true'")
     sql("INSERT INTO gbin.ns.t6 VALUES (20000, 1)")
     sql("INSERT INTO gbin.ns.t6 VALUES (20001, 2)")
