@@ -97,3 +97,34 @@ private[graft] final class RaceOnFirstClaim(inner: CommitStore, rival: () => Uni
 
   override def latestVersion(root: Path): Option[Long] = inner.latestVersion(root)
 }
+
+/** A writer that dies right after winning its claim: the claim is
+  * delegated to `inner` (so the version is published), then the
+  * commit routine gets an exception instead of returning — nothing
+  * the routine runs after `publishVersion` happens. `claimed` holds
+  * the version that published. */
+private[graft] final class CrashAfterClaim(inner: CommitStore) extends CommitStore {
+  val claimed = new java.util.concurrent.atomic.AtomicLong(-1L)
+
+  override def publishVersion(root: Path, staged: Path,
+                              version: Long): Boolean = {
+    val won = inner.publishVersion(root, staged, version)
+    if (won) {
+      claimed.set(version)
+      throw new IllegalStateException(
+        s"${CrashAfterClaim.Marker} v=$version under $root")
+    }
+    won
+  }
+
+  override def publishFile(target: Path, bytes: Array[Byte]): Unit =
+    inner.publishFile(target, bytes)
+
+  override def listVersions(root: Path): Seq[Long] = inner.listVersions(root)
+
+  override def latestVersion(root: Path): Option[Long] = inner.latestVersion(root)
+}
+
+private[graft] object CrashAfterClaim {
+  val Marker = "writer crashed right after claiming"
+}
