@@ -94,46 +94,32 @@ object Versioned {
   private[graft] def listVersionsPosix(root: String): Seq[Long] =
     versionDirs(root).map(_._1)
 
-  /** Stamp an already-committed version (every commit stamps AFTER
-    * its publish — [[graft.sources.VersionedWriteIo.commit]]'s tail —
-    * so [[readAsOf]]'s unstamped-skip rule covers a crash between the
-    * two). Every `CheckpointInterval`-th
-    * stamped commit also refreshes the aggregated commit-log
-    * checkpoint (best-effort — it is an accelerator, never truth).
+  /** The stamp a commit onto `base` records for a requested `ts`:
+    * `max(parent stamp, ts)`, where the parent stamp is the nearest
+    * stamped version at or below `base`.
     *
     * IN-COMMIT TIMESTAMP MONOTONICITY (Delta's inCommitTimestamps
     * rationale): `TIMESTAMP AS OF` ([[resolveAsOf]]), CDF timestamp
     * bounds and age-based retention all assume stamps are monotone in
     * version — with multiple writers and clock skew, wall-clock is
     * not, and a backwards stamp would resolve time travel to the wrong
-    * version. Every stamp is therefore clamped to
-    * `max(parent stamp, ts)` — EQUAL stamps stay legal (a layout-only
-    * rewrite like compact deliberately shares its source's stamp, and
+    * version. EQUAL stamps stay legal (a layout-only rewrite like
+    * compact deliberately shares its source's stamp, and
     * [[resolveAsOf]] breaks ties toward the newest version), only a
     * strictly BACKWARDS stamp is lifted. The walk stops at the nearest
-    * stamped ancestor (normally the immediate parent, one O(1) read;
-    * an unstamped prefix only exists on path-based legacy roots whose
-    * time travel is by version). */
-  private[graft] def writeStamp(root: String, version: Long, ts: Long): Unit = {
-    val parent = ((version - 1) to 0L by -1).iterator
-      .map(commitStamp(root, _)).collectFirst { case Some(t) => t }
-    val stamp = parent match {
-      case Some(p) if ts < p => p
-      case _ => ts
-    }
-    Files.write(Paths.get(root, s"v=$version", CommitManifest),
-      stamp.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    if (version > 0 && version % CheckpointInterval == 0)
-      try writeCheckpoint(root, cover = version - 1)
-      catch { case scala.util.control.NonFatal(_) => () }
-  }
+    * stamped ancestor (normally `base` itself, one O(1) read; an
+    * unstamped prefix only exists on path-based roots written with
+    * [[writeNext]] and no `commitTs`). */
+  private[graft] def clampStamp(root: String, base: Option[Long], ts: Long): Long =
+    base.iterator.flatMap(b => (b to 0L by -1).iterator)
+      .map(commitStamp(root, _)).collectFirst { case Some(p) => math.max(p, ts) }
+      .getOrElse(ts)
 
   /** S13 load: write the next version (old data stays addressable — the
     * copy-to-old-data step becomes a no-op). Pass `commitTs` to stamp
-    * the version with a commit timestamp in a per-version manifest
-    * (`_graft_commit`, underscore-prefixed so Spark's file index skips
-    * it) — the deterministic anchor for [[readAsOf]] time travel;
-    * directory mtimes would drift across copies/restores. `layout`
+    * the version with a commit timestamp in its commit record
+    * ([[CommitRecord]]) — the deterministic anchor for [[readAsOf]]
+    * time travel; directory mtimes would drift across copies/restores. `layout`
     * applies writer-side clustering + file-size targets
     * ([[Layout.WriteSpec]]) so the version's row-group stats prune for
     * readers filtering on the sort key. The job writes into a
@@ -166,29 +152,22 @@ object Versioned {
     try Layout.applySpec(df, layout).write
       .options(Layout.writerOptions(layout)).parquet(staged.toString)
     catch { case e: Throwable => deleteRecursively(staged); throw e }
-    VersionedWriteIo.commit(root, staged, commitTs) { base =>
+    VersionedWriteIo.commit(root, staged, CommitRecord(stamp = commitTs)) { base =>
       checkBase(base)
       VersionedWriteIo.Carry()
     }
   }
 
-  private val CommitManifest = "_graft_commit"
-
-  /** The commit stamp written by [[writeNext]], if the version has one. */
-  def commitStamp(root: String, version: Long): Option[Long] = {
-    val f = Paths.get(root, s"v=$version", CommitManifest)
-    if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
+  /** The commit stamp of a version, if its commit recorded one. */
+  def commitStamp(root: String, version: Long): Option[Long] =
+    commitRecord(root, version).stamp
 
   // ------------------------------------------- commit-log checkpoint
 
   /** Aggregated COMMIT-LOG CHECKPOINT (`_graft_checkpoint`) — the
     * `_last_checkpoint` analog for long histories. `TIMESTAMP AS OF`
-    * resolution and `sys.history` otherwise read one `_graft_commit`
-    * stamp (plus markers, file sizes, DV headers) PER VERSION — on an
+    * resolution and `sys.history` otherwise read one commit record
+    * (plus file sizes and DV headers) PER VERSION — on an
     * object store a 10k-commit history is 10k GETs per timestamp-travel
     * read or history listing. The checkpoint aggregates the IMMUTABLE
     * per-commit facts (stamp, operation kind, file count, byte
@@ -205,8 +184,8 @@ object Versioned {
     * the full walk; and [[rollback]] truncates the cover below a
     * dropped version, because a later commit may REUSE that version
     * number with different facts. Rows cover versions strictly BELOW
-    * the committing version — its change feed and message may land
-    * after the stamp, so its facts are not final yet. */
+    * the committing version — its change feed lands after its claim,
+    * so its feed presence is not final yet. */
   private[graft] val CheckpointFile = "_graft_checkpoint"
   private[graft] val CheckpointInterval = 10L
 
@@ -223,16 +202,11 @@ object Versioned {
     val vdir = Paths.get(root, s"v=$v")
     val files = dataFiles(vdir)
     val dvs = DeletionVectors.dvMap(vdir)
-    val op =
-      if (Files.exists(vdir.resolve("_graft_rowlevel"))) "rowlevel"
-      else if (Files.exists(vdir.resolve("_graft_epoch"))) "stream-epoch"
-      else if (Files.exists(vdir.resolve("_graft_txn"))) "txn-write"
-      else "write"
-    CommitInfo(commitStamp(root, v), op, files.size,
+    val record = commitRecord(root, v)
+    CommitInfo(record.stamp, record.op, files.size,
       files.map(Files.size(_)).sum, dvs.size,
       dvs.values.map(DeletionVectors.cardinality).sum,
-      VersionedWriteIo.commitMessage(root, v),
-      Files.exists(Paths.get(feedDir(root, v))))
+      record.message, Files.exists(Paths.get(feedDir(root, v))))
   }
 
   private val cpMapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -267,17 +241,8 @@ object Versioned {
     * and the catalog's history procedure. */
   private[graft] def commitInfoFast(root: String, v: Long,
       cp: Option[(Long, Map[Long, CommitInfo])]): CommitInfo =
-    cp.filter(_._1 >= v).flatMap(_._2.get(v)) match {
-      // an unstamped checkpoint row re-probes the stamp file (the
-      // resolveAsOf discipline): a version stamped AFTER checkpoint
-      // coverage must become visible to CDF bounds, sys.history and
-      // age-based retention too, not stay unstamped forever
-      case Some(info) if info.ts.isEmpty =>
-        commitStamp(root, v).map(ts => info.copy(ts = Some(ts)))
-          .getOrElse(info)
-      case Some(info) => info
-      case None => commitInfoOf(root, v)
-    }
+    cp.filter(_._1 >= v).flatMap(_._2.get(v))
+      .getOrElse(commitInfoOf(root, v))
 
   /** Refresh the checkpoint to cover versions ≤ `cover`: carry rows the
     * previous checkpoint already holds, compute only the new tail —
@@ -286,12 +251,7 @@ object Versioned {
   private[graft] def writeCheckpoint(root: String, cover: Long): Unit =
     checkpointLock.synchronized {
       val carry = readCheckpoint(root) match {
-        // ts=None rows are NOT carried: an unstamped row is what a torn
-        // write (or a later manual re-stamp) leaves behind, and the
-        // refresh must recompute it so a post-checkpoint stamp is
-        // picked up instead of memoized away forever
-        case Some((prevCover, rows)) =>
-          rows.filter { case (v, i) => v <= prevCover && i.ts.nonEmpty }
+        case Some((prevCover, rows)) => rows.filter(_._1 <= prevCover)
         case None => Map.empty[Long, CommitInfo]
       }
       val surviving = versions(root).filter(_ <= cover)
@@ -334,12 +294,12 @@ object Versioned {
     * stable across backup/restore copies (the reference's own restore
     * path, utils_of_backup.py:75-103, would reset them).
     *
-    * Unstamped versions are SKIPPED, not fatal: an unstamped version is
-    * what a writer crash between the publish and the stamp leaves
-    * behind (every commit stamps after publish), and a
-    * single torn write must not poison time travel for every timestamp
-    * on the root — older stamped versions stay resolvable. Only when NO
-    * stamped version exists does readAsOf fail loudly. */
+    * Unstamped versions are SKIPPED, not fatal: a stamp is part of the
+    * commit record its claim publishes, so an unstamped version is one
+    * written by [[writeNext]] without `commitTs`, and it must not
+    * poison time travel for every timestamp on the root — older
+    * stamped versions stay resolvable. Only when NO stamped version
+    * exists does readAsOf fail loudly. */
   def readAsOf(spark: SparkSession, root: String, asOf: Long): DataFrame =
     read(spark, root, Some(resolveAsOf(root, asOf)))
 
@@ -353,13 +313,7 @@ object Versioned {
     // for the post-checkpoint tail — O(interval), not O(history)
     val cp = readCheckpoint(root)
     def stampOf(v: Long): Option[Long] =
-      cp.filter(_._1 >= v).flatMap(_._2.get(v)) match {
-        // an unstamped row re-probes the stamp file: a torn version
-        // may have been manually re-stamped after the checkpoint —
-        // rare, and the probe only costs on actually-unstamped rows
-        case Some(info) => info.ts.orElse(commitStamp(root, v))
-        case None => commitStamp(root, v)
-      }
+      cp.filter(_._1 >= v).flatMap(_._2.get(v)).fold(commitStamp(root, v))(_.ts)
     val stamped = dirs.flatMap { case (v, _) => stampOf(v).map(v -> _) }
     if (stamped.isEmpty)
       throw new IllegalStateException(
@@ -373,6 +327,25 @@ object Versioned {
     // tie-break on version: a compaction rewrite carries its source's
     // stamp forward, and the newer (compacted) layout must win
     eligible.maxBy(e => (e._2, e._1))._1
+  }
+
+  /** The version a compaction rewrites (the current one) and its stamp,
+    * which the rewrite carries. On a time-travel-enabled root (any
+    * stamped version present), a stampless current version would make
+    * compaction emit ANOTHER unstamped version and silently shrink the
+    * readAsOf horizon — refuse instead of quietly degrading (cf.
+    * readAsOf's skip rule). */
+  private def compactionBase(root: String): (Long, Option[Long]) = {
+    val v = latestVersion(root).getOrElse(
+      throw new IllegalStateException(s"no versions under $root"))
+    val stamp = commitStamp(root, v)
+    if (stamp.isEmpty && versionDirs(root).exists { case (ver, _) =>
+        commitStamp(root, ver).isDefined })
+      throw new IllegalStateException(
+        s"current version v=$v under $root has no commit stamp but the root " +
+          "is time-travel-enabled — re-stamp or roll back the torn version " +
+          "before compacting")
+    (v, stamp)
   }
 
   /** OPTIMIZE-style small-file compaction: rewrite the CURRENT version's
@@ -391,20 +364,8 @@ object Versioned {
               targetFileBytes: Long = 128L << 20,
               clusterBy: Seq[String] = Seq.empty,
               zorderBy: Seq[String] = Seq.empty): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no versions under $root"))
+    val (v, stamp) = compactionBase(root)
     val vdir = Paths.get(root, s"v=$v")
-    val stamp = commitStamp(root, v)
-    // On a time-travel-enabled root (any stamped version present), a
-    // stampless current version would make compact emit ANOTHER
-    // unstamped version and silently shrink the readAsOf horizon —
-    // refuse instead of quietly degrading (cf. readAsOf's skip rule).
-    if (stamp.isEmpty && versionDirs(root).exists { case (ver, _) =>
-        commitStamp(root, ver).isDefined })
-      throw new IllegalStateException(
-        s"current version v=$v under $root has no commit stamp but the root " +
-          "is time-travel-enabled — re-stamp or roll back the torn version " +
-          "before compacting")
     val bytes = dataFiles(vdir).map(Files.size).sum
     val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     // compacting a DV-carrying version MATERIALIZES the deletes: the
@@ -453,20 +414,11 @@ object Versioned {
                    smallerThanBytes: Long,
                    targetFileBytes: Long = 128L << 20,
                    clusterBy: Seq[String] = Seq.empty): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no versions under $root"))
-    val vdir = Paths.get(root, s"v=$v")
-    val stamp = commitStamp(root, v)
-    if (stamp.isEmpty && versionDirs(root).exists { case (ver, _) =>
-        commitStamp(root, ver).isDefined })
-      throw new IllegalStateException(
-        s"current version v=$v under $root has no commit stamp but the root " +
-          "is time-travel-enabled — re-stamp or roll back the torn version " +
-          "before compacting")
-    val smalls = dataFiles(vdir).filter(f => Files.size(f) < smallerThanBytes)
+    val (v, stamp) = compactionBase(root)
+    val smalls = dataFiles(Paths.get(root, s"v=$v"))
+      .filter(f => Files.size(f) < smallerThanBytes)
     if (smalls.size < 2) return v
-    rewriteFiles(spark, root, v, smalls, targetFileBytes, clusterBy,
-      commitStamp(root, v))
+    rewriteFiles(spark, root, v, smalls, targetFileBytes, clusterBy, stamp)
   }
 
   /** OPTIMIZE … WHERE (Delta's predicate-scoped compaction): rewrite
@@ -485,16 +437,8 @@ object Versioned {
                    targetFileBytes: Long = 128L << 20,
                    clusterBy: Seq[String] = Seq.empty,
                    smallerThan: Long = Long.MaxValue): Long = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no versions under $root"))
+    val (v, stamp) = compactionBase(root)
     val vdir = Paths.get(root, s"v=$v")
-    val stamp = commitStamp(root, v)
-    if (stamp.isEmpty && versionDirs(root).exists { case (ver, _) =>
-        commitStamp(root, ver).isDefined })
-      throw new IllegalStateException(
-        s"current version v=$v under $root has no commit stamp but the root " +
-          "is time-travel-enabled — re-stamp or roll back the torn version " +
-          "before compacting")
     val stats = FileStats.read(vdir)
     val selected = dataFiles(vdir).filter { f =>
       Files.size(f) < smallerThan &&
@@ -706,7 +650,7 @@ object Versioned {
     rewritten.write.mode("overwrite").parquet(staged.toString)
     VersionedWriteIo.commitRowLevel(root, staged,
       org.apache.spark.sql.types.StructType(rewritten.schema.fields), v, names,
-      stamp.getOrElse(System.currentTimeMillis() * 1000L))
+      VersionedWriteIo.stampValue(stamp))
   }
 
   // ----------------------------------------- protocol feature flags
@@ -894,12 +838,78 @@ object Versioned {
     * INVISIBLE, and at object-store scale the per-read directory
     * listing disappears (the Delta-log contract: the log names the
     * files, the store never gets LISTed on the read path). Line format:
-    * `f <name>` data file, `d <name>` deletion-vector sidecar. */
+    * `f <name>` data file, `d <name>` deletion-vector sidecar, and one
+    * `c {json}` line holding the version's [[CommitRecord]]. */
   private[graft] val FilesManifest = "_graft_files"
 
+  /** One version's COMMIT RECORD — the Delta log entry's commitInfo
+    * and txn actions: written as the `c {json}` line of the version's
+    * [[FilesManifest]] into staging before each claim, so the claim
+    * publishes the commit's facts together with its data, and a
+    * version's facts are final the moment it is visible. Every field
+    * is optional; JSON keys: `ts` the commit stamp (micros for DSv2
+    * commits, the caller's `commitTs` for the path API), `replaced`
+    * the file set a row-level commit replaced (the evidence
+    * [[graft.sources.VersionedWriteIo.commitRowLevel]]'s rebase
+    * reads), `epoch` a streaming epoch's `queryId:epochId` replay tag,
+    * `txnApp`/`txnVersion` an application transaction, `msg` the
+    * commit message. A version without a record (a pre-manifest dir)
+    * reads as the empty record. The op kind is not stored: [[op]]
+    * derives it from the fields. */
+  private[graft] case class CommitRecord(
+      stamp: Option[Long] = None,
+      replaced: Option[Set[String]] = None,
+      epoch: Option[String] = None,
+      txn: Option[(String, Long)] = None,
+      message: Option[String] = None) {
+
+    /** `sys.history`'s operation: rowlevel > stream-epoch > txn-write > write. */
+    def op: String =
+      if (replaced.isDefined) "rowlevel"
+      else if (epoch.isDefined) "stream-epoch"
+      else if (txn.isDefined) "txn-write"
+      else "write"
+
+    private[Versioned] def line: String = {
+      val o = cpMapper.createObjectNode()
+      stamp.foreach(o.put("ts", _))
+      replaced.foreach { r =>
+        val a = o.putArray("replaced")
+        r.toSeq.sorted.foreach(a.add)
+      }
+      epoch.foreach(o.put("epoch", _))
+      txn.foreach { case (app, v) => o.put("txnApp", app); o.put("txnVersion", v) }
+      message.foreach(o.put("msg", _))
+      "c " + cpMapper.writeValueAsString(o)
+    }
+  }
+
+  private[graft] object CommitRecord {
+    private[Versioned] def parse(json: String): CommitRecord = {
+      val o = cpMapper.readTree(json)
+      def text(k: String) = Option(o.get(k)).map(_.textValue())
+      CommitRecord(
+        Option(o.get("ts")).map(_.longValue()),
+        Option(o.get("replaced")).map { a =>
+          import scala.jdk.CollectionConverters._
+          a.elements().asScala.map(_.textValue()).toSet
+        },
+        text("epoch"),
+        text("txnApp").map(_ -> o.get("txnVersion").longValue()),
+        text("msg"))
+    }
+  }
+
+  /** The commit record of v=`version` (the empty record when it has none). */
+  private[graft] def commitRecord(root: String, version: Long): CommitRecord =
+    manifestLines(Paths.get(root, s"v=$version")).iterator.flatten
+      .collectFirst { case l if l.startsWith("c ") => CommitRecord.parse(l.drop(2)) }
+      .getOrElse(CommitRecord())
+
   private[graft] def writeFilesManifest(vdir: Path, dataNames: Seq[String],
-                                        dvNames: Seq[String] = Seq.empty,
-                                        statsFrom: Option[Path] = None): Unit = {
+                                        dvNames: Seq[String],
+                                        statsFrom: Option[Path],
+                                        record: CommitRecord): Unit = {
     // EVERY commit funnels through this manifest write (the one
     // commit routine, VersionedWriteIo.commit, writes it into the
     // staging dir before each claim) — so this is where the
@@ -933,22 +943,26 @@ object Versioned {
       requireWriterFeature(vdir.getParent, "deletion-vectors")
     }
     Files.write(vdir.resolve(FilesManifest),
-      (dataNames.sorted.map("f " + _) ++ dvNames.sorted.map("d " + _))
-        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (dataNames.sorted.map("f " + _) ++ dvNames.sorted.map("d " + _) :+
+        record.line).mkString("\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** The manifest's lines, or None for a pre-manifest version dir. */
+  private def manifestLines(vdir: Path): Option[Seq[String]] = {
+    val m = vdir.resolve(FilesManifest)
+    if (!Files.exists(m)) None
+    else Some(new String(Files.readAllBytes(m),
+      java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq)
   }
 
   /** (data file names, dv sidecar names) from the manifest, or None for
     * a pre-manifest version dir (falls back to directory listing). */
-  private[graft] def manifestEntries(vdir: Path): Option[(Seq[String], Seq[String])] = {
-    val m = vdir.resolve(FilesManifest)
-    if (!Files.exists(m)) None
-    else {
-      val lines = new String(Files.readAllBytes(m),
-        java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
-      Some((lines.collect { case l if l.startsWith("f ") => l.drop(2) },
-        lines.collect { case l if l.startsWith("d ") => l.drop(2) }))
+  private[graft] def manifestEntries(vdir: Path): Option[(Seq[String], Seq[String])] =
+    manifestLines(vdir).map { lines =>
+      (lines.collect { case l if l.startsWith("f ") => l.drop(2) },
+        lines.collect { case l if l.startsWith("d ") => l.drop(2) })
     }
-  }
 
   /** Raw directory listing of `*.parquet` (skips _SUCCESS/manifests) —
     * the staging-dir and pre-manifest fallback path. */
@@ -1144,7 +1158,7 @@ object Versioned {
     // same names the source manifest did (plus its DV sidecars); a
     // racing commit only moves the restore to the version after it
     VersionedWriteIo.commit(root, staged,
-        Some(VersionedWriteIo.stampValue(commitTs))) { _ =>
+        CommitRecord(stamp = Some(VersionedWriteIo.stampValue(commitTs)))) { _ =>
       VersionedWriteIo.Carry(dataFiles(src),
         DeletionVectors.carryAll(src, staged), Some(src))
     }
@@ -1174,7 +1188,7 @@ object Versioned {
     Files.createDirectories(dst)
     val staged = Files.createTempDirectory(dst, "_staging_clone_")
     VersionedWriteIo.commit(dstRoot, staged,
-        Some(VersionedWriteIo.stampValue(commitTs))) { base =>
+        CommitRecord(stamp = Some(VersionedWriteIo.stampValue(commitTs)))) { base =>
       require(base.isEmpty, s"cloneTo: destination $dstRoot already has versions")
       // the clone inherits every protocol requirement of the source —
       // shared immutable files mean shared representation (and shared
@@ -1235,7 +1249,7 @@ object Versioned {
     // the staged files never depend on the base: a lost claim retries
     // as is, a rival's v=0 refuses the convert
     VersionedWriteIo.commit(dstRoot, staged,
-        Some(VersionedWriteIo.stampValue(commitTs))) { base =>
+        CommitRecord(stamp = Some(VersionedWriteIo.stampValue(commitTs)))) { base =>
       refuseVersioned(base)
       VersionedWriteIo.Carry()
     }

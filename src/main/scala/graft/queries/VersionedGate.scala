@@ -157,7 +157,7 @@ object VersionedGate {
 
   /** q131: timestamp-based time travel ([[Versioned.readAsOf]]) —
     * three versions land with INJECTED commit stamps (1000/2000/3000,
-    * written to each version's `_graft_commit` manifest; deterministic,
+    * written to each version's commit record; deterministic,
     * unlike dir mtimes), then the query reads AS OF 2500 and must
     * resolve the middle version. The oracle derives exactly the v=1
     * content from documents, so a hash match certifies stamp
@@ -2526,7 +2526,7 @@ object VersionedGate {
     * feed ([[Versioned.writeNextWithFeed]], q141's exact v0/v1 data) is
     * drained by `readStream`, the surviving (non-removed) rows stream
     * into a SECOND versioned root through the DSv2 STREAMING WRITE
-    * (epoch commit = atomic version publish, `_graft_epoch`-tagged for
+    * (epoch commit = atomic version publish, epoch-tagged for
     * replay idempotence), and the result is the destination snapshot
     * read back. CDF in, versioned table out — the incremental-pipeline
     * shape — certified against an oracle that recomputes the surviving

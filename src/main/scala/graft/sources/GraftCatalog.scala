@@ -496,7 +496,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         VersionedWriteIo.commitStaged(root.toString, staging,
           GraftVersionedTable.physicalSchema(declared, stagedColMap),
           appendPrev = false,
-          stamp = VersionedWriteIo.stampValue(None), epochTag = None)
+          Versioned.CommitRecord(Some(VersionedWriteIo.stampValue(None))))
       }
       // publish the new contract — every manifest lands via staged
       // write + atomic rename (publishTableContract), so a concurrent
@@ -1393,7 +1393,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           // when covered (ONE read amortizes the whole history — on an
           // object store the walk is one GET per version per column
           // family); only the post-checkpoint tail reads its own
-          // markers. Tags stay live — they are mutable bindings.
+          // records. Tags stay live — they are mutable bindings.
           val cp = Versioned.readCheckpoint(r)
           Versioned.versions(r).sorted.reverse.map { v =>
             val i = Versioned.commitInfoFast(r, v, cp)

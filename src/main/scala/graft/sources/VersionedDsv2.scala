@@ -1021,7 +1021,8 @@ private[sources] class GraftDeltaWriteBuilder(
       }
     new GraftDeltaWrite(root, info.schema(), colMap,
       Option(tableOptions.get("commitTs")).map(_.toLong),
-      info.queryId(), feedKeys, op, txn, autoFill, rowIdMetaIdx)
+      info.queryId(), feedKeys, op, txn, autoFill, rowIdMetaIdx,
+      VersionedWriteIo.messageOf(Option(tableOptions.get("commitMessage"))))
   }
 }
 
@@ -1030,7 +1031,8 @@ private[sources] class GraftDeltaWrite(
     commitTs: Option[Long], queryId: String, feedKeys: Seq[String],
     op: GraftDeltaOperation, txn: Option[(String, Long)] = None,
     autoFill: Option[AutoColumns.Fill] = None,
-    rowIdMetaIdx: Option[Int] = None)
+    rowIdMetaIdx: Option[Int] = None,
+    message: Option[String] = None)
   extends DeltaWrite {
 
   override def description(): String =
@@ -1038,7 +1040,7 @@ private[sources] class GraftDeltaWrite(
 
   override def toBatch: DeltaBatchWrite =
     new GraftDeltaBatchWrite(root, dataSchema, colMap, commitTs, queryId,
-      feedKeys, op, txn, autoFill, rowIdMetaIdx)
+      feedKeys, op, txn, autoFill, rowIdMetaIdx, message)
 }
 
 /** One staged message per task: the insert part file it cut (if any
@@ -1055,7 +1057,8 @@ private[sources] class GraftDeltaBatchWrite(
     commitTs: Option[Long], queryId: String, feedKeys: Seq[String],
     op: GraftDeltaOperation, txn: Option[(String, Long)] = None,
     autoFill: Option[AutoColumns.Fill] = None,
-    rowIdMetaIdx: Option[Int] = None)
+    rowIdMetaIdx: Option[Int] = None,
+    message: Option[String] = None)
   extends DeltaBatchWrite {
 
   private val staged = java.nio.file.Paths.get(
@@ -1074,16 +1077,13 @@ private[sources] class GraftDeltaBatchWrite(
     // the table has already recorded drops its staged delta and
     // commits NOTHING — a replayed MERGE after a crash recomputes
     // against already-updated state, and its delta must not re-apply.
-    // The marker rides the same atomic rename as the DV sidecars.
+    // The transaction rides the commit record, published by the same
+    // claim as the DV sidecars.
     txn match {
       case Some((app, ver)) if VersionedWriteIo.txnCommitted(root, app, ver) =>
         Versioned.deleteRecursively(staged)
         return
-      case Some((app, ver)) =>
-        java.nio.file.Files.createDirectories(staged)
-        java.nio.file.Files.write(staged.resolve("_graft_txn"),
-          s"$app\t$ver".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None => ()
+      case _ => ()
     }
     // drop leftovers of speculative/failed attempts: only files named
     // in a commit message survive (inserts AND fragments)
@@ -1106,7 +1106,7 @@ private[sources] class GraftDeltaBatchWrite(
       } finally stream.close()
     }
     val committed = VersionedWriteIo.commitDelta(root, staged,
-      op.scannedVersion, VersionedWriteIo.stampValue(commitTs))
+      op.scannedVersion, VersionedWriteIo.stampValue(commitTs), txn, message)
     // MERGE-inserted identity values advance the persisted high-water
     // mark exactly like batch inserts do
     autoFill.foreach(f => AutoColumns.advanceHwm(root,
@@ -3465,26 +3465,11 @@ private[sources] class GraftVersionedWriteBuilder(
       if (tableOptions.getBoolean("graftCatalogManaged", false) &&
           tableSchema.nonEmpty) Some((tableSchema, "the table contract"))
       else if (!replace) Versioned.latestVersion(root).map { v =>
-        // a widened version dir holds mixed-width footers: merge with
-        // the widening-aware union so the alignment target is the WIDE
-        // contract, not whichever file's footer got sampled first
-        val spark = SparkSession.active
-        val dir = s"$root/v=$v"
-        val sch =
-          try spark.read.option("mergeSchema", "true").parquet(dir).schema
-          catch { case e: org.apache.spark.SparkException
-              if String.valueOf(e.getMessage).contains("CANNOT_MERGE_SCHEMAS") =>
-            GraftVersionedTable.widenMergeSchemas(
-              Versioned.dataFiles(java.nio.file.Paths.get(dir))
-                .map(f => spark.read.parquet(f.toString).schema), root)
-          }
-        // rewritten files of a row-tracking table carry the internal
-        // materialized id/version columns — appends never provide
-        // (or see) them
-        (StructType(sch.fields.filterNot(f =>
-          f.name == graft.operators.RowIds.MaterializedCol ||
-            f.name == graft.operators.RowIds.MaterializedVerCol).toSeq),
-          s"v=$v")
+        // v's schema as a path load of v sees it: widened across
+        // mixed-width footers, without the row-tracking carriers, and
+        // with VARIANT columns restored
+        (GraftVersionedTable.resolveSchema(new CaseInsensitiveStringMap(
+          java.util.Map.of("path", root, "versionAsOf", v.toString))), s"v=$v")
       }
       else None
     // transform-derived GENERATED cluster columns (bucket/temporal/
@@ -3649,10 +3634,7 @@ private[sources] class GraftVersionedWriteBuilder(
     // with the commit and surfaced by sys.history — write option wins,
     // session conf ('graft.versioned.commitMessage') covers SQL verbs
     // that take no options
-    val message = opt("commitMessage").map(_.trim).filter(_.nonEmpty)
-      .orElse(Option(SparkSession.active.conf
-          .get("graft.versioned.commitMessage", "")).map(_.trim)
-        .filter(_.nonEmpty))
+    val message = VersionedWriteIo.messageOf(opt("commitMessage"))
     // GENERATED/IDENTITY columns: resolve the fill plan driver-side
     // (bind expressions to the write schema; the persisted manifest
     // high-water mark for identity) and hand it to the batch write —
@@ -3760,7 +3742,7 @@ private[sources] class GraftVersionedWrite(
   override def toStreaming: StreamingWrite = {
     require(txn.isEmpty,
       "graft-versioned: txnAppId/txnVersion are batch options — streaming " +
-        "writes are already idempotent per epoch (the _graft_epoch tag)")
+        "writes are already idempotent per epoch (the epoch tag)")
     // GENERATED columns stream fine: the fill pass is a stateless
     // per-row projection (bucket ids, temporal/truncate bins), so the
     // canonical streaming sink — append into a time-partitioned table
@@ -3823,21 +3805,14 @@ private[sources] class GraftBatchWrite(
     // idempotent transaction replay: a (txnAppId, txnVersion) the table
     // has already recorded (at or past this version) drops its staged
     // files and commits NOTHING — same discipline as a replayed
-    // streaming epoch. The marker is written into the staging dir so
-    // the record and the data publish in the SAME atomic rename.
+    // streaming epoch. The transaction and the message ride the commit
+    // record, so they publish in the SAME claim as the data.
     txn match {
       case Some((app, ver)) if VersionedWriteIo.txnCommitted(root, app, ver) =>
         Versioned.deleteRecursively(staged)
         return
-      case Some((app, ver)) =>
-        java.nio.file.Files.write(staged.resolve("_graft_txn"),
-          s"$app\t$ver".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None => ()
+      case _ => ()
     }
-    // the commit message rides the same atomic rename as the data
-    message.foreach(m => java.nio.file.Files.write(
-      staged.resolve(VersionedWriteIo.MessageMarker),
-      m.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     // SCHEMA EVOLUTION (mergeSchema/autoMerge opt-in, validated at
     // build): the evolved contract lands in the catalog's schema
     // manifest just ahead of the data commit — metadata-only, exactly
@@ -3857,11 +3832,13 @@ private[sources] class GraftBatchWrite(
         // copy-on-write by file: staged output replaces exactly the
         // scanned files; everything else hard-links over
         VersionedWriteIo.commitRowLevel(root, staged, physSchema,
-          scannedVersion, scannedNames, VersionedWriteIo.stampValue(commitTs))
+          scannedVersion, scannedNames, VersionedWriteIo.stampValue(commitTs),
+          txn, message)
       case _ =>
         VersionedWriteIo.commitStaged(root, staged, physSchema,
-          appendPrev = !replace, stamp = VersionedWriteIo.stampValue(commitTs),
-          epochTag = None)
+          appendPrev = !replace, Versioned.CommitRecord(
+            Some(VersionedWriteIo.stampValue(commitTs)), txn = txn,
+            message = message))
     }
     // persist the identity high-water mark implied by this commit's
     // assignments (monotone advance, atomic manifest swap): the next
@@ -3885,11 +3862,11 @@ private[sources] class GraftBatchWrite(
 /** Streaming write: every micro-batch epoch commits one version —
   * append mode grows the snapshot (OutputMode.Append/Update), truncate
   * replaces it (OutputMode.Complete). Epoch replay after a restart is
-  * IDEMPOTENT: the committed version carries a `_graft_epoch` tag
-  * (queryId:epochId) written into the staging dir BEFORE the atomic
-  * rename, so the replay check and the commit are one filesystem
-  * event — a replayed epoch finds its tag and drops its staged files
-  * instead of double-appending. */
+  * IDEMPOTENT: the committed version's record carries the epoch tag
+  * (queryId:epochId), written into the staging dir BEFORE the claim,
+  * so the replay check and the commit are one filesystem event — a
+  * replayed epoch finds its tag and drops its staged files instead of
+  * double-appending. */
 private[sources] class GraftStreamingWrite(
     root: String, schema: StructType, replace: Boolean,
     commitTs: Option[Long], queryId: String,
@@ -3931,15 +3908,13 @@ private[sources] class GraftStreamingWrite(
     }
     java.nio.file.Files.createDirectories(epochDir)
     VersionedWriteIo.keepOnly(epochDir, AutoFillCommitMessage.unwrap(messages))
-    message.foreach(m => java.nio.file.Files.write(
-      epochDir.resolve(VersionedWriteIo.MessageMarker),
-      m.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     // a deterministic stamp ladder when the caller provided commitTs
     // (epoch i lands at commitTs+i); wall-clock micros otherwise
     val stamp = commitTs.map(_ + epochId)
       .getOrElse(VersionedWriteIo.stampValue(None))
     val committed = VersionedWriteIo.commitStaged(root, epochDir, physSchema,
-      appendPrev = !replace, stamp = stamp, epochTag = Some(tag))
+      appendPrev = !replace, Versioned.CommitRecord(Some(stamp),
+        epoch = Some(tag), message = message))
     // the every-commit-feeds contract covers streaming epochs too: a
     // changeFeedKeys table fed by a stream stores one diff per epoch
     // (replayed epochs return before reaching here, so no double feed)
@@ -3967,19 +3942,17 @@ private[graft] object VersionedWriteIo {
     Option(SparkSession.active.conf.get(key, ""))
       .map(_.trim).filter(_.nonEmpty)
 
-  /** Per-commit free-form message (Delta's userMetadata) — written
-    * into the staging dir so it publishes atomically with the data;
-    * surfaced by sys.history. */
-  val MessageMarker = "_graft_message"
+  /** The commit message of a version (Delta's userMetadata), if its
+    * writer recorded one — surfaced by sys.history. */
+  def commitMessage(root: String, version: Long): Option[String] =
+    Versioned.commitRecord(root, version).message
 
-  /** The commit message of a version, if its writer recorded one. */
-  def commitMessage(root: String, version: Long): Option[String] = {
-    val f = Paths.get(root, s"v=$version", MessageMarker)
-    if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8))
-    else None
-  }
+  /** The message a write records: the `commitMessage` write option,
+    * else the session conf — the channel for SQL verbs, which take no
+    * write options. */
+  def messageOf(option: Option[String]): Option[String] =
+    option.map(_.trim).filter(_.nonEmpty)
+      .orElse(sessionConf("graft.versioned.commitMessage"))
 
   def stampValue(commitTs: Option[Long]): Long =
     // every DSv2 commit is stamped (time travel always works on a
@@ -3998,39 +3971,20 @@ private[graft] object VersionedWriteIo {
       .foreach(Files.delete(_))
   }
 
-  private def epochTagOf(root: String, version: Long): Option[String] = {
-    val f = Paths.get(root, s"v=$version", "_graft_epoch")
-    if (Files.exists(f))
-      Some(new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8).trim)
-    else None
-  }
-
+  /** Has a version committed with the streaming epoch tag `tag`? */
   def epochCommitted(root: String, tag: String): Boolean =
-    Versioned.versions(root).exists(v => epochTagOf(root, v).contains(tag))
-
-  /** The `_graft_txn` marker of a version, if it committed under an
-    * application transaction: `(txnAppId, txnVersion)`. */
-  private def txnOf(root: String, version: Long): Option[(String, Long)] = {
-    val f = Paths.get(root, s"v=$version", "_graft_txn")
-    if (!Files.exists(f)) None
-    else {
-      val s = new String(Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val i = s.lastIndexOf('\t')
-      if (i < 0) None
-      else scala.util.Try((s.substring(0, i), s.substring(i + 1).trim.toLong))
-        .toOption
-    }
-  }
+    Versioned.versions(root).exists(v =>
+      Versioned.commitRecord(root, v).epoch.contains(tag))
 
   /** Has `appId` already committed at or past `version`? Rollback and
     * retention naturally forget dropped commits' transactions (the
-    * marker lives in the version dir), so a rolled-back batch replays —
+    * record lives in the version dir), so a rolled-back batch replays —
     * exactly what a rollback asks for. */
   def txnCommitted(root: String, appId: String, version: Long): Boolean =
-    Versioned.versions(root).exists(v => txnOf(root, v).exists {
-      case (a, x) => a == appId && x >= version
-    })
+    Versioned.versions(root).exists(v =>
+      Versioned.commitRecord(root, v).txn.exists {
+        case (a, x) => a == appId && x >= version
+      })
 
   /** Delete `_staging_*` leftovers older than `olderThanMs` — what a
     * crashed driver's un-aborted write leaves behind (a successful
@@ -4133,28 +4087,6 @@ private[graft] object VersionedWriteIo {
     }.sorted
   }
 
-  /** Marker a row-level commit leaves in its version dir recording the
-    * file set it REPLACED — the evidence [[commitRowLevel]]'s conflict
-    * resolution reads: a later row-level commit that scanned an older
-    * snapshot may REBASE over this one iff the two replaced sets are
-    * disjoint (Delta's file-level conflict check). */
-  private val RowLevelMarker = "_graft_rowlevel"
-
-  private def writeRowLevelMarker(vdir: Path, replaced: Set[String]): Unit =
-    Files.write(vdir.resolve(RowLevelMarker),
-      replaced.toSeq.sorted.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** The replaced-file set of a row-level commit, None for any other
-    * commit kind (append/overwrite/streaming epoch). */
-  private def rowLevelReplaced(root: String, version: Long): Option[Set[String]] = {
-    val f = Paths.get(root, s"v=$version", RowLevelMarker)
-    if (!Files.exists(f)) None
-    else Some(new String(Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).toSet)
-  }
-
   private[sources] def uniqueEmptyName(): String =
     s"part-empty-${java.util.UUID.randomUUID.toString.take(8)}.parquet"
 
@@ -4172,7 +4104,8 @@ private[graft] object VersionedWriteIo {
     * valid — file names are immutable identities), overlap or an
     * intervening append/overwrite aborts loudly. */
   def commitDelta(root: String, staged: Path, scannedVersion: Long,
-                  stamp: Long): Long = {
+                  stamp: Long, txn: Option[(String, Long)] = None,
+                  message: Option[String] = None): Long = {
     import graft.operators.DeletionVectors
     // merge the per-task fragments: data file name → new positions
     val fragBase = staged.resolve(FragDir)
@@ -4198,7 +4131,9 @@ private[graft] object VersionedWriteIo {
     Versioned.deleteRecursively(fragBase)
     val touched = newPos.keySet
     val what = "a merge-on-read mutation"
-    commit(root, staged, Some(stamp),
+    val record = Versioned.CommitRecord(Some(stamp), replaced = Some(touched),
+      txn = txn, message = message)
+    commit(root, staged, record,
         Some(concurrentCommit(root, scannedVersion, what, _))) { latest =>
       val base = rebaseOnto(root, latest, scannedVersion, touched, what,
         "touched")
@@ -4223,7 +4158,6 @@ private[graft] object VersionedWriteIo {
           n + DeletionVectors.Suffix
         }
       }
-      writeRowLevelMarker(staged, touched)
       // every base file carries over untouched (nothing is replaced)
       Carry(baseFiles, dvNames, Some(baseDir))
     }
@@ -4243,10 +4177,9 @@ private[graft] object VersionedWriteIo {
     * file's rows). Existing DVs apply during discovery, so only LIVE
     * rows can match and merged sidecars never double-count.
     * Serializable commit: a concurrent commit between scan and publish
-    * fails this statement loudly; the committed version carries a
-    * row-level marker naming the TOUCHED files so later row-level
-    * commits can rebase over this one when disjoint. Returns the
-    * committed version. */
+    * fails this statement loudly; the committed version's record names
+    * the TOUCHED files so later row-level commits can rebase over this
+    * one when disjoint. Returns the committed version. */
   def deleteViaDv(spark: SparkSession, root: String,
                   pred: org.apache.spark.sql.Column,
                   colMapOpt: Option[String] = None,
@@ -4284,7 +4217,7 @@ private[graft] object VersionedWriteIo {
         }
       }
     // stage the fragments in commitDelta's layout and share ITS commit
-    // machinery — one code path owns DV merging, manifests, markers,
+    // machinery — one code path owns DV merging, manifests, records,
     // and the file-level conflict rebase (two concurrent DV deletes on
     // disjoint files both land; overlap aborts loudly)
     val staged = Files.createTempDirectory(Paths.get(root), "_staging_dvcommit_")
@@ -4326,15 +4259,20 @@ private[graft] object VersionedWriteIo {
     * sequential result. Any overlap — or any intervening append /
     * overwrite, whose rows this operation never saw — still fails
     * loudly: silently re-basing over those would resurrect
-    * concurrently-deleted rows or drop concurrent appends. */
+    * concurrently-deleted rows or drop concurrent appends. The
+    * committed version's record names the replaced set — the evidence
+    * a later row-level commit's rebase reads. */
   def commitRowLevel(root: String, staged: Path, schema: StructType,
                      scannedVersion: Long, scannedNames: Set[String],
-                     stamp: Long): Long = {
+                     stamp: Long, txn: Option[(String, Long)] = None,
+                     message: Option[String] = None): Long = {
     GraftVersionedTable.recordVariantCols(root, schema)
     // the staged output (the replacement rows) is fixed; the base we
     // rebase onto may advance while we retry against racing committers
     val what = "a row-level operation"
-    commit(root, staged, Some(stamp),
+    val record = Versioned.CommitRecord(Some(stamp),
+      replaced = Some(scannedNames), txn = txn, message = message)
+    commit(root, staged, record,
         Some(concurrentCommit(root, scannedVersion, what, _))) { latest =>
       val base = rebaseOnto(root, latest, scannedVersion, scannedNames, what,
         "replaced")
@@ -4350,7 +4288,6 @@ private[graft] object VersionedWriteIo {
       if (carryOver.isEmpty && Versioned.listParquet(staged).isEmpty)
         VersionedWriterFactory(schema, staged.toString)
           .emptyFile(uniqueEmptyName())
-      writeRowLevelMarker(staged, scannedNames)
       Carry(carryOver, dvNames, Some(baseDir))
     }
   }
@@ -4375,7 +4312,7 @@ private[graft] object VersionedWriteIo {
     val base = latest.getOrElse(
       throw concurrentCommit(root, scannedVersion, what, "no versions left"))
     ((scannedVersion + 1) to base).foreach { v =>
-      rowLevelReplaced(root, v) match {
+      Versioned.commitRecord(root, v).replaced match {
         case None => throw concurrentCommit(root, scannedVersion, what,
           s"v=$v is not a row-level commit")
         case Some(replaced) =>
@@ -4392,19 +4329,14 @@ private[graft] object VersionedWriteIo {
     * carries the previous version's files (and their DV sidecars) in,
     * overwrite mode carries nothing. Concurrency is [[commit]]'s. */
   def commitStaged(root: String, staged: Path, schema: StructType,
-                   appendPrev: Boolean, stamp: Long,
-                   epochTag: Option[String]): Long = {
+                   appendPrev: Boolean, record: Versioned.CommitRecord): Long = {
     // an all-empty-partitions write still commits a readable version:
     // one zero-row file carries the schema for every future reader
     if (Versioned.listParquet(staged).isEmpty)
       VersionedWriterFactory(schema, staged.toString)
         .emptyFile(uniqueEmptyName())
     GraftVersionedTable.recordVariantCols(root, schema)
-    epochTag.foreach { t =>
-      Files.write(staged.resolve("_graft_epoch"),
-        t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    commit(root, staged, Some(stamp)) { latest =>
+    commit(root, staged, record) { latest =>
       val prevDir = latest.map(p => Paths.get(root, s"v=$p"))
       // append keeps every previous file under its SAME name (names are
       // unique at creation and immutable across commits — the identity
@@ -4443,16 +4375,19 @@ private[graft] object VersionedWriteIo {
     * carried links, hands the latest committed version (None on an
     * empty root) to `carry` — which returns what to carry from it, or
     * throws when the write cannot rebase onto it — links the files,
-    * writes the manifest and claims `v=base+1`; a lost claim retries
-    * against the new latest. The winner gets the post-publish tail:
-    * latest hint, the optional stamp (stamped AFTER publish, so a crash
-    * between the two leaves an unstamped version that time travel
-    * skips), and the bloom/ndv sidecars (lines carry from the winning
-    * attempt's `statsFrom`). `conflict`, when given, is how the caller
-    * names a conflict it cannot retry past — running out of attempts
-    * reports through it. Any failure before the publish deletes the
-    * staging dir. Returns the committed version. */
-  def commit(root: String, staged: Path, stamp: Option[Long] = None,
+    * writes the manifest with `record` (its stamp clamped against the
+    * base, [[Versioned.clampStamp]]) and claims `v=base+1`; a lost
+    * claim retries against the new latest. The claim publishes
+    * everything a correct read needs: after it the winner writes only
+    * accelerators, whose absence is never wrong — the latest hint, the
+    * every-[[Versioned.CheckpointInterval]] checkpoint, and the
+    * bloom/ndv sidecars (lines carry from the winning attempt's
+    * `statsFrom`). `conflict`, when given, is how the caller names a
+    * conflict it cannot retry past — running out of attempts reports
+    * through it. Any failure before the publish deletes the staging
+    * dir. Returns the committed version. */
+  def commit(root: String, staged: Path,
+             record: Versioned.CommitRecord = Versioned.CommitRecord(),
              conflict: Option[String => Throwable] = None)(
       carry: Option[Long] => Carry): Long = {
     val dvDir = graft.operators.DeletionVectors.dvDir(staged)
@@ -4470,7 +4405,8 @@ private[graft] object VersionedWriteIo {
       c.files.foreach(f => linkOrCopy(f, staged.resolve(f.getFileName.toString)))
       Versioned.writeFilesManifest(staged,
         Versioned.listParquet(staged).map(_.getFileName.toString), c.dvNames,
-        c.statsFrom)
+        c.statsFrom, record.copy(stamp =
+          record.stamp.map(Versioned.clampStamp(root, base, _))))
       val next = base.fold(0L)(_ + 1)
       if (CommitStore.active.publishVersion(Paths.get(root), staged, next)) (next, c)
       else attempt(n + 1, c)
@@ -4479,7 +4415,9 @@ private[graft] object VersionedWriteIo {
       try attempt(0, Carry())
       catch { case e: Throwable => Versioned.deleteRecursively(staged); throw e }
     Versioned.writeLatestHint(root, next)
-    stamp.foreach(Versioned.writeStamp(root, next, _))
+    if (record.stamp.nonEmpty && next % Versioned.CheckpointInterval == 0 && next > 0)
+      try Versioned.writeCheckpoint(root, cover = next - 1)
+      catch { case scala.util.control.NonFatal(_) => () }
     // no-ops unless configured: carried files reuse their lines from the
     // previous version and the carry's source, new files get one build scan
     graft.operators.BloomSidecar.ensure(root, next, won.statsFrom)

@@ -90,70 +90,131 @@ class CommitRecordSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("crash right after the claim: a DSv2 append keeps its stamp and message") {
-    pendingUntilFixed {
-      val (name, root) = freshTable()
-      val v = crashAfterClaim(Seq((10L, 100L)).toDF("id", "v").writeTo(name)
-        .option("commitMessage", "nightly load").append())
-      assert(v === 1L)
-      assert(rows(s"SELECT id, v FROM $name").contains((10L, 100L)))
-      assertFinal(name, root, v, "write", Some("nightly load"))
-    }
+    val (name, root) = freshTable()
+    val v = crashAfterClaim(Seq((10L, 100L)).toDF("id", "v").writeTo(name)
+      .option("commitMessage", "nightly load").append())
+    assert(v === 1L)
+    assert(rows(s"SELECT id, v FROM $name").contains((10L, 100L)))
+    assertFinal(name, root, v, "write", Some("nightly load"))
   }
 
   test("crash right after the claim: a MERGE on a deletion-vector table") {
-    pendingUntilFixed {
-      val (name, root) = freshTable("'deletionVectors'='true'")
-      val v = crashAfterClaim(spark.sql(s"MERGE INTO $name t " +
-        "USING (SELECT id, id * 100 AS v FROM range(5, 15)) s ON t.id = s.id " +
-        "WHEN MATCHED THEN UPDATE SET v = s.v " +
-        "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"))
-      assert(rows(s"SELECT id, v FROM $name") ===
-        ((0L until 5L).map(i => (i, i * 10)) ++ (5L until 15L).map(i => (i, i * 100))))
-      assertFinal(name, root, v, "rowlevel", None)
-    }
+    val (name, root) = freshTable("'deletionVectors'='true'")
+    val v = crashAfterClaim(spark.sql(s"MERGE INTO $name t " +
+      "USING (SELECT id, id * 100 AS v FROM range(5, 15)) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)"))
+    assert(rows(s"SELECT id, v FROM $name") ===
+      ((0L until 5L).map(i => (i, i * 10)) ++ (5L until 15L).map(i => (i, i * 100))))
+    assertFinal(name, root, v, "rowlevel", None)
   }
 
   test("crash right after the claim: a copy-on-write UPDATE") {
-    pendingUntilFixed {
-      val (name, root) = freshTable()
-      val v = crashAfterClaim(spark.sql(s"UPDATE $name SET v = v + 1 WHERE id < 5"))
-      assert(rows(s"SELECT id, v FROM $name") ===
-        (0L until 10L).map(i => (i, i * 10 + (if (i < 5) 1 else 0))))
-      assertFinal(name, root, v, "rowlevel", None)
-    }
+    val (name, root) = freshTable()
+    val v = crashAfterClaim(spark.sql(s"UPDATE $name SET v = v + 1 WHERE id < 5"))
+    assert(rows(s"SELECT id, v FROM $name") ===
+      (0L until 10L).map(i => (i, i * 10 + (if (i < 5) 1 else 0))))
+    assertFinal(name, root, v, "rowlevel", None)
   }
 
   test("crash right after the claim: a streaming epoch, whose replay is skipped") {
-    pendingUntilFixed {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.streaming.Trigger
-      val (name, root) = freshTable()
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val src = MemoryStream[(Long, Long)]
-      val ckpt = Files.createTempDirectory("graft_record_ckpt_").toString
-      def drain(): Unit = src.toDF().toDF("id", "v").writeStream
-        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
-        .toTable(name).awaitTermination()
-      src.addData((20L, 200L))
-      val v = crashAfterClaim(drain())
-      assertFinal(name, root, v, "stream-epoch", None)
-      // the restarted stream replays the crashed epoch: its tag is in
-      // the published record, so the replay commits nothing
-      src.addData((21L, 201L))
-      drain()
-      assert(rows(s"SELECT id, v FROM $name") === ((0L until 10L).map(i => (i, i * 10)) ++
-        Seq((20L, 200L), (21L, 201L), (1000L, 1L))).sorted)
-    }
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val (name, root) = freshTable()
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val src = MemoryStream[(Long, Long)]
+    val ckpt = Files.createTempDirectory("graft_record_ckpt_").toString
+    def drain(): Unit = src.toDF().toDF("id", "v").writeStream
+      .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow())
+      .toTable(name).awaitTermination()
+    src.addData((20L, 200L))
+    val v = crashAfterClaim(drain())
+    assertFinal(name, root, v, "stream-epoch", None)
+    // the restarted stream replays the crashed epoch: its tag is in
+    // the published record, so the replay commits nothing
+    src.addData((21L, 201L))
+    drain()
+    assert(rows(s"SELECT id, v FROM $name") === ((0L until 10L).map(i => (i, i * 10)) ++
+      Seq((20L, 200L), (21L, 201L), (1000L, 1L))).sorted)
   }
 
   test("crash right after the claim: restoreTo") {
-    pendingUntilFixed {
-      val (name, root) = freshTable()
-      spark.sql(s"DELETE FROM $name WHERE id < 5")
-      val v = crashAfterClaim(Versioned.restoreTo(root, 0L))
-      assert(v === 2L)
-      assert(rows(s"SELECT id, v FROM $name") === (0L until 10L).map(i => (i, i * 10)))
-      assertFinal(name, root, v, "write", None)
-    }
+    val (name, root) = freshTable()
+    spark.sql(s"DELETE FROM $name WHERE id < 5")
+    val v = crashAfterClaim(Versioned.restoreTo(root, 0L))
+    assert(v === 2L)
+    assert(rows(s"SELECT id, v FROM $name") === (0L until 10L).map(i => (i, i * 10)))
+    assertFinal(name, root, v, "write", None)
+  }
+
+  private def history(name: String): Map[Long, org.apache.spark.sql.Row] =
+    spark.sql(s"CALL rec.sys.history(table => '${name.stripPrefix("rec.")}')")
+      .collect().map(r => r.getLong(0) -> r).toMap
+
+  /** v=N holds none of the per-fact files commits wrote before the
+    * record, and its record reads back op `op`. */
+  private def assertRecordOnly(root: String, v: Long, op: String): Unit = {
+    val markers = Seq("_graft_commit", "_graft_message", "_graft_epoch",
+      "_graft_txn", "_graft_rowlevel")
+      .filter(m => Files.exists(Paths.get(root, s"v=$v", m)))
+    assert(markers.isEmpty, s"v=$v under $root holds $markers")
+    assert(Versioned.commitInfoOf(root, v).op === op, s"v=$v under $root")
+  }
+
+  test("every commit kind records its facts in the manifest, in no marker file") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    val (name, root) = freshTable("'deletionVectors'='true'")
+    def latest = Versioned.latestVersion(root).get
+    assertRecordOnly(root, 0L, "write")                              // append
+    spark.sql(s"INSERT OVERWRITE $name SELECT id, id FROM range(0, 20)")
+    assertRecordOnly(root, latest, "write")                          // overwrite
+    spark.sql(s"MERGE INTO $name t USING (SELECT id, 7L AS v FROM range(15, 25)) s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)")
+    assertRecordOnly(root, latest, "rowlevel")                       // MERGE, DVs
+    spark.sql(s"DELETE FROM $name WHERE id < 3")
+    assertRecordOnly(root, latest, "rowlevel")                       // DV DELETE
+    Seq((30L, 3L)).toDF("id", "v").writeTo(name)
+      .option("txnAppId", "loader").option("txnVersion", "4").append()
+    assertRecordOnly(root, latest, "txn-write")                      // txn write
+    assert(Versioned.commitRecord(root, latest).txn === Some(("loader", 4L)))
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val src = MemoryStream[(Long, Long)]
+    src.addData((40L, 4L))
+    src.toDF().toDF("id", "v").writeStream
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_record_kinds_ckpt_").toString)
+      .trigger(Trigger.AvailableNow()).toTable(name).awaitTermination()
+    assertRecordOnly(root, latest, "stream-epoch")                   // epoch
+    val before = latest
+    assert(Versioned.compactSmall(spark, root, Long.MaxValue) === before + 1)
+    assertRecordOnly(root, latest, "rowlevel")                       // bin-pack
+    Versioned.compact(spark, root)
+    assertRecordOnly(root, latest, "write")                          // compact
+    Versioned.restoreTo(root, 0L)
+    assertRecordOnly(root, latest, "write")                          // restore
+    val (cow, cowRoot) = freshTable()
+    spark.sql(s"DELETE FROM $cow WHERE id < 3")
+    assertRecordOnly(cowRoot, 1L, Versioned.commitInfoOf(cowRoot, 1L).op) // CoW DELETE
+    val dst = Files.createTempDirectory("graft_record_dst_")
+    Versioned.cloneTo(root, dst.resolve("clone").toString)
+    assertRecordOnly(dst.resolve("clone").toString, 0L, "write")     // clone
+    Seq((1L, 1L)).toDF("id", "v").write.parquet(dst.resolve("plain").toString)
+    Versioned.convertFrom(dst.resolve("plain").toString, dst.resolve("conv").toString)
+    assertRecordOnly(dst.resolve("conv").toString, 0L, "write")      // convert
+    // sys.history reads the same records
+    val h = history(name)
+    Versioned.versions(root).foreach(v =>
+      assert(h(v).getString(2) === Versioned.commitInfoOf(root, v).op))
+  }
+
+  test("a message holding a newline, a tab and Persian text round-trips") {
+    val (name, root) = freshTable()
+    val msg = "بارگذاری روزانه\nsecond line\tcolumn"
+    Seq((50L, 5L)).toDF("id", "v").writeTo(name)
+      .option("commitMessage", msg).append()
+    assert(VersionedWriteIo.commitMessage(root, 1L) === Some(msg))
+    assert(history(name)(1L).getString(9) === msg)
   }
 }

@@ -157,6 +157,22 @@ class VersionedWriteSpec extends AnyFunSuite with SparkSpec {
     assert(expected.head === """[0,0,s0,{"n":0,"s":"s0"}]""")
   }
 
+  test("a second path-based append to a VARIANT root aligns against " +
+      "VARIANT and reads back as VARIANT") {
+    val root = freshRoot("variantappend")
+    def batch(from: Long) = spark.range(from, from + 3).selectExpr("id",
+      "parse_json(to_json(struct(id * 2 AS n))) AS payload")
+    batch(0L).write.format("graft-versioned").option("create", "true")
+      .mode("append").save(root)
+    batch(3L).write.format("graft-versioned").mode("append").save(root)
+    val back = spark.read.format("graft-versioned").load(root)
+    assert(back.schema("payload").dataType ===
+      org.apache.spark.sql.types.VariantType)
+    assert(back.selectExpr("id", "variant_get(payload, '$.n', 'bigint')")
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      (0L until 6L).map(i => (i, i * 2)))
+  }
+
   test("fail-loud: append schema drift, unsupported type, write to pinned snapshot") {
     val root = freshRoot("loud")
     df((1L, 100L, "a")).write.format("graft-versioned")
@@ -204,8 +220,7 @@ class VersionedWriteSpec extends AnyFunSuite with SparkSpec {
     assert(rows(Versioned.read(spark, root)) ===
       rows(df((1L, 100L, "a"), (2L, 200L, "b"), (3L, 300L, "c"))))
     // each committed version carries its epoch tag
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "v=0", "_graft_epoch")))
+    assert(VersionedWriteIo.epochCommitted(root, s"${q.id}:0"))
   }
 
   test("streaming epoch replay is idempotent (no double-append)") {
