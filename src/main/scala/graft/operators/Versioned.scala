@@ -117,10 +117,10 @@ object Versioned {
 
   /** S13 load: write the next version (old data stays addressable — the
     * copy-to-old-data step becomes a no-op). Pass `commitTs` to stamp
-    * the version with a commit timestamp in its commit record
-    * ([[CommitRecord]]) — the deterministic anchor for [[readAsOf]]
-    * time travel; directory mtimes would drift across copies/restores. `layout`
-    * applies writer-side clustering + file-size targets
+    * the version with a commit timestamp in its [[CommitRecord]] —
+    * the deterministic anchor for [[readAsOf]] time travel; directory
+    * mtimes would drift across copies/restores. `layout` applies
+    * writer-side clustering + file-size targets
     * ([[Layout.WriteSpec]]) so the version's row-group stats prune for
     * readers filtering on the sort key. The job writes into a
     * `_staging_*` dir that the shared commit routine publishes as the
@@ -209,7 +209,7 @@ object Versioned {
       record.message, Files.exists(Paths.get(feedDir(root, v))))
   }
 
-  private val cpMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val checkpointLock = new Object
 
   /** (cover version, version → facts) — None when absent OR unreadable
@@ -223,7 +223,7 @@ object Versioned {
       require(lines.nonEmpty && lines.head.startsWith("cp "))
       val cover = lines.head.drop(3).trim.toLong
       val rows = lines.tail.filter(_.nonEmpty).map { l =>
-        val o = cpMapper.readTree(l)
+        val o = jsonMapper.readTree(l)
         o.get("v").longValue() -> CommitInfo(
           if (o.hasNonNull("ts")) Some(o.get("ts").longValue()) else None,
           o.get("op").textValue(), o.get("nf").intValue(),
@@ -257,14 +257,14 @@ object Versioned {
       val surviving = versions(root).filter(_ <= cover)
       val lines = ("cp " + cover) +: surviving.map { v =>
         val i = carry.getOrElse(v, commitInfoOf(root, v))
-        val o = cpMapper.createObjectNode()
+        val o = jsonMapper.createObjectNode()
         o.put("v", v)
         i.ts.foreach(o.put("ts", _))
         o.put("op", i.op); o.put("nf", i.nFiles); o.put("b", i.bytes)
         o.put("dv", i.nDvs); o.put("dr", i.nDeletedRows)
         i.message.foreach(o.put("msg", _))
         o.put("feed", i.hasFeed)
-        cpMapper.writeValueAsString(o)
+        jsonMapper.writeValueAsString(o)
       }
       val tmp = Files.createTempFile(Paths.get(root), "_graft_checkpoint_", ".tmp")
       Files.write(tmp, lines.mkString("\n")
@@ -838,12 +838,13 @@ object Versioned {
     * INVISIBLE, and at object-store scale the per-read directory
     * listing disappears (the Delta-log contract: the log names the
     * files, the store never gets LISTed on the read path). Line format:
-    * `f <name>` data file, `d <name>` deletion-vector sidecar, and one
-    * `c {json}` line holding the version's [[CommitRecord]]. */
+    * a first `c {json}` line holding the version's [[CommitRecord]]
+    * (read on its own, whatever the file count), then `f <name>` per
+    * data file and `d <name>` per deletion-vector sidecar. */
   private[graft] val FilesManifest = "_graft_files"
 
   /** One version's COMMIT RECORD — the Delta log entry's commitInfo
-    * and txn actions: written as the `c {json}` line of the version's
+    * and txn actions: written as the first line of the version's
     * [[FilesManifest]] into staging before each claim, so the claim
     * publishes the commit's facts together with its data, and a
     * version's facts are final the moment it is visible. Every field
@@ -871,7 +872,7 @@ object Versioned {
       else "write"
 
     private[Versioned] def line: String = {
-      val o = cpMapper.createObjectNode()
+      val o = jsonMapper.createObjectNode()
       stamp.foreach(o.put("ts", _))
       replaced.foreach { r =>
         val a = o.putArray("replaced")
@@ -880,13 +881,13 @@ object Versioned {
       epoch.foreach(o.put("epoch", _))
       txn.foreach { case (app, v) => o.put("txnApp", app); o.put("txnVersion", v) }
       message.foreach(o.put("msg", _))
-      "c " + cpMapper.writeValueAsString(o)
+      "c " + jsonMapper.writeValueAsString(o)
     }
   }
 
   private[graft] object CommitRecord {
     private[Versioned] def parse(json: String): CommitRecord = {
-      val o = cpMapper.readTree(json)
+      val o = jsonMapper.readTree(json)
       def text(k: String) = Option(o.get(k)).map(_.textValue())
       CommitRecord(
         Option(o.get("ts")).map(_.longValue()),
@@ -901,10 +902,16 @@ object Versioned {
   }
 
   /** The commit record of v=`version` (the empty record when it has none). */
-  private[graft] def commitRecord(root: String, version: Long): CommitRecord =
-    manifestLines(Paths.get(root, s"v=$version")).iterator.flatten
-      .collectFirst { case l if l.startsWith("c ") => CommitRecord.parse(l.drop(2)) }
-      .getOrElse(CommitRecord())
+  private[graft] def commitRecord(root: String, version: Long): CommitRecord = {
+    val m = Paths.get(root, s"v=$version", FilesManifest)
+    if (!Files.exists(m)) CommitRecord()
+    else {
+      val in = Files.newBufferedReader(m, java.nio.charset.StandardCharsets.UTF_8)
+      val first = try in.readLine() finally in.close()
+      if (first != null && first.startsWith("c ")) CommitRecord.parse(first.drop(2))
+      else CommitRecord()
+    }
+  }
 
   private[graft] def writeFilesManifest(vdir: Path, dataNames: Seq[String],
                                         dvNames: Seq[String],
@@ -943,26 +950,22 @@ object Versioned {
       requireWriterFeature(vdir.getParent, "deletion-vectors")
     }
     Files.write(vdir.resolve(FilesManifest),
-      (dataNames.sorted.map("f " + _) ++ dvNames.sorted.map("d " + _) :+
-        record.line).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  /** The manifest's lines, or None for a pre-manifest version dir. */
-  private def manifestLines(vdir: Path): Option[Seq[String]] = {
-    val m = vdir.resolve(FilesManifest)
-    if (!Files.exists(m)) None
-    else Some(new String(Files.readAllBytes(m),
-      java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq)
+      (record.line +: (dataNames.sorted.map("f " + _) ++ dvNames.sorted.map("d " + _)))
+        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** (data file names, dv sidecar names) from the manifest, or None for
     * a pre-manifest version dir (falls back to directory listing). */
-  private[graft] def manifestEntries(vdir: Path): Option[(Seq[String], Seq[String])] =
-    manifestLines(vdir).map { lines =>
-      (lines.collect { case l if l.startsWith("f ") => l.drop(2) },
-        lines.collect { case l if l.startsWith("d ") => l.drop(2) })
+  private[graft] def manifestEntries(vdir: Path): Option[(Seq[String], Seq[String])] = {
+    val m = vdir.resolve(FilesManifest)
+    if (!Files.exists(m)) None
+    else {
+      val lines = new String(Files.readAllBytes(m),
+        java.nio.charset.StandardCharsets.UTF_8).linesIterator.toSeq
+      Some((lines.collect { case l if l.startsWith("f ") => l.drop(2) },
+        lines.collect { case l if l.startsWith("d ") => l.drop(2) }))
     }
+  }
 
   /** Raw directory listing of `*.parquet` (skips _SUCCESS/manifests) —
     * the staging-dir and pre-manifest fallback path. */

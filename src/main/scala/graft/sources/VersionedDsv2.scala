@@ -4415,7 +4415,9 @@ private[graft] object VersionedWriteIo {
       try attempt(0, Carry())
       catch { case e: Throwable => Versioned.deleteRecursively(staged); throw e }
     Versioned.writeLatestHint(root, next)
-    if (record.stamp.nonEmpty && next % Versioned.CheckpointInterval == 0 && next > 0)
+    // every interval-th stamped commit refreshes the commit-log
+    // checkpoint (best-effort: it is an accelerator, never truth)
+    if (record.stamp.nonEmpty && next > 0 && next % Versioned.CheckpointInterval == 0)
       try Versioned.writeCheckpoint(root, cover = next - 1)
       catch { case scala.util.control.NonFatal(_) => () }
     // no-ops unless configured: carried files reuse their lines from the
