@@ -496,7 +496,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         VersionedWriteIo.commitStaged(root.toString, staging,
           GraftVersionedTable.physicalSchema(declared, stagedColMap),
           appendPrev = false,
-          Versioned.CommitRecord(Some(VersionedWriteIo.stampValue(None))))
+          stamp = VersionedWriteIo.stampValue(None))
       }
       // publish the new contract — every manifest lands via staged
       // write + atomic rename (publishTableContract), so a concurrent

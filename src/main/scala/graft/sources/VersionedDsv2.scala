@@ -3836,9 +3836,8 @@ private[sources] class GraftBatchWrite(
           txn, message)
       case _ =>
         VersionedWriteIo.commitStaged(root, staged, physSchema,
-          appendPrev = !replace, Versioned.CommitRecord(
-            Some(VersionedWriteIo.stampValue(commitTs)), txn = txn,
-            message = message))
+          appendPrev = !replace, stamp = VersionedWriteIo.stampValue(commitTs),
+          txn = txn, message = message)
     }
     // persist the identity high-water mark implied by this commit's
     // assignments (monotone advance, atomic manifest swap): the next
@@ -3913,8 +3912,8 @@ private[sources] class GraftStreamingWrite(
     val stamp = commitTs.map(_ + epochId)
       .getOrElse(VersionedWriteIo.stampValue(None))
     val committed = VersionedWriteIo.commitStaged(root, epochDir, physSchema,
-      appendPrev = !replace, Versioned.CommitRecord(Some(stamp),
-        epoch = Some(tag), message = message))
+      appendPrev = !replace, stamp = stamp, epochTag = Some(tag),
+      message = message)
     // the every-commit-feeds contract covers streaming epochs too: a
     // changeFeedKeys table fed by a stream stores one diff per epoch
     // (replayed epochs return before reaching here, so no double feed)
@@ -4329,14 +4328,18 @@ private[graft] object VersionedWriteIo {
     * carries the previous version's files (and their DV sidecars) in,
     * overwrite mode carries nothing. Concurrency is [[commit]]'s. */
   def commitStaged(root: String, staged: Path, schema: StructType,
-                   appendPrev: Boolean, record: Versioned.CommitRecord): Long = {
+                   appendPrev: Boolean, stamp: Long,
+                   epochTag: Option[String] = None,
+                   txn: Option[(String, Long)] = None,
+                   message: Option[String] = None): Long = {
     // an all-empty-partitions write still commits a readable version:
     // one zero-row file carries the schema for every future reader
     if (Versioned.listParquet(staged).isEmpty)
       VersionedWriterFactory(schema, staged.toString)
         .emptyFile(uniqueEmptyName())
     GraftVersionedTable.recordVariantCols(root, schema)
-    commit(root, staged, record) { latest =>
+    commit(root, staged, Versioned.CommitRecord(Some(stamp), epoch = epochTag,
+        txn = txn, message = message)) { latest =>
       val prevDir = latest.map(p => Paths.get(root, s"v=$p"))
       // append keeps every previous file under its SAME name (names are
       // unique at creation and immutable across commits — the identity
