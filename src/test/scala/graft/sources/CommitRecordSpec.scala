@@ -217,4 +217,14 @@ class CommitRecordSpec extends AnyFunSuite with SparkSpec {
     assert(VersionedWriteIo.commitMessage(root, 1L) === Some(msg))
     assert(history(name)(1L).getString(9) === msg)
   }
+
+  test("a merge-on-read MERGE records the session-conf message") {
+    val (name, root) = freshTable("'deletionVectors'='true'")
+    spark.conf.set("graft.versioned.commitMessage", "hourly upsert")
+    try spark.sql(s"MERGE INTO $name t USING (SELECT 3L AS id, 1L AS v) s " +
+      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v")
+    finally spark.conf.set("graft.versioned.commitMessage", "")
+    assert(Versioned.commitInfoOf(root, 1L).op === "rowlevel")
+    assert(history(name)(1L).getString(9) === "hourly upsert")
+  }
 }
