@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,8 +19,8 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
 
   private var n = 0
   /** A fresh `changeFeedKeys='id'` table holding ids 0..39. */
-  private def freshTable(props: String = "", cols: String = "v BIGINT, tag STRING")
-      : (String, String) = {
+  private def freshTable(props: String = "", cols: String = "v BIGINT, tag STRING",
+                         extra: String = ""): (String, String) = {
     spark.conf.set("spark.sql.catalog.feq", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.feq.warehouse", warehouse)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS feq.t")
@@ -29,7 +29,7 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
     spark.sql(s"CREATE TABLE $name (id BIGINT, $cols) USING `graft-versioned` " +
       s"TBLPROPERTIES ('changeFeedKeys'='id'$props)")
     spark.sql(s"INSERT INTO $name SELECT id, id * 10, " +
-      "CASE WHEN id % 3 = 0 THEN NULL ELSE concat('t', id) END FROM range(0, 40)")
+      s"CASE WHEN id % 3 = 0 THEN NULL ELSE concat('t', id) END$extra FROM range(0, 40)")
     (name, s"$warehouse/t/tab$n")
   }
 
@@ -42,7 +42,8 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
     * snapshots `read(version - 1)` and `read(version)`. */
   private def assertFeedIsDiff(root: String, version: Long,
                                read: Long => DataFrame,
-                               keys: Seq[String] = Seq("id")): Unit = {
+                               keys: Seq[String] = Seq("id"),
+                               stored: String => Column = col): Unit = {
     assert(Versioned.feedVersions(root).contains(version),
       s"v=$version stored no change feed")
     val cur = read(version)
@@ -58,9 +59,9 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
       payload.map("old_" + _) ++ payload.map("new_" + _)
     val expected = diff.withColumn("commit_version", lit(version))
       .select(outCols.map(col): _*)
-    val stored = spark.read.parquet(Versioned.feedDir(root, version))
-      .select(outCols.map(col): _*)
-    assert(rows(stored) === rows(expected), s"feed of v=$version")
+    val feed = spark.read.parquet(Versioned.feedDir(root, version))
+      .select(outCols.map(c => stored(c).as(c)): _*)
+    assert(rows(feed) === rows(expected), s"feed of v=$version")
   }
 
   private def sqlRead(t: String)(v: Long): DataFrame =
@@ -125,6 +126,80 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
     spark.sql(s"DELETE FROM $t WHERE id < 8")
     assertFeedIsDiff(root, 1L, sqlRead(t))
     assertFeedIsDiff(root, 2L, sqlRead(t))
+  }
+
+  test("a key-changing UPDATE on a deletion-vector table") {
+    val (t, root) = freshTable(Dv)
+    spark.sql(s"UPDATE $t SET id = id + 100 WHERE id < 5")
+    assertFeedIsDiff(root, 1L, sqlRead(t))
+    // a key move onto a key that was just freed, beside a payload change
+    spark.sql(s"UPDATE $t SET id = id - 100, v = v + 1 WHERE id >= 100")
+    assertFeedIsDiff(root, 2L, sqlRead(t))
+  }
+
+  test("an UPDATE of a NULL-key row on a deletion-vector table") {
+    val (t, root) = freshTable(Dv)
+    spark.sql(s"INSERT INTO $t VALUES (NULL, 1, 'n')")
+    spark.sql(s"UPDATE $t SET v = 7 WHERE id IS NULL OR id = 3")
+    assertFeedIsDiff(root, 1L, sqlRead(t))
+    assertFeedIsDiff(root, 2L, sqlRead(t))
+  }
+
+  test("a MERGE with both a matched DELETE and a not-matched INSERT") {
+    val (t, root) = freshTable(Dv)
+    spark.sql(s"""MERGE INTO $t t
+      USING (SELECT id, id * 100 AS v, 'm' AS tag FROM range(30, 50)) s
+      ON t.id = s.id
+      WHEN MATCHED THEN DELETE
+      WHEN NOT MATCHED THEN INSERT (id, v, tag) VALUES (s.id, s.v, s.tag)""")
+    assertFeedIsDiff(root, 1L, sqlRead(t))
+  }
+
+  test("a MERGE whose claim loses to a disjoint row-level commit rebases") {
+    val (t, root) = freshTable(Dv)
+    spark.sql(s"INSERT INTO $t SELECT id, id, 'second' FROM range(40, 80)")  // v1
+    val race = new RaceOnFirstClaim(CommitStore.active, () =>
+      spark.sql(s"DELETE FROM $t WHERE id >= 70"))                           // v2
+    CommitStore.withStore(race)(spark.sql(s"""MERGE INTO $t t
+      USING (SELECT id, -id AS v, 'm' AS tag FROM range(0, 10)) s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v"""))                              // v3
+    assert(race.fired)
+    assert(latest(root) === 3L)
+    assert(Versioned.commitRecord(root, 2L).replaced.nonEmpty)
+    (1L to 3L).foreach(assertFeedIsDiff(root, _, sqlRead(t)))
+    assert(spark.read.parquet(Versioned.feedDir(root, 3L))
+      .where("change_type = 'changed'").count() === 9L)
+  }
+
+  test("a row-tracked deletion-vector table: MERGE, UPDATE and DELETE") {
+    val (t, root) = freshTable(Dv + ", 'rowTracking'='true'")
+    spark.sql(s"""MERGE INTO $t t
+      USING (SELECT id, id * 100 AS v, 'm' AS tag FROM range(30, 50)) s
+      ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET v = s.v
+      WHEN NOT MATCHED THEN INSERT (id, v, tag) VALUES (s.id, s.v, s.tag)""")
+    spark.sql(s"UPDATE $t SET tag = 'u' WHERE id < 12")
+    spark.sql(s"DELETE FROM $t WHERE id BETWEEN 20 AND 25")
+    (1L to 3L).foreach(assertFeedIsDiff(root, _, sqlRead(t)))
+  }
+
+  test("a VARIANT table: an insert-only MERGE and both kinds of DELETE") {
+    val (t, root) = freshTable(Dv, "v BIGINT, tag STRING, doc VARIANT",
+      """, parse_json(concat('{"a":', id, '}'))""")
+    spark.sql(s"""MERGE INTO $t t
+      USING (SELECT id, id * 100 AS v, 'm' AS tag,
+             parse_json(concat('{"b":', id, '}')) AS doc FROM range(30, 50)) s
+      ON t.id = s.id
+      WHEN NOT MATCHED THEN INSERT (id, v, tag, doc) VALUES (s.id, s.v, s.tag, s.doc)""")
+    spark.sql(s"DELETE FROM $t WHERE id BETWEEN 20 AND 35")
+    spark.sql(s"DELETE FROM $t WHERE id % 4 = 1")
+    // VARIANT has no equality: compare its JSON text
+    def jsonRead(v: Long): DataFrame = spark.sql(
+      s"SELECT id, v, tag, to_json(doc) AS doc FROM $t VERSION AS OF $v")
+    def jsonCol(c: String): Column =
+      if (c.endsWith("_doc")) org.apache.spark.sql.functions.to_json(col(c)) else col(c)
+    (1L to 3L).foreach(assertFeedIsDiff(root, _, jsonRead, stored = jsonCol))
   }
 
   test("streaming epochs") {
