@@ -269,6 +269,12 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // every streaming run clones the session, and with artifact
+      // isolation each clone's UUID gets its own executor classloader —
+      // the key of Spark's codegen cache — so a restarted AvailableNow
+      // query recompiled every generated class of its plan. Graft adds
+      // no session artifacts (jars, files) to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
     // Scan-split override for the scaling-slope probes (SCALING.md):
     // the dev fixtures are ONE parquet file, so at Spark's default
     // 128 MB split size the whole scan — and the explode/partial-agg
