@@ -85,8 +85,10 @@ object Cdc {
     * row per side: with two rows under one key the join pairs every
     * row of one side with every row of the other. The versioned store's
     * stored change feed relies on the same rule, which is what lets it
-    * diff only the rows a commit changed
-    * ([[Versioned.writeFeedFor]]).
+    * diff only the rows a commit changed ([[Versioned.writeFeedFor]])
+    * and lets a merge-on-read commit's write tasks pair the rows each
+    * of them changed without a join (`graft.sources.TaskFeed`, which
+    * applies this method's `<=>` test and never pairs a NULL key).
     */
   def snapshotDiff(before: DataFrame, after: DataFrame,
                    keyCols: Seq[String], payload: Seq[String]): DataFrame = {

@@ -343,8 +343,8 @@ object Versioned {
         commitStamp(root, ver).isDefined })
       throw new IllegalStateException(
         s"current version v=$v under $root has no commit stamp but the root " +
-          "is time-travel-enabled — re-stamp or roll back the torn version " +
-          "before compacting")
+          "is time-travel-enabled — roll back the torn version, or commit " +
+          "a new version with an explicit commitTs, before compacting")
     (v, stamp)
   }
 
@@ -1025,6 +1025,41 @@ object Versioned {
   def feedDir(root: String, version: Long): String =
     s"$root/_changes/v=$version"
 
+  /** The columns of a stored feed over `cols` (the feed keys, then the
+    * payload columns, in table order): the keys, `change_type`,
+    * `commit_version`, then the payload's `old_` and `new_` images. */
+  private[graft] def feedSchema(cols: StructType, keys: Seq[String]): StructType = {
+    val payload = cols.fields.filterNot(f => keys.contains(f.name)).toSeq
+    StructType(keys.map(cols(_)) ++ Seq(
+      org.apache.spark.sql.types.StructField("change_type",
+        org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("commit_version",
+        org.apache.spark.sql.types.LongType)) ++
+      payload.map(f => f.copy(name = s"old_${f.name}")) ++
+      payload.map(f => f.copy(name = s"new_${f.name}")))
+  }
+
+  /** A fresh root-level dir to assemble one feed in. The `_staging_`
+    * prefix keeps an orphan (a crash before [[publishFeed]]) visible
+    * to the staging sweep and fsck, and outside `_changes`. */
+  private[graft] def stageFeed(root: String): Path =
+    Files.createTempDirectory(Paths.get(root), "_staging_feed_")
+
+  /** Publish the feed assembled in `staged` as `_changes/v=<version>`:
+    * write its files manifest, then ONE rename — a reader never sees
+    * the feed dir without its manifest. A feed left under the same
+    * version (its version rolled back, then re-committed) is
+    * replaced. */
+  private[graft] def publishFeed(root: String, version: Long, staged: Path): Unit = {
+    val names = listParquet(staged).map(_.getFileName.toString).sorted
+    Files.write(staged.resolve(FilesManifest), names.map("f " + _).mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val target = Paths.get(feedDir(root, version))
+    Files.createDirectories(target.getParent)
+    deleteRecursively(target)
+    Files.move(staged, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** [[writeNext]] + a STORED change feed: the keyed diff against the
     * previous version (added/removed/changed with old_/new_ payloads,
     * [[Cdc.snapshotDiff]]) lands under `root/_changes/v=<n>` in the same
@@ -1050,7 +1085,11 @@ object Versioned {
     * a first commit. Factored out of [[writeNextWithFeed]] so DSv2/SQL
     * commits (INSERT, UPDATE, MERGE, DELETE on a `changeFeedKeys`
     * table), streaming epochs and the catalog's RESTORE/CLONE emit the
-    * same feed the streaming change-feed source drains.
+    * same feed the streaming change-feed source drains. A
+    * merge-on-read MERGE/UPDATE/DELETE and a DV DELETE write their feed
+    * from their own tasks instead ([[graft.sources.TaskFeed]]) and
+    * come here only when that feed cannot be exact — its second Spark
+    * query is what the task-written feed saves.
     *
     * The feed is derived from what the commit CHANGED, not from the two
     * snapshots: [[graft.sources.CommitImages]] diffs the two manifests
@@ -1070,7 +1109,10 @@ object Versioned {
     * snapshots whenever the feed keys pick out at most one live row per
     * version — the only case in which a keyed diff is defined at all.
     * Under that rule a key whose row the commit removed and did not
-    * re-add is gone after it, and a key it added was absent before. */
+    * re-add is gone after it, and a key it added was absent before.
+    *
+    * The feed is assembled in a root-level `_staging_feed_*` dir and
+    * published with its manifest by one rename ([[publishFeed]]). */
   def writeFeedFor(spark: SparkSession, root: String, version: Long,
                    schema: StructType, keys: Seq[String], payload: Seq[String],
                    colMap: Map[String, String] = Map.empty): Unit = {
@@ -1098,27 +1140,20 @@ object Versioned {
       case (None, None) =>
         oneSided(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cols), "added")
     }
-    feed
-      .select(keys.map(col) ++
-        Seq(col("change_type"), lit(version).as("commit_version")) ++
-        payload.map(c => col(s"old_$c")) ++
-        payload.map(c => col(s"new_$c")): _*)
-      .write.mode("overwrite").parquet(feedDir(root, version))
     // feed dirs get a files manifest like version dirs do: one listing
     // at write time makes every feed read (batch CDF range scan,
     // streaming drain, byte-budget admission) manifest-resolved — a
     // stray parquet file (a task retry's orphan Spark's committer
     // missed, an operator mistake) can never REPLAY A PHANTOM CHANGE.
-    // Published via temp + atomic rename so a crash mid-write leaves
-    // either no manifest (listing fallback) or a complete one.
-    val fdir = Paths.get(feedDir(root, version))
-    val names = listParquet(fdir).map(_.getFileName.toString).sorted
-    val tmp = Files.createTempFile(fdir, "_graft_files_", ".tmp")
-    Files.write(tmp, names.map("f " + _).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, fdir.resolve(FilesManifest),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // The feed is assembled under staging and published with its
+    // manifest by one rename ([[publishFeed]]).
+    val staged = stageFeed(root)
+    try {
+      feed.withColumn("commit_version", lit(version))
+        .select(feedSchema(cols, keys).fieldNames.toSeq.map(col): _*)
+        .write.mode("overwrite").parquet(staged.toString)
+      publishFeed(root, version, staged)
+    } catch { case e: Throwable => deleteRecursively(staged); throw e }
   }
 
   /** Read the current (or a pinned) version. Files resolve through the

@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -13,7 +14,10 @@ import graft.operators.{DeletionVectors, Versioned}
 
 /** The rows one commit changed, read from the two versions' manifests
   * instead of from their whole snapshots — what a stored change feed
-  * is derived from ([[Versioned.writeFeedFor]]).
+  * is derived from ([[Versioned.writeFeedFor]]). A merge-on-read write
+  * task reads the same images of its own changes in place
+  * ([[rowsAt]], [[rowsOf]]) to write its share of the feed
+  * ([[TaskFeed]]).
   *
   * Data file names are identities (unique at creation, carried under
   * the same name), so diffing the base version's manifest against the
@@ -55,6 +59,43 @@ private[graft] object CommitImages {
       else Some(org.apache.spark.sql.GraftBridge.ofRows(spark,
         DataSourceV2Relation.create(new ImagesTable(schema, colMap, ss), None, None)))
     (frame(before), frame(after))
+  }
+
+  /** The rows of `file` at the sorted, distinct `positions`, whatever
+    * their DV state, read in the calling task through `images` — the
+    * same split-per-row-group `only` read the images relation
+    * schedules, run in place. Rows are copies. */
+  def rowsAt(file: Path, positions: Array[Long],
+             images: VersionedReaderFactory): Iterator[InternalRow] =
+    splits(file, None, Some(positions)).iterator.flatMap(s => read(s.part, images))
+
+  /** Every row of `file` (one the calling task wrote), read back
+    * through `images`. Rows are copies. */
+  def rowsOf(file: Path, images: VersionedReaderFactory): Iterator[InternalRow] =
+    read(GroupParquetPartition(file.toString), images)
+
+  private def read(part: GroupParquetPartition,
+                   images: VersionedReaderFactory): Iterator[InternalRow] = {
+    val r = images.createReader(part)
+    // a reader left before its end closes with the task
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => r.close()))
+    new Iterator[InternalRow] {
+      private var ahead = false
+      private var done = false
+      override def hasNext: Boolean = {
+        if (!ahead && !done) {
+          ahead = r.next()
+          if (!ahead) { done = true; r.close() }
+        }
+        ahead
+      }
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        ahead = false
+        r.get().copy()
+      }
+    }
   }
 
   /** One version's data files and DV sidecars, by data file name. */

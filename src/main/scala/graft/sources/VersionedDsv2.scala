@@ -14,6 +14,7 @@ import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
@@ -31,7 +32,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport, ParquetWriteSupport, SparkToParquetSchemaConverter, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetWriteSupport, SparkToParquetSchemaConverter, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -191,7 +192,11 @@ private[sources] object GraftVersionedTable {
   private val ColMapPairSep = '\u0001'
 
   def colMapOf(options: CaseInsensitiveStringMap): Map[String, String] =
-    Option(options.get("colmap")).filter(_.nonEmpty)
+    colMapOf(Option(options.get("colmap")))
+
+  /** [[colMapOf]] of a serialized `colmap` option value. */
+  def colMapOf(raw: Option[String]): Map[String, String] =
+    raw.filter(_.nonEmpty)
       .map(_.split(ColMapEntrySep).map { e =>
         val i = e.indexOf(ColMapPairSep)
         require(i > 0, s"graft-versioned: malformed colmap entry '$e'")
@@ -295,6 +300,64 @@ private[sources] object GraftVersionedTable {
     StructType(order.values.toSeq)
   }
 
+  /** The stored feed versions a change-feed read selects: the
+    * `startingVersion`/`endingVersion` bounds (numbers or tags) or the
+    * `startingTimestamp`/`endingTimestamp` bounds (commit stamps,
+    * micros), defaulting to every stored feed. Fails loudly on bounds
+    * that select nothing. */
+  def feedRange(root: String, options: CaseInsensitiveStringMap): Seq[Long] = {
+    val feeds = Versioned.feedVersions(root)
+    require(feeds.nonEmpty,
+      s"graft-versioned: no stored change feed under $root — the table " +
+        "was not written with changeFeedKeys / writeNextWithFeed")
+    def bound(key: String, default: Long): Long =
+      Option(options.get(key))
+        .map(Versioned.resolveRef(root, _)) // number or tag name
+        .getOrElse(default)
+    // TIMESTAMP bounds (Delta's readChangeFeed startingTimestamp /
+    // endingTimestamp): resolved against commit stamps — the same
+    // micros anchor timestampAsOf uses, checkpoint-accelerated.
+    // start = first feed commit stamped at-or-after; end = last feed
+    // commit stamped at-or-before. Exclusive with the version bounds.
+    def tsBound(key: String): Option[Long] =
+      Option(options.get(key)).map { raw =>
+        scala.util.Try(raw.trim.toLong).getOrElse(
+          throw new IllegalArgumentException(
+            s"graft-versioned: $key must be an integer commit stamp " +
+              s"(micros), got '$raw'"))
+      }
+    require(!(options.containsKey("startingVersion") &&
+        options.containsKey("startingTimestamp")),
+      "graft-versioned: startingVersion and startingTimestamp are " +
+        "mutually exclusive")
+    require(!(options.containsKey("endingVersion") &&
+        options.containsKey("endingTimestamp")),
+      "graft-versioned: endingVersion and endingTimestamp are " +
+        "mutually exclusive")
+    lazy val cp = Versioned.readCheckpoint(root)
+    def stampOf(v: Long): Option[Long] =
+      Versioned.commitInfoFast(root, v, cp).ts
+    val from = tsBound("startingTimestamp").map { ts =>
+      feeds.find(v => stampOf(v).exists(_ >= ts)).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft-versioned: startingTimestamp $ts is after the newest " +
+            "stored feed commit — nothing to read"))
+    }.getOrElse(bound("startingVersion", 0L))
+    val to = tsBound("endingTimestamp").map { ts =>
+      val sel = feeds.filter(v => stampOf(v).exists(_ <= ts))
+      require(sel.nonEmpty,
+        s"graft-versioned: endingTimestamp $ts precedes the earliest " +
+          "stored feed commit")
+      sel.last
+    }.getOrElse(bound("endingVersion", feeds.last))
+    require(from <= feeds.last,
+      s"graft-versioned: startingVersion $from is beyond the newest " +
+        s"stored feed version ${feeds.last}")
+    require(from <= to,
+      s"graft-versioned: startingVersion $from > endingVersion $to")
+    feeds.filter(v => v >= from && v <= to)
+  }
+
   def resolveSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = SparkSession.active
     val root = rootOf(options)
@@ -303,19 +366,27 @@ private[sources] object GraftVersionedTable {
       require(feeds.nonEmpty,
         s"no change feed under $root — write versions with " +
           "Versioned.writeNextWithFeed to enable streaming reads")
-      // union across ALL stored feeds: a table that evolved mid-stream
-      // has old feeds without the new old_/new_ payload columns — the
-      // merged schema exposes them and pre-evolution feed files
-      // null-fill on read. A feed spanning a TYPE WIDENING holds
-      // INT32 and INT64 halves of the same column — parquet's merge
-      // refuses that, so fall back to the widening-aware union.
-      try spark.read.option("mergeSchema", "true")
-        .parquet(feeds.map(Versioned.feedDir(root, _)): _*).schema
-      catch { case e: org.apache.spark.SparkException
-          if String.valueOf(e.getMessage).contains("CANNOT_MERGE_SCHEMAS") =>
-        widenMergeSchemas(feeds.map(v =>
-          spark.read.parquet(Versioned.feedDir(root, v)).schema), root)
-      }
+      // the union over the feeds the read selects (a stream's start
+      // past the stored feeds selects them all), from their footers on
+      // the driver — no job: a table that evolved mid-range has old
+      // feeds without the new old_/new_ payload columns — the union
+      // exposes them and pre-evolution feed files null-fill on read;
+      // one spanning a TYPE WIDENING holds INT32 and INT64 halves of
+      // the same column, which the widening-aware union takes
+      val selected = scala.util.Try(feedRange(root, options)).toOption
+        .filter(_.nonEmpty).getOrElse(feeds)
+      val converter = new ParquetToSparkSchemaConverter(SQLConf.get)
+      val files = selected.flatMap(v =>
+        Versioned.dataFiles(java.nio.file.Paths.get(Versioned.feedDir(root, v))))
+      val merged = widenMergeSchemas(files.map { f =>
+        val path = new HPath(f.toString)
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromPath(path, GroupParquetIo.hadoopDefaults),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(path, meta), converter)
+      }, root)
+      StructType(merged.fields.map(_.copy(nullable = true)))
     } else if (Versioned.latestVersion(root).isEmpty &&
                options.getBoolean("create", false)) {
       new StructType()
@@ -557,7 +628,11 @@ private[sources] class GraftVersionedTable(
     val spark = SparkSession.active
     if (Versioned.latestVersion(root).isEmpty) return // nothing to delete
     val pred = filters.flatMap(GroupParquetIo.toColumn).reduceOption(_ && _)
-    val v = pred match {
+    // changeFeedKeys tables feed the change source from DELETEs too
+    val feedKeys = Option(options.get("changeFeedKeys"))
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq.empty)
+    pred match {
       // MERGE-ON-READ delete (`deletionVectors=true` table property):
       // the new version hard-links every data file and records the
       // matching ROW POSITIONS in per-file sidecars — a one-row DELETE
@@ -570,7 +645,7 @@ private[sources] class GraftVersionedTable(
       // worst of both worlds.
       case Some(p) if options.getBoolean("deletionVectors", false) =>
         VersionedWriteIo.deleteViaDv(spark, root, p,
-          Option(options.get("colmap")), Some(tableSchema))
+          Option(options.get("colmap")), Some(tableSchema), feedKeys)
       case _ =>
         // copy-on-write: survivors become a new version. Read with the
         // TABLE schema, not footer inference: a snapshot holding
@@ -644,17 +719,12 @@ private[sources] class GraftVersionedTable(
           else keep.toDF(keep.columns.map(physOf).toIndexedSeq: _*)
         // the survivors are v=latest's: a commit racing the rewrite
         // fails it rather than vanishing under it
-        Versioned.writeOver(keepPhys, root, latest, "a copy-on-write DELETE",
-          Some(VersionedWriteIo.stampValue(None)))
+        val v = Versioned.writeOver(keepPhys, root, latest,
+          "a copy-on-write DELETE", Some(VersionedWriteIo.stampValue(None)))
+        if (feedKeys.nonEmpty)
+          Versioned.writeFeedFor(spark, root, v, tableSchema, feedKeys,
+            tableSchema.fieldNames.filterNot(feedKeys.contains).toSeq, colMap)
     }
-    // changeFeedKeys tables feed the change source from DELETEs too
-    val feedKeys = Option(options.get("changeFeedKeys"))
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
-    if (feedKeys.nonEmpty)
-      Versioned.writeFeedFor(spark, root, v, tableSchema, feedKeys,
-        tableSchema.fieldNames.filterNot(feedKeys.contains).toSeq,
-        GraftVersionedTable.colMapOf(options))
   }
 
   // ---- `_file` + `_pos` metadata columns (Delta's
@@ -1044,12 +1114,15 @@ private[sources] class GraftDeltaWrite(
 }
 
 /** One staged message per task: the insert part file it cut (if any
-  * row was inserted) plus one DV FRAGMENT per data file it deleted
-  * from (`_dvfrag/<dataFileName>/<task>.dv`). The driver merges
-  * fragments per data file with the base version's sidecars at commit
-  * — driver work is O(deleted positions + files), never row data. */
+  * row was inserted), one DV FRAGMENT per data file it deleted
+  * from (`_dvfrag/<dataFileName>/<task>.dv`) and, on a feeding table,
+  * its share of the change feed (None: the task wrote none). The
+  * driver merges fragments per data file with the base version's
+  * sidecars at commit — driver work is O(deleted positions + files),
+  * never row data. */
 private[sources] case class StagedDeltaMessage(
-    insertFiles: Seq[String], fragments: Seq[String])
+    insertFiles: Seq[String], fragments: Seq[String],
+    feed: Option[TaskFeed.Part] = None)
   extends WriterCommitMessage
 
 private[sources] class GraftDeltaBatchWrite(
@@ -1064,11 +1137,18 @@ private[sources] class GraftDeltaBatchWrite(
   private val staged = java.nio.file.Paths.get(
     root, s"_staging_delta_${queryId}_${java.util.UUID.randomUUID.toString.take(8)}")
 
+  // the feed the write tasks pair and write themselves (None: the
+  // commit derives it with Versioned.writeFeedFor)
+  private var feed: Option[TaskFeed.Spec] = None
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
     java.nio.file.Files.createDirectories(staged)
+    if (feedKeys.nonEmpty)
+      feed = TaskFeed.spec(root, op.table.schema(), feedKeys, colMap,
+        op.scannedVersion, pairs = true)
     GraftDeltaWriterFactory(
       GraftVersionedTable.physicalSchema(dataSchema, colMap), staged.toString,
-      autoFill, math.max(1, info.numPartitions()), rowIdMetaIdx)
+      autoFill, math.max(1, info.numPartitions()), rowIdMetaIdx, feed)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1082,56 +1162,52 @@ private[sources] class GraftDeltaBatchWrite(
     txn match {
       case Some((app, ver)) if VersionedWriteIo.txnCommitted(root, app, ver) =>
         Versioned.deleteRecursively(staged)
+        feed.foreach(TaskFeed.drop)
         return
       case _ => ()
     }
     // drop leftovers of speculative/failed attempts: only files named
     // in a commit message survive (inserts AND fragments)
-    val dataMsgs = AutoFillCommitMessage.unwrap(messages)
-    val keepInserts = dataMsgs.collect {
-      case StagedDeltaMessage(ins, _) => ins }.flatten.toSet
-    val keepFrags = dataMsgs.collect {
-      case StagedDeltaMessage(_, fr) => fr }.flatten.toSet
+    val dataMsgs = AutoFillCommitMessage.unwrap(messages).collect {
+      case m: StagedDeltaMessage => m }
+    val keepInserts = dataMsgs.flatMap(_.insertFiles).toSet
     Versioned.listParquet(staged)
       .filterNot(f => keepInserts(f.getFileName.toString))
       .foreach(java.nio.file.Files.delete(_))
-    val fragBase = staged.resolve(VersionedWriteIo.FragDir)
-    if (java.nio.file.Files.isDirectory(fragBase)) {
-      val stream = java.nio.file.Files.walk(fragBase)
-      try {
-        stream.filter(p => p.toString.endsWith(".dv")).forEach { p =>
-          val rel = fragBase.relativize(p).toString
-          if (!keepFrags(rel)) java.nio.file.Files.delete(p)
-        }
-      } finally stream.close()
-    }
-    val committed = VersionedWriteIo.commitDelta(root, staged,
-      op.scannedVersion, VersionedWriteIo.stampValue(commitTs), txn, message)
+    VersionedWriteIo.keepFragments(staged, dataMsgs.flatMap(_.fragments).toSet)
+    val committed =
+      try VersionedWriteIo.commitDelta(root, staged,
+        op.scannedVersion, VersionedWriteIo.stampValue(commitTs), txn, message)
+      catch { case e: Throwable => feed.foreach(TaskFeed.drop); throw e }
     // MERGE-inserted identity values advance the persisted high-water
     // mark exactly like batch inserts do
     autoFill.foreach(f => AutoColumns.advanceHwm(root,
       AutoFillCommitMessage.nextBases(f, messages)))
     if (feedKeys.nonEmpty)
-      Versioned.writeFeedFor(SparkSession.active, root, committed,
-        op.table.schema(), feedKeys,
-        op.table.schema().fieldNames.filterNot(feedKeys.contains).toSeq,
-        colMap)
+      TaskFeed.finish(root, feed, dataMsgs.map(_.feed), committed) {
+        Versioned.writeFeedFor(SparkSession.active, root, committed,
+          op.table.schema(), feedKeys,
+          op.table.schema().fieldNames.filterNot(feedKeys.contains).toSeq,
+          colMap)
+      }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
     Versioned.deleteRecursively(staged)
+    feed.foreach(TaskFeed.drop)
+  }
 }
 
 private[sources] case class GraftDeltaWriterFactory(
     physSchema: StructType, stagingDir: String,
     autoFill: Option[AutoColumns.Fill] = None, numPartitions: Int = 1,
-    rowIdMetaIdx: Option[Int] = None)
+    rowIdMetaIdx: Option[Int] = None, feed: Option[TaskFeed.Spec] = None)
   extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
     val inner = new GraftDeltaDataWriter(stagingDir,
       f"part-$partitionId%05d-$taskId-${java.util.UUID.randomUUID.toString.take(8)}",
-      physSchema, rowIdMetaIdx)
+      physSchema, rowIdMetaIdx, feed)
     autoFill.fold(inner: DeltaWriter[InternalRow])(f =>
       new AutoFillDeltaWriter(inner, f, numPartitions, partitionId))
   }
@@ -1170,11 +1246,13 @@ private[sources] class AutoFillDeltaWriter(
 
 /** Executor-side delta writer: inserted rows stream into one lazy
   * parquet part file; deleted `(_file, _pos)` ids accumulate per data
-  * file and flush as DV fragments at task commit. The id arrives in
-  * [[GraftDeltaOperation.rowId]] order: (file path string, position). */
+  * file and flush as DV fragments at task commit, where a feeding
+  * table's task also pairs and writes its feed rows ([[TaskFeed]]).
+  * The id arrives in [[GraftDeltaOperation.rowId]] order: (file path
+  * string, position). */
 private[sources] class GraftDeltaDataWriter(
     dir: String, baseName: String, physSchema: StructType,
-    rowIdMetaIdx: Option[Int] = None)
+    rowIdMetaIdx: Option[Int] = None, feed: Option[TaskFeed.Spec] = None)
   extends DeltaWriter[InternalRow] {
 
   // row tracking: the insert part file carries a NULLABLE physical id
@@ -1198,13 +1276,10 @@ private[sources] class GraftDeltaDataWriter(
   private val idCell = new GenericInternalRow(1)
   private val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
 
-  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    val file = id.getUTF8String(0).toString
-    val pos = id.getLong(1)
-    val name = java.nio.file.Paths.get(file).getFileName.toString
-    deletes.getOrElseUpdate(name,
-      scala.collection.mutable.ArrayBuffer.empty[Long]) += pos
-  }
+  // keyed by the data file's path in the scanned version
+  override def delete(metadata: InternalRow, id: InternalRow): Unit =
+    deletes.getOrElseUpdate(id.getUTF8String(0).toString,
+      scala.collection.mutable.ArrayBuffer.empty[Long]) += id.getLong(1)
 
   override def insert(row: InternalRow): Unit = rowIdMetaIdx match {
     case None => insertWriter.write(row)
@@ -1229,26 +1304,32 @@ private[sources] class GraftDeltaDataWriter(
     reinsert(metadata, row)
   }
 
+  private def nameOf(path: String): String =
+    java.nio.file.Paths.get(path).getFileName.toString
+
   override def commit(): WriterCommitMessage = {
     val insertMsg = insertWriter.commit() match {
       case StagedFilesMessage(fs) => fs
       case _ => Seq.empty
     }
-    val frags = deletes.toSeq.map { case (dataFile, positions) =>
-      val rel = s"$dataFile/$baseName.dv"
+    val positions = deletes.toSeq.map { case (path, ps) => path -> ps.toArray.distinct.sorted }
+    val frags = positions.map { case (path, ps) =>
+      val rel = s"${nameOf(path)}/$baseName.dv"
       graft.operators.DeletionVectors.write(
-        java.nio.file.Paths.get(dir, VersionedWriteIo.FragDir, rel),
-        positions.toArray)
+        java.nio.file.Paths.get(dir, VersionedWriteIo.FragDir, rel), ps)
       rel
     }
-    StagedDeltaMessage(insertMsg, frags)
+    // the insert file is closed: its rows read back as stored
+    val feedPart = feed.flatMap(TaskFeed.write(_, baseName + ".parquet", positions,
+      insertMsg.map(java.nio.file.Paths.get(dir, _))))
+    StagedDeltaMessage(insertMsg, frags, feedPart)
   }
 
   override def abort(): Unit = {
     insertWriter.abort()
-    deletes.keys.foreach { dataFile =>
+    deletes.keys.foreach { path =>
       java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(
-        dir, VersionedWriteIo.FragDir, dataFile, baseName + ".dv"))
+        dir, VersionedWriteIo.FragDir, nameOf(path), baseName + ".dv"))
     }
   }
 
@@ -1428,58 +1509,7 @@ private[sources] class GraftVersionedScan(
   private val changeFeed = GraftVersionedTable.isChangeFeed(options)
 
   /** Feed versions this batch scan covers — resolved once, loudly. */
-  private lazy val feedRange: Seq[Long] = {
-    val feeds = Versioned.feedVersions(root)
-    require(feeds.nonEmpty,
-      s"graft-versioned: no stored change feed under $root — the table " +
-        "was not written with changeFeedKeys / writeNextWithFeed")
-    def bound(key: String, default: Long): Long =
-      Option(options.get(key))
-        .map(Versioned.resolveRef(root, _)) // number or tag name
-        .getOrElse(default)
-    // TIMESTAMP bounds (Delta's readChangeFeed startingTimestamp /
-    // endingTimestamp): resolved against commit stamps — the same
-    // micros anchor timestampAsOf uses, checkpoint-accelerated.
-    // start = first feed commit stamped at-or-after; end = last feed
-    // commit stamped at-or-before. Exclusive with the version bounds.
-    def tsBound(key: String): Option[Long] =
-      Option(options.get(key)).map { raw =>
-        scala.util.Try(raw.trim.toLong).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft-versioned: $key must be an integer commit stamp " +
-              s"(micros), got '$raw'"))
-      }
-    require(!(options.containsKey("startingVersion") &&
-        options.containsKey("startingTimestamp")),
-      "graft-versioned: startingVersion and startingTimestamp are " +
-        "mutually exclusive")
-    require(!(options.containsKey("endingVersion") &&
-        options.containsKey("endingTimestamp")),
-      "graft-versioned: endingVersion and endingTimestamp are " +
-        "mutually exclusive")
-    lazy val cp = Versioned.readCheckpoint(root)
-    def stampOf(v: Long): Option[Long] =
-      Versioned.commitInfoFast(root, v, cp).ts
-    val from = tsBound("startingTimestamp").map { ts =>
-      feeds.find(v => stampOf(v).exists(_ >= ts)).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-versioned: startingTimestamp $ts is after the newest " +
-            "stored feed commit — nothing to read"))
-    }.getOrElse(bound("startingVersion", 0L))
-    val to = tsBound("endingTimestamp").map { ts =>
-      val sel = feeds.filter(v => stampOf(v).exists(_ <= ts))
-      require(sel.nonEmpty,
-        s"graft-versioned: endingTimestamp $ts precedes the earliest " +
-          "stored feed commit")
-      sel.last
-    }.getOrElse(bound("endingVersion", feeds.last))
-    require(from <= feeds.last,
-      s"graft-versioned: startingVersion $from is beyond the newest " +
-        s"stored feed version ${feeds.last}")
-    require(from <= to,
-      s"graft-versioned: startingVersion $from > endingVersion $to")
-    feeds.filter(v => v >= from && v <= to)
-  }
+  private lazy val feedRange: Seq[Long] = GraftVersionedTable.feedRange(root, options)
 
   // ---- runtime filtering: broadcast-join key sets (and DPP
   // subqueries) arrive here AT EXECUTION start; they re-run the same
@@ -4008,11 +4038,12 @@ private[graft] object VersionedWriteIo {
   }
 
   /** Root-level temp-file sweep: the sidecar writers (latest hint,
-    * tags, protocol, checkpoint) and feed manifests publish via
-    * `_graft_*_….tmp` + atomic rename — a crash between the two leaves
-    * the tmp behind, invisible to every reader but billed storage.
-    * Age-gated like the staging sweep; covers the root and the feed
-    * dirs. Returns the deleted names. */
+    * tags, protocol, checkpoint) publish via `_graft_*_….tmp` + atomic
+    * rename — a crash between the two leaves the tmp behind, invisible
+    * to every reader but billed storage. Age-gated like the staging
+    * sweep; covers the root and the feed dirs (a feed dir whose
+    * manifest was written in place by an older build may hold its
+    * tmp). Returns the deleted names. */
   def vacuumRootTmp(root: String, olderThanMs: Long,
                     dryRun: Boolean = false): Seq[String] = {
     val cutoff = System.currentTimeMillis() - olderThanMs
@@ -4093,6 +4124,22 @@ private[graft] object VersionedWriteIo {
     * of a delta commit: `_dvfrag/<dataFileName>/<task>.dv`. */
   private[sources] val FragDir = "_dvfrag"
 
+  /** Drop the staged fragments no task's message names (`keep` holds
+    * `<dataFileName>/<task>.dv`) — a speculative or failed attempt's. */
+  private[sources] def keepFragments(staged: Path, keep: Set[String]): Unit = {
+    val fragBase = staged.resolve(FragDir)
+    if (Files.isDirectory(fragBase)) {
+      val stream = Files.walk(fragBase)
+      try {
+        import scala.jdk.CollectionConverters._
+        stream.iterator().asScala.toList
+          .filter(p => p.toString.endsWith(".dv") &&
+            !keep(fragBase.relativize(p).toString))
+          .foreach(Files.delete(_))
+      } finally stream.close()
+    }
+  }
+
   /** Publish a DELTA commit: the staged dir holds insert part files
     * plus per-task DV fragments; the new version hard-links EVERY data
     * file of the base version (nothing is replaced), adds the insert
@@ -4168,22 +4215,29 @@ private[graft] object VersionedWriteIo {
     * O(deleted rows + file count), independent of file SIZE — the
     * copy-on-write path rewrites every touched file end-to-end.
     *
-    * Position discovery is a distributed scan (the DV-aware,
-    * position-tracking DSv2 read projecting `_file`/`_pos`), grouped per file
-    * so each file's sidecar is written ONCE from the executor that
-    * aggregated it — the driver never holds the deleted-position set,
-    * only the per-file merge of old+new sidecars (each bounded by one
-    * file's rows). Existing DVs apply during discovery, so only LIVE
-    * rows can match and merged sidecars never double-count.
-    * Serializable commit: a concurrent commit between scan and publish
-    * fails this statement loudly; the committed version's record names
+    * ONE Spark job: the DV-aware, position-tracking scan (projecting
+    * `_file`/`_pos`) runs the predicate, and each scan task writes the
+    * positions it matched as one DV fragment per data file straight
+    * into the staged `_dvfrag/<dataFile>/<task>.dv` — the layout
+    * [[commitDelta]] merges with the base's sidecars — so no shuffle
+    * gathers positions and the driver never holds them. Existing DVs
+    * apply during the scan, so only LIVE rows can match and merged
+    * sidecars never double-count. On a table feeding on `feedKeys` the
+    * same tasks write the rows they match as the commit's 'removed'
+    * feed rows ([[TaskFeed]]), published after the claim;
+    * [[Versioned.writeFeedFor]] derives the feed instead when that
+    * cannot be exact (a VARIANT column, no table schema, a claim past
+    * the scanned version + 1). Serializable commit: a concurrent commit
+    * between scan and publish fails this statement loudly unless it is
+    * a disjoint row-level commit; the committed version's record names
     * the TOUCHED files so later row-level commits can rebase over this
     * one when disjoint. Returns the committed version. */
   def deleteViaDv(spark: SparkSession, root: String,
                   pred: org.apache.spark.sql.Column,
                   colMapOpt: Option[String] = None,
-                  schema: Option[StructType] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, collect_list, lit}
+                  schema: Option[StructType] = None,
+                  feedKeys: Seq[String] = Seq.empty): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     import graft.operators.DeletionVectors
     val scanned = Versioned.latestVersion(root).getOrElse(
       throw new IllegalStateException(s"no versions under $root"))
@@ -4198,44 +4252,61 @@ private[graft] object VersionedWriteIo {
     val snap = colMapOpt.filter(_.nonEmpty)
       .fold(snapReader)(m => snapReader.option("colmap", m))
       .load(root)
-    val freshDvDir = Files.createTempDirectory(Paths.get(root), "_staging_dvdelete_")
-    val freshDvStr = freshDvDir.toString
-    // DELETE removes rows where the predicate is TRUE; null-evaluating
-    // rows get no position and stay live (the P10 null-keep rule)
-    snap.filter(coalesce(pred, lit(false)))
-      .select(col(GraftVersionedTable.FileColumn).as("f"),
-        col(GraftVersionedTable.PosColumn).as("p"))
-      .groupBy(col("f")).agg(collect_list(col("p")).as("ps"))
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        rows.foreach { r =>
-          val name = java.nio.file.Paths.get(r.getString(0))
-            .getFileName.toString
-          DeletionVectors.write(
-            java.nio.file.Paths.get(freshDvStr, name + DeletionVectors.Suffix),
-            r.getSeq[Long](1).toArray)
-        }
-      }
-    // stage the fragments in commitDelta's layout and share ITS commit
-    // machinery — one code path owns DV merging, manifests, records,
-    // and the file-level conflict rebase (two concurrent DV deletes on
-    // disjoint files both land; overlap aborts loudly)
+    val colMap = GraftVersionedTable.colMapOf(colMapOpt)
     val staged = Files.createTempDirectory(Paths.get(root), "_staging_dvcommit_")
-    val fragRoot = staged.resolve(FragDir)
-    val stream = Files.list(freshDvDir)
-    val frags = try {
-      import scala.jdk.CollectionConverters._
-      stream.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(DeletionVectors.Suffix))
-        .toList
-    } finally stream.close()
-    frags.foreach { f =>
-      val dataName = DeletionVectors.dataNameOf(f.getFileName.toString)
-      val tgt = fragRoot.resolve(dataName).resolve("delete.dv")
-      Files.createDirectories(tgt.getParent)
-      Files.move(f, tgt)
-    }
-    Versioned.deleteRecursively(freshDvDir)
-    commitDelta(root, staged, scanned, stampValue(None))
+    val stagedStr = staged.toString
+    val feed = if (feedKeys.isEmpty) None
+      else schema.flatMap(TaskFeed.spec(root, _, feedKeys, colMap, scanned, pairs = false))
+    val tasks: Array[(Seq[String], Option[TaskFeed.Part])] =
+      try {
+        // DELETE removes rows where the predicate is TRUE; null-evaluating
+        // rows get no position and stay live (the P10 null-keep rule)
+        val qe = snap.filter(coalesce(pred, lit(false))).select(
+          (Seq(GraftVersionedTable.FileColumn, GraftVersionedTable.PosColumn) ++
+            feed.toSeq.flatMap(_.cols.fieldNames)).map(col): _*).queryExecution
+        org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+            Some("graft-versioned DV DELETE")) {
+          qe.toRdd.mapPartitions { rows =>
+            val ctx = org.apache.spark.TaskContext.get()
+            val name = f"part-${ctx.partitionId}%05d-${ctx.taskAttemptId}-" +
+              java.util.UUID.randomUUID.toString.take(8)
+            val removed = feed.map(new TaskFeed.Writer(_, name + ".parquet"))
+            val positions = scala.collection.mutable.HashMap
+              .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+            var matchedRows = 0L
+            try rows.foreach { r =>
+              positions.getOrElseUpdate(r.getUTF8String(0).toString,
+                scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
+              removed.foreach(_.removed(r, 2))
+              matchedRows += 1
+            } catch { case e: Throwable => removed.foreach(_.abort()); throw e }
+            val frags = positions.toSeq.map { case (path, ps) =>
+              val rel = s"${Paths.get(path).getFileName}/$name.dv"
+              DeletionVectors.write(Paths.get(stagedStr, FragDir, rel), ps.toArray.sorted)
+              rel
+            }
+            Iterator(frags -> removed.map(w => TaskFeed.Part(w.commit(), matchedRows, 0L)))
+          }.collect()
+        }
+      } catch { case e: Throwable =>
+        Versioned.deleteRecursively(staged)
+        feed.foreach(TaskFeed.drop)
+        throw e
+      }
+    // one code path owns DV merging, manifests, records, and the
+    // file-level conflict rebase (two concurrent DV deletes on disjoint
+    // files both land; overlap aborts loudly)
+    keepFragments(staged, tasks.flatMap(_._1).toSet)
+    val committed =
+      try commitDelta(root, staged, scanned, stampValue(None))
+      catch { case e: Throwable => feed.foreach(TaskFeed.drop); throw e }
+    if (feedKeys.nonEmpty)
+      TaskFeed.finish(root, feed, tasks.toSeq.map(_._2), committed) {
+        val s = schema.getOrElse(new StructType())
+        Versioned.writeFeedFor(spark, root, committed, s, feedKeys,
+          s.fieldNames.filterNot(feedKeys.contains).toSeq, colMap)
+      }
+    committed
   }
 
   /** Publish a row-level operation's staged output as the next
@@ -4546,7 +4617,8 @@ private final class FramedVariantRow(types: Array[DataType])
 
 private[sources] class VersionedDataWriter(
     dir: String, fileName: String, schema: StructType,
-    splitIdx: Seq[Int] = Seq.empty)
+    splitIdx: Seq[Int] = Seq.empty,
+    codec: CompressionCodecName = CompressionCodecName.UNCOMPRESSED)
   extends DataWriter[InternalRow] {
 
   private val fileSchema = VersionedDataWriter.fileSchema(schema)
@@ -4577,11 +4649,11 @@ private[sources] class VersionedDataWriter(
   private def open(): Unit = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     path = java.nio.file.Paths.get(dir, currentName)
-    // codec and row-group/page sizes: the parquet-mr builder defaults
+    // row-group/page sizes: the parquet-mr builder defaults
     val conf = new Configuration(VersionedDataWriter.writeDefaults)
     ParquetWriteSupport.setSchema(fileSchema, conf)
     writer = new VersionedDataWriter.Builder(new HPath(path.toString))
-      .withConf(conf).build()
+      .withConf(conf).withCompressionCodec(codec).build()
   }
 
   private[sources] def forceCreateAndClose(): Unit = { open(); writer.close() }

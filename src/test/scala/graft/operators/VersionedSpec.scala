@@ -138,6 +138,13 @@ class VersionedSpec extends AnyFunSuite with SparkSpec {
     Versioned.writeNext(spark.range(0, 10).toDF("id"), root) // torn write
     val err = intercept[IllegalStateException](Versioned.compact(spark, root))
     assert(err.getMessage.contains("time-travel-enabled"))
+    // the refusal names remedies that exist: roll back, or commit a
+    // stamped version (a published version cannot be stamped later)
+    assert(err.getMessage.contains("roll back the torn version"), err.getMessage)
+    assert(err.getMessage.contains("commitTs"), err.getMessage)
+    assert(!err.getMessage.contains("re-stamp"), err.getMessage)
+    Versioned.writeNext(spark.range(0, 10).toDF("id"), root, Some(2000L))
+    assert(Versioned.compact(spark, root) === 3L)
     // on a never-stamped root compaction stays legal (time travel unused)
     val plain = tmpRoot()
     Versioned.writeNext(spark.range(0, 10).toDF("id").repartition(4), plain)

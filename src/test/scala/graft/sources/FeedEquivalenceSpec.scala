@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,6 +64,11 @@ class FeedEquivalenceSpec extends AnyFunSuite with SparkSpec {
     val feed = spark.read.parquet(Versioned.feedDir(root, version))
       .select(outCols.map(c => stored(c).as(c)): _*)
     assert(rows(feed) === rows(expected), s"feed of v=$version")
+    // a published, dropped or fallen-back feed leaves no feed staging
+    val stream = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+    val staging = try stream.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_staging_feed_")).toList finally stream.close()
+    assert(staging === Nil, s"feed staging left under $root")
   }
 
   private def sqlRead(t: String)(v: Long): DataFrame =

@@ -23,6 +23,46 @@ import graft.operators.Versioned
   */
 class FeedHermeticitySpec extends AnyFunSuite with SparkSpec {
 
+  test("a reader never sees a feed dir without its manifest") {
+    val warehouse = Files.createTempDirectory("graft_feed_pub_").toString
+    spark.conf.set("spark.sql.catalog.fpub", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.fpub.warehouse", warehouse)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS fpub.t")
+    val t = "fpub.t.tab"
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v BIGINT) USING `graft-versioned` " +
+      "TBLPROPERTIES ('changeFeedKeys'='id', 'deletionVectors'='true')")
+    val changes = Paths.get(warehouse, "t", "tab", "_changes")
+    // a reader polling the feed dirs while commits publish them
+    val torn = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var stop = false
+    val watcher = new Thread(() => {
+      import scala.jdk.CollectionConverters._
+      while (!stop) {
+        val dirs =
+          try {
+            val s = Files.list(changes)
+            try s.iterator().asScala.toList finally s.close()
+          } catch { case _: java.io.IOException => Nil }
+        dirs.filter(d => d.getFileName.toString.startsWith("v=") &&
+            !Files.exists(d.resolve("_graft_files")))
+          .foreach(d => torn.add(d.getFileName.toString))
+      }
+    })
+    watcher.start()
+    try {
+      spark.sql(s"INSERT INTO $t SELECT id, id * 10 FROM range(0, 40)")   // v0
+      spark.sql(s"""MERGE INTO $t t USING (SELECT id, -id AS v FROM range(30, 50)) s
+        ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v
+        WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""")      // v1
+      spark.sql(s"DELETE FROM $t WHERE id < 5")                           // v2
+      spark.sql(s"UPDATE $t SET id = id + 100 WHERE id < 10")             // v3
+      spark.sql(s"DELETE FROM $t WHERE id % 7 = 1")                       // v4
+    } finally { stop = true; watcher.join() }
+    val seen = torn.toArray.map(_.toString).distinct.toSeq
+    assert(seen === Seq.empty, "feed dirs seen without a manifest")
+    assert(Versioned.feedVersions(changes.getParent.toString) === (0L to 4L))
+  }
+
   test("feed dirs are manifest-resolved: planted strays never replay a phantom change") {
     val root = Files.createTempDirectory("graft_feed_herm_").toString
     import spark.implicits._
