@@ -167,7 +167,7 @@ private[sources] object TaskFeed {
     val nk = spec.keys.size
     val types = spec.cols.fields.map(_.dataType)
     val n = types.length
-    // the key as a value-equal sequence; null when a key column is
+    // the key as a value-equal sequence; null when a key column is null
     def keyOf(r: InternalRow): AnyRef = {
       val k = new Array[Any](nk)
       var i = 0

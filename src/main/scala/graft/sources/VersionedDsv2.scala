@@ -4226,8 +4226,8 @@ private[graft] object VersionedWriteIo {
     * same tasks write the rows they match as the commit's 'removed'
     * feed rows ([[TaskFeed]]), published after the claim;
     * [[Versioned.writeFeedFor]] derives the feed instead when that
-    * cannot be exact (a VARIANT column, no table schema, a claim past
-    * the scanned version + 1). Serializable commit: a concurrent commit
+    * cannot be exact (a VARIANT column, a claim past the scanned
+    * version + 1); a feed needs the table `schema`. Serializable commit: a concurrent commit
     * between scan and publish fails this statement loudly unless it is
     * a disjoint row-level commit; the committed version's record names
     * the TOUCHED files so later row-level commits can rebase over this
@@ -4239,6 +4239,8 @@ private[graft] object VersionedWriteIo {
                   feedKeys: Seq[String] = Seq.empty): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     import graft.operators.DeletionVectors
+    require(feedKeys.isEmpty || schema.isDefined,
+      "graft-versioned: a DV DELETE that writes a change feed needs the table schema")
     val scanned = Versioned.latestVersion(root).getOrElse(
       throw new IllegalStateException(s"no versions under $root"))
     // a table's schema types the scan, so nothing is inferred; a bare
@@ -4302,9 +4304,8 @@ private[graft] object VersionedWriteIo {
       catch { case e: Throwable => feed.foreach(TaskFeed.drop); throw e }
     if (feedKeys.nonEmpty)
       TaskFeed.finish(root, feed, tasks.toSeq.map(_._2), committed) {
-        val s = schema.getOrElse(new StructType())
-        Versioned.writeFeedFor(spark, root, committed, s, feedKeys,
-          s.fieldNames.filterNot(feedKeys.contains).toSeq, colMap)
+        Versioned.writeFeedFor(spark, root, committed, schema.get, feedKeys,
+          schema.get.fieldNames.filterNot(feedKeys.contains).toSeq, colMap)
       }
     committed
   }
